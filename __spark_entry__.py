@@ -73,13 +73,10 @@ def _index_paths(spark: SparkSession, sf_dir: str) -> IndexPaths:
 
 
 def _engine(spark: SparkSession, sf_dir: str, **qkw) -> SearchEngine:
-    # fused_stats=False: idf must be computed by glibc ln() (driver-side
-    # Python) so DuckDB's ln() reproduces it bit-for-bit (see module doc).
     # driver_score_max_postings=0: the gate must exercise the DISTRIBUTED
     # scoring plan, not the hybrid driver serving path.
     return SearchEngine(spark, _index_paths(spark, sf_dir).root,
-                        QueryConfig(fused_stats=False,
-                                    driver_score_max_postings=0, **qkw))
+                        QueryConfig(driver_score_max_postings=0, **qkw))
 
 
 _BIG = 1_000_000  # fetch all matches, then re-rank by rounded score

@@ -186,10 +186,6 @@ class QueryConfig:
     size_wildcard: int = 100   # search.py:265
     size_fuzzy: int = 50       # search.py:309,335
     track_total_hits: int = 10_000  # ES 7 default cap, never overridden by search.py
-    # compute idf inside the Spark plan (1 job/query) instead of a separate
-    # driver-side term_stats lookup (2 jobs). JVM ln() may differ from
-    # glibc by ≤1 ulp — the DuckDB oracle gate disables this for bit-parity.
-    fused_stats: bool = True
     # hybrid serving path: when the query's term-pruned postings fit under
     # this budget, fetch them in ONE incremental job and score on the driver
     # (what a search tier does for pruned term sets); a query that trips the
@@ -219,8 +215,9 @@ class QueryConfig:
     fuzzy_multiword_minimum_should_match: str = "60%"  # search.py:295
     # block-max WAND scorer (must be result-identical). False / True /
     # "auto" — auto picks WAND per query when the largest clause df (O(1)
-    # from the hot-term cache) reaches wand_auto_min_df, else the fused
-    # exhaustive scorer (r4, VERDICT r3 next #2).
+    # from the hot-term cache) reaches wand_auto_min_df, else the
+    # distributed scorer (r4, VERDICT r3 next #2). Match queries only, and
+    # only past the driver budget: an under-budget query is driver-served.
     use_wand: Union[bool, str] = False
     # The crossover df is a MACHINE property (Python bucket-decode overhead
     # vs JVM codegen scan speed). None (default) self-calibrates once per

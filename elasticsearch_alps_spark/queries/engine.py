@@ -4,9 +4,15 @@ Each query type of ``/root/reference/scripts/search/search.py:141-418`` becomes
 a small declarative plan over the postings tables:
 
     scan postings (term IN (...) pushed into parquet; term-sorted layout →
-    file/row-group skipping) → broadcast-join a tiny (term, clause, weight)
-    frame → per-row BM25 contribution (whole-stage-codegen SQL expression) →
-    groupBy(doc_id) partial-agg → top-k (TakeOrderedAndProject)
+    file/row-group skipping) → literal clause frame (CASE WHEN term → weight,
+    or an ``inline`` fan-out when a term serves several clauses) → per-row
+    BM25 contribution (whole-stage-codegen SQL expression) → groupBy(doc_id)
+    partial-agg → top-k (TakeOrderedAndProject)
+
+Every clause weight is computed once, on the driver, as multiplier ·
+``SearchEngine.idf(df)`` (glibc ``ln`` — the value the DuckDB oracle
+reproduces). The driver fold, the distributed plan and WAND all consume those
+same doubles, so the route a query takes never changes its scores.
 
 Scoring is Lucene 8.11 BM25 (ES 7.17 default): no (k1+1) factor,
 idf = ln(1 + (N−df+0.5)/(df+0.5)), dl SmallFloat-quantized, *global* collection
@@ -37,6 +43,17 @@ from elasticsearch_alps_spark.oracle import phrase_freq
 from elasticsearch_alps_spark.queries.highlight import format_snippets
 
 Clause = Tuple[int, str, float]  # (clause_id, term, weight)
+
+
+def _sql_str(s: str) -> str:
+    """Spark SQL string literal. Backslash is Spark's escape character, so it
+    is doubled BEFORE the quote is: an unescaped ``c:\\path`` would match the
+    term ``c:path``, and a trailing backslash would not parse."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
+
+
+def _sql_in(terms: Sequence[str]) -> str:
+    return ", ".join(_sql_str(t) for t in terms)
 
 
 def _analyzer_from_name(name: str) -> AnalyzerConfig:
@@ -96,6 +113,10 @@ class SearchEngine:
         # and the dict must exist before any such thread starts
         self._fuzzy_vocab_cache: Dict[str, tuple] = {}
         self._fuzzy_vocab_lock = threading.Lock()
+        # driver postings cache per source field (None = gated off); the lock
+        # makes concurrent first queries share ONE full-postings fetch
+        self._dcache_store: Dict[str, Optional[dict]] = {}
+        self._dcache_lock = threading.Lock()
 
     def _set_total(self, df: Optional[DataFrame] = None,
                    count: Optional[int] = None, obs=None) -> None:
@@ -164,7 +185,7 @@ class SearchEngine:
         if ceiling == -1:
             # no cache yet: from the SECOND lookup on this field onward,
             # build the top-K dictionary so repeated serving stops paying a
-            # pruned-scan job per query (r8 — the fused scorer now takes df
+            # pruned-scan job per query (r8 — the distributed scorer takes df
             # driver-side). The first lookup stays a tiny pruned scan, so a
             # single-query engine never trades it for a top-K collect.
             cnt = getattr(self, "_ts_lookups", None)
@@ -220,8 +241,8 @@ class SearchEngine:
     # ~300k distinct terms. At 100-TB vocabularies the dict simply holds
     # the hottest 400k terms and routing behaves as before.
     _HOT_DF_K = 400_000
-    # which scorer served the last match-family query: "driver" | "fused" |
-    # "exhaustive" | "wand" (diagnostics + use_wand="auto" tests)
+    # which scorer served the last clause query: "driver" | "distributed" |
+    # "wand" (diagnostics + use_wand="auto" tests)
     last_scorer: Optional[str] = None
 
     def _postings_view(self, field: str) -> str:
@@ -261,22 +282,25 @@ class SearchEngine:
         full fetch (term, doc_id, freq, dl, positions) sorted into contiguous
         per-term slices, so every subsequent under-budget driver-path query
         assembles its working set with zero Spark jobs. Built lazily on the
-        first driver-path query; returns None (permanently, per field) when
-        the engine is uncached, the budget is 0, the vocabulary overflows the
-        hot-dict cap (total row count then unknown — the 100-TB regime), or
-        the exact total exceeds driver_postings_cache_max_rows."""
-        budget = self.qcfg.driver_postings_cache_max_rows
-        if not self._cache or budget <= 0:
+        first driver-path query, under a double-checked lock; None
+        (permanently, per field) when the engine is uncached, the budget is
+        0, the vocabulary overflows the hot-dict cap (total row count then
+        unknown — the 100-TB regime), or the exact total exceeds
+        driver_postings_cache_max_rows."""
+        if not self._cache or self.qcfg.driver_postings_cache_max_rows <= 0:
             return None
-        store = getattr(self, "_dcache_store", None)
-        if store is None:
-            store = self._dcache_store = {}
         src = self._field_src.get(field, field)
-        if src in store:
-            return store[src]
+        store = self._dcache_store
+        if src not in store:
+            with self._dcache_lock:
+                if src not in store:
+                    store[src] = self._dcache_build(field)
+        return store[src]
+
+    def _dcache_build(self, field: str) -> Optional[dict]:
         hot, ceiling = self._hot_dfs(field)
-        if ceiling != 0 or sum(hot.values()) > budget:
-            store[src] = None
+        if (ceiling != 0 or sum(hot.values())
+                > self.qcfg.driver_postings_cache_max_rows):
             return None
         # overlap the fuzzy vocab-matrix build (~0.5 s of pure numpy over
         # the same hot dict; it was the whole first-fuzzy-query latency
@@ -293,7 +317,7 @@ class SearchEngine:
         order = np.argsort(codes, kind="stable")
         starts = np.searchsorted(codes[order], np.arange(len(uniques)))
         ends = np.append(starts[1:], len(codes))
-        store[src] = {
+        return {
             "slices": {t: (int(s), int(e))
                        for t, s, e in zip(uniques, starts, ends)},
             "doc_id": pdf["doc_id"].to_numpy()[order],
@@ -301,7 +325,6 @@ class SearchEngine:
             "dl": pdf["dl"].to_numpy()[order],
             "positions": pdf["positions"].to_numpy()[order],
         }
-        return store[src]
 
     @staticmethod
     def _dcache_frame(cache: dict, terms, with_positions: bool) -> pd.DataFrame:
@@ -328,65 +351,41 @@ class SearchEngine:
             data["positions"] = cache["positions"][idx]
         return pd.DataFrame(data)
 
-    def _score_clauses_driver(self, field: str,
-                              clause_mults: List[Tuple[int, str, float]],
-                              required: int, size: int) -> Optional[DataFrame]:
-        """Hybrid serving path: ONE incremental Spark fetch of the term-pruned
-        postings (positions column never read), then BM25 + top-k in plain
-        Python on the driver — the same closed-form the oracle uses, so
-        scores are bit-identical to it. Returns None when the postings exceed
-        qcfg.driver_score_max_postings (caller falls back to the distributed
-        plan — the path a 10^9-df hot term takes at scale)."""
-        import numpy as np
+    def _driver_working_set(self, field: str,
+                            terms: List[str]) -> Optional[pd.DataFrame]:
+        """The query's term-pruned postings (term, doc_id, freq, dl) on the
+        driver — a slice of the driver postings cache, else ONE incremental
+        Spark fetch (positions never read) — or None when the estimated Σdf
+        exceeds qcfg.driver_score_max_postings (the caller then takes the
+        distributed plan — the path a 10^9-df hot term takes at scale)."""
         budget = self.qcfg.driver_score_max_postings
-        if budget <= 0 or not clause_mults:
+        if budget <= 0:
             return None
-        terms = list({t for _, t, _ in clause_mults})
         # O(1) budget check: upper-bound Σdf from the cached hot-term df dict
         # (any term absent from the top-k dict has df ≤ the k-th df) — no
         # Spark job spent deciding the path
         hot, ceiling = self._hot_dfs(field)
-        est = sum(hot.get(t, ceiling) for t in terms)
-        if est > budget:
+        if sum(hot.get(t, ceiling) for t in terms) > budget:
             return None
         cache = self._driver_cache(field)
         if cache is not None:
-            pdf = self._dcache_frame(cache, terms, with_positions=False)
-        else:
-            # one SQL string (single py4j round trip, vs ~100 ms of
-            # Column-API chatter) + Arrow transfer
-            tl = ", ".join("'" + t.replace("'", "''") + "'" for t in terms)
-            pdf = self.spark.sql(
-                f"SELECT term, doc_id, freq, dl FROM "
-                f"{self._postings_view(field)} "
-                f"WHERE term IN ({tl})").toPandas()
-        self.last_scorer = "driver"
-        if not len(pdf):
-            return self._empty_hits()
-        n, _ = self._fstat(field)
-        # df is exact: the fetch was complete (budget not tripped)
-        df_by_term = pdf["term"].value_counts()
-        clause_terms: Dict[int, set] = {}
-        jmap = self._canon_jidx(clause_mults)
-        wrows = []
-        for cid, t, mult in clause_mults:
-            dfv = int(df_by_term.get(t, 0))
-            idf = math.log(1.0 + (n - dfv + 0.5) / (dfv + 0.5))
-            wrows.append((t, mult * idf, jmap[(cid, t)]))
-            clause_terms.setdefault(cid, set()).add(t)
-        return self._driver_score_pdf(field, pdf, wrows, clause_terms,
-                                      required, size)
+            return self._dcache_frame(cache, terms, with_positions=False)
+        # one SQL string (single py4j round trip, vs ~100 ms of Column-API
+        # chatter) + Arrow transfer
+        return self.spark.sql(
+            f"SELECT term, doc_id, freq, dl FROM {self._postings_view(field)} "
+            f"WHERE term IN ({_sql_in(terms)})").toPandas()
 
-    def _driver_score_pdf(self, field: str, pdf: pd.DataFrame, wrows,
-                          clause_terms: Dict[int, set], required: int,
+    def _driver_score_pdf(self, field: str, pdf: pd.DataFrame,
+                          clauses: List[Clause], required: int,
                           size: int) -> DataFrame:
-        """Vectorized driver-side BM25 fold over a fetched postings frame —
-        the shared tail of the match-family and WAND driver serving paths
-        (``wrows`` = (term, final weight, jidx) per clause)."""
-        import numpy as np
+        """Vectorized driver-side BM25 fold over the query's postings — the
+        same closed form the oracle uses, over the same clause weights the
+        distributed plan and WAND take as literals."""
         _, avgdl = self._fstat(field)
         k1, b = self.k1, self.b
         one_minus_b = 1.0 - b
+        jmap = self._canon_jidx(clauses)
         # ADVICE r6 #4: one contribution element per (posting row, clause) —
         # the exact multiset the distributed _grouped_score folds. Collapsing
         # duplicate-term clause weights into one (w1+w2)·tf element would
@@ -395,9 +394,11 @@ class SearchEngine:
         # same term; the merge below keeps the paths bit-identical for ANY
         # weights. (Duplicate terms across clauses are rare, so the expanded
         # frame is the same size as pdf in the common case.)
-        pdf = pdf.merge(pd.DataFrame(wrows, columns=["term", "w", "jidx"]),
+        pdf = pdf.merge(pd.DataFrame([(t, w, jmap[(cid, t)])
+                                      for cid, t, w in clauses],
+                                     columns=["term", "w", "jidx"]),
                         on="term", how="inner")
-        n_elems = len(wrows)
+        n_elems = len(clauses)
         w = pdf["w"].to_numpy(dtype=np.float64)
         freq = pdf["freq"].to_numpy(dtype=np.float64)
         if self._norms_enabled(field):
@@ -413,7 +414,7 @@ class SearchEngine:
         # slot, so per-doc addition order is the row order restricted to that
         # doc. Missing jidx slots simply don't add (the distributed fold adds
         # an exact + 0.0 there), so scores are bit-identical across index
-        # layouts AND to the fused/exhaustive/WAND folds. Above DET_SUM_MAX
+        # layouts AND to the distributed/WAND folds. Above DET_SUM_MAX
         # pairs, the same ascending-by-value fallback as _grouped_score.
         if n_elems > 1:
             if n_elems <= self.DET_SUM_MAX:
@@ -426,9 +427,12 @@ class SearchEngine:
         scores = np.zeros(len(uniq), dtype=np.float64)
         np.add.at(scores, inv, contrib)
         if required > 1:
+            clause_terms: Dict[int, set] = {}
+            for cid, t, _ in clauses:
+                clause_terms.setdefault(cid, set()).add(t)
             nmatch = np.zeros(len(uniq), dtype=np.int32)
             term_ser = pd.Series(terms_arr)
-            for cid, cterms in clause_terms.items():
+            for cterms in clause_terms.values():
                 mask = term_ser.isin(cterms).to_numpy()
                 hit = np.zeros(len(uniq), dtype=bool)
                 hit[inv[mask]] = True
@@ -444,102 +448,12 @@ class SearchEngine:
         Arrow fast path — createDataFrame from a typed pandas frame is ~7×
         cheaper than the pickled list+DDL route (38 ms vs 267 ms measured
         for 50 rows), which was the DOMINANT cost of a warm hybrid query."""
-        import numpy as np
         pdf = pd.DataFrame({
             "doc_id": np.asarray(doc_ids, dtype=np.int64),
             "score": np.asarray(scores, dtype=np.float64)})
         if not len(pdf):
             return self._empty_hits()
         return self.spark.createDataFrame(pdf)
-
-    def _score_clauses_fused(self, field: str, clause_mults: List[Tuple[int, str, float]],
-                             required: int, size: int) -> DataFrame:
-        """Distributed scorer with idf computed INSIDE the plan (JVM ln — the
-        provenance the r7 bit-exactness trail pins; a driver-side math.log
-        would risk 1-ulp divergence vs the fused history).
-
-        r8: when every clause carries a distinct term (the whole match
-        family), the clause frame collapses to literal CASE WHEN mappings
-        term → (weight, jidx) with the df values fetched driver-side
-        (_df_lookup: hot-dict hit or one tiny pruned term_stats scan) — the
-        plan is then a single pruned postings scan + project + aggregate,
-        with NO broadcast exchange and NO term_stats subtree. Measured on
-        the bench mixed section: 4 Spark jobs → 2, 0.57–0.63 s → 0.18–0.22 s
-        per query, scores bit-identical (the idf expression tree is
-        unchanged — same JVM StrictMath.log — only its df input moves from a
-        scanned column to a literal). Duplicate terms across clauses (bool
-        queries can produce them) keep the broadcast-join form, where each
-        posting row legitimately fans out to several clause rows."""
-        if not clause_mults:
-            return self._empty_hits()
-        self.last_scorer = "fused"
-        terms = list({t for _, t, _ in clause_mults})
-        n, _ = self._fstat(field)
-        jmap = self._canon_jidx(clause_mults)
-
-        def idf_of(df_col):
-            return F.log(F.lit(1.0) + (F.lit(float(n)) - df_col + F.lit(0.5))
-                         / (df_col + F.lit(0.5)))
-
-        if (len(terms) == len(clause_mults)
-                and not getattr(self, "_force_join_clause_frame", False)):
-            # one clause per term: literal term→(weight, jidx[, clause_id])
-            # projection instead of a broadcast join (≤ DET_SUM_MAX branches
-            # on the conditional-sum path; bool fan-outs above that are rare
-            # and still bounded by the query's clause count).
-            # r8 batch 6: the three CASE chains are built as ONE SQL string
-            # each via F.expr instead of chained F.when Column calls —
-            # measured ~40-50 ms of py4j round trips PER CLAUSE on the
-            # Column path (plan construction 0.14-0.27 s of a ~0.5 s fused
-            # query). The SQL parses to the IDENTICAL expression tree
-            # (CaseWhen with no else; D-suffixed double literals; ln ==
-            # F.log), so Catalyst's constant folding produces bit-identical
-            # weights — every fused-path oracle gate re-verified green.
-            dfs = self._df_lookup(field, terms)
-
-            def lit_s(t: str) -> str:
-                # backslash BEFORE quote: Spark SQL treats \ as an escape
-                return "'" + t.replace("\\", "\\\\").replace("'", "''") + "'"
-
-            w_arms, j_arms, c_arms = [], [], []
-            nf = float(n)
-            for cid, t, mult in clause_mults:
-                cond = f"term = {lit_s(t)}"
-                dff = float(dfs.get(t, 0))
-                w = (f"{float(mult)!r}D * ln({1.0!r}D + ({nf!r}D - {dff!r}D"
-                     f" + {0.5!r}D) / ({dff!r}D + {0.5!r}D))")
-                w_arms.append(f"WHEN {cond} THEN {w}")
-                j_arms.append(f"WHEN {cond} THEN {jmap[(cid, t)]}")
-                if required > 1:
-                    c_arms.append(f"WHEN {cond} THEN {cid}")
-            j = (self._postings[field]
-                 .filter(F.col("term").isin(terms))
-                 .withColumn("jidx", F.expr("CASE " + " ".join(j_arms) + " END"))
-                 .withColumn("s", F.expr("CASE " + " ".join(w_arms) + " END")
-                             * self._tf_norm_col(field)))
-            if required > 1:
-                j = j.withColumn(
-                    "clause_id", F.expr("CASE " + " ".join(c_arms) + " END"))
-        else:
-            cdf = self.spark.createDataFrame(
-                [(cid, t, mult, jmap[(cid, t)]) for cid, t, mult in clause_mults],
-                "clause_id int, term string, mult double, jidx int")
-            wdf = (self._term_stats[field]
-                   .filter(F.col("term").isin(terms)).select("term", "df")
-                   .join(F.broadcast(cdf), "term")
-                   .select("term", "clause_id", "jidx",
-                           (F.col("mult")
-                            * idf_of(F.col("df").cast("double"))).alias("weight")))
-            j = (self._postings[field]
-                 .filter(F.col("term").isin(terms))
-                 .join(F.broadcast(wdf), "term")
-                 .withColumn("s", F.col("weight") * self._tf_norm_col(field)))
-        agg = self._grouped_score(j, len(clause_mults), required > 1)
-        if required > 1:
-            agg = agg.filter(F.col("nmatch") >= required)
-        agg, obs = self._observe_total(agg)
-        return (agg.select("doc_id", "score")
-                   .orderBy(F.desc("score"), F.asc("doc_id")).limit(size))
 
     # (clause, term) pairs above which the clause-order fold falls back to
     # the r6 ascending-value collect_list fold: the conditional-sum
@@ -617,22 +531,86 @@ class SearchEngine:
         self._set_total(df=matches, obs=obs)
         return observed, obs
 
+    def _score_query(self, field: str, clause_mults: List[Clause],
+                     required: int, size: int, wand: bool = False,
+                     dfs: Optional[Dict[str, int]] = None) -> DataFrame:
+        """The one route every clause query (match, term, fuzzy, bool) takes.
+        ``clause_mults`` are (clause_id, term, multiplier); the weight of each
+        is multiplier · idf(df), computed here once. Order: resolve WAND
+        (``wand`` marks the match family; its ValueErrors fire first), then
+        the driver working set under driver_score_max_postings, then WAND or
+        the distributed scorer. ``dfs`` spares the df lookup when the caller
+        already holds them (fuzzy expansions carry their df)."""
+        if not clause_mults:
+            return self._empty_hits()
+        terms = list(dict.fromkeys(t for _, t, _ in clause_mults))
+        use_wand = wand and self._resolve_use_wand(field, terms)
+        pdf = self._driver_working_set(field, terms)
+        if pdf is not None:
+            self.last_scorer = "driver"
+            if not len(pdf):
+                return self._empty_hits()
+            # the working set is complete (under budget): its per-term row
+            # counts ARE the df
+            clauses = self._clause_weights(field, clause_mults,
+                                           pdf["term"].value_counts())
+            return self._driver_score_pdf(field, pdf, clauses, required, size)
+        self.last_scorer = "wand" if use_wand else "distributed"
+        if dfs is None:
+            dfs = self._df_lookup(field, terms)
+        if not any(dfs.get(t, 0) for t in terms):
+            return self._empty_hits()
+        clauses = self._clause_weights(field, clause_mults, dfs)
+        if use_wand:
+            return self._wand(field, clauses, size, required)
+        return self._score_clauses(field, clauses, required, size)
+
+    def _clause_weights(self, field: str, clause_mults: List[Clause],
+                        dfs) -> List[Clause]:
+        """(clause_id, term, multiplier · idf(df)) — the only place a clause
+        weight is computed, so every scorer folds the same doubles."""
+        return [(cid, t, mult * self.idf(field, int(dfs.get(t, 0))))
+                for cid, t, mult in clause_mults]
+
     def _score_clauses(self, field: str, clauses: List[Clause],
                        required: int, size: int) -> DataFrame:
-        """Disjunctive scoring: per-doc score = Σ weight·tf_norm over matched
-        clause terms; keep docs matching ≥ ``required`` distinct clauses."""
+        """Distributed scorer: per-doc score = Σ weight·tf_norm over matched
+        clause terms; keep docs matching ≥ ``required`` distinct clauses.
+
+        The clause frame is SQL literals over one pruned postings scan — no
+        join, no createDataFrame. With one clause per term (the whole match
+        family) it is three CASE WHEN columns term → (weight, jidx,
+        clause_id). A term serving several clauses (bool "def", overlapping
+        multi-word fuzzy expansions) fans each posting row out through
+        ``inline(CASE WHEN term = … THEN array(named_struct(…), …) END)``,
+        which Catalyst folds into one Generate over the scan. The CASE form
+        stays for the common case: on a 6M-row, 3-term probe (local[4]) the
+        inline form ran 1.42–1.62 s against 1.36–1.43 s, scores identical."""
         if not clauses:
             return self._empty_hits()
-        self.last_scorer = "exhaustive"
-        terms = list({t for _, t, _ in clauses})
         jmap = self._canon_jidx(clauses)
-        cdf = self.spark.createDataFrame(
-            [(cid, t, w, jmap[(cid, t)]) for cid, t, w in clauses],
-            "clause_id int, term string, weight double, jidx int")
-        j = (self._postings[field]
-             .filter(F.col("term").isin(terms))  # pushed into the parquet scan
-             .join(F.broadcast(cdf), "term")
-             .withColumn("s", F.col("weight") * self._tf_norm_col(field)))
+        by_term: Dict[str, list] = {}
+        for cid, t, w in clauses:
+            by_term.setdefault(t, []).append((jmap[(cid, t)], f"{float(w)!r}D",
+                                             cid))
+
+        def case(values) -> str:
+            return "CASE " + " ".join(f"WHEN term = {_sql_str(t)} THEN {v}"
+                                      for t, v in values) + " END"
+
+        post = self._postings[field].filter(F.col("term").isin(list(by_term)))
+        if len(by_term) == len(clauses):  # one (jidx, w, clause_id) per term
+            frame = [F.expr(case((t, rows[0][k]) for t, rows in by_term.items()))
+                     .alias(name) for k, name in enumerate(
+                         ("jidx", "w", "clause_id"))]
+        else:
+            frame = [F.expr("inline(" + case(
+                (t, "array(" + ", ".join(
+                    f"named_struct('jidx', {j}, 'w', {w}, 'clause_id', {c})"
+                    for j, w, c in rows) + ")")
+                for t, rows in by_term.items()) + ")")]
+        j = (post.select("doc_id", "freq", "dl", *frame)
+             .withColumn("s", F.col("w") * self._tf_norm_col(field)))
         agg = self._grouped_score(j, len(clauses), required > 1)
         if required > 1:
             agg = agg.filter(F.col("nmatch") >= required)
@@ -666,29 +644,18 @@ class SearchEngine:
             required = max(1, int(math.floor(minimum_should_match / 100.0 * len(mult))))
         else:
             required = 1
-        clause_mults = [(i, t, float(k)) for i, (t, k) in enumerate(mult.items())]
-        use_wand = self._resolve_use_wand(field, list(mult))
-        if not use_wand:
-            hits = self._score_clauses_driver(field, clause_mults, required, size)
-            if hits is not None:
-                return hits
-        if self.qcfg.fused_stats and not use_wand:
-            return self._score_clauses_fused(field, clause_mults, required, size)
-        dfs = self._df_lookup(field, list(mult))
-        clauses = [(i, t, k * self.idf(field, dfs.get(t, 0)))
-                   for i, (t, k) in enumerate(mult.items())]
-        if use_wand:
-            # match-query clauses are one-per-distinct-term, so the WAND
-            # conjunctive/msm extension applies to AND and msm too (r2)
-            return self._wand(field, clauses, size, required)
-        return self._score_clauses(field, clauses, required, size)
+        # match-query clauses are one-per-distinct-term, so the WAND
+        # conjunctive/msm extension applies to AND and msm too (r2)
+        return self._score_query(
+            field, [(i, t, float(k)) for i, (t, k) in enumerate(mult.items())],
+            required, size, wand=True)
 
     def _resolve_use_wand(self, field: str, terms: List[str]) -> bool:
         """``use_wand="auto"`` (r4, VERDICT r3 next #2): pick WAND per query
         when the LARGEST clause df reaches qcfg.wand_auto_min_df — pruning
         pays exactly where posting lists get long (measured crossover,
         BENCH/BASELINE.md r3: df≈6×10⁴ loses, ≈10⁵ parity, ≈10⁶ wins) — else
-        the fused exhaustive scorer. The decision is O(1) from the hot-term
+        the distributed scorer. The decision is O(1) from the hot-term
         cache except in one regime — every query term outside the top-K dict
         while the K-th df itself clears the threshold — where a pruned
         term_stats lookup resolves it exactly (ADVICE r4: assuming the
@@ -743,10 +710,9 @@ class SearchEngine:
     def _wand(self, field: str, clauses: List[Clause], size: int,
               required: int = 1) -> DataFrame:
         """Block-max WAND over the packed blocks (M6) — result-identical to
-        the exhaustive scorer (pruning is lossless; asserted in tests)."""
+        the distributed scorer (pruning is lossless; asserted in tests)."""
         from elasticsearch_alps_spark import fsio
         from elasticsearch_alps_spark.queries.wand import wand_topk
-        self.last_scorer = "wand"
         _, avgdl = self._fstat(field)
         src = self._field_src.get(field, field)
         cached = getattr(self, "_packed_cache", None)
@@ -787,55 +753,11 @@ class SearchEngine:
         jmap = self._canon_jidx(clauses)
         term_order = ({t: jmap[(cid, t)] for cid, t, _ in clauses}
                       if len(clauses) <= self.DET_SUM_MAX else None)
-        hits = self._wand_driver(field, clauses, terms, size, required)
-        if hits is not None:
-            return hits
         return wand_topk(self.spark, self.paths.packed(src),
                          self.paths.field_dir(src), clauses, size,
                          self.k1, self.b, avgdl, required,
                          packed_df=packed_df, n_buckets=n_buckets,
                          term_order=term_order)
-
-    def _wand_driver(self, field: str, clauses, terms, size: int,
-                     required: int) -> Optional[DataFrame]:
-        """Hybrid serving path for the WAND route (r8): when the query's
-        estimated Σdf fits the driver budget (the same O(1) hot-cache check
-        the match-family driver scorer makes), serve it with ONE term-pruned
-        postings fetch + the shared vectorized driver fold instead of the
-        distributed packed-block plan — whose shuffle + one-python-task-per-
-        bucket costs ~1 s of fixed overhead at small working sets (measured:
-        0.14 s to scan+collect the pruned data vs 1.1 s end-to-end). Under
-        the budget, pruning buys nothing: the whole working set transfers in
-        one job and the numpy fold beats a per-doc Python WAND walk (the
-        same machine-property crossover queries/calibrate.py measures).
-        Results are bit-identical — the r7 canonical (clause_id, term)
-        fold order makes the driver and WAND folds agree bit-for-bit
-        (cross-path identity is pytest-asserted). An over-budget query (the
-        100-TB hot-term regime) returns None and takes the distributed
-        block-max WAND exactly as before."""
-        budget = self.qcfg.driver_score_max_postings
-        if budget <= 0:
-            return None
-        hot, ceiling = self._hot_dfs(field)
-        if sum(hot.get(t, ceiling) for t in terms) > budget:
-            return None
-        cache = self._driver_cache(field)
-        if cache is not None:
-            pdf = self._dcache_frame(cache, terms, with_positions=False)
-        else:
-            tl = ", ".join("'" + t.replace("'", "''") + "'" for t in terms)
-            pdf = self.spark.sql(
-                f"SELECT term, doc_id, freq, dl FROM "
-                f"{self._postings_view(field)} "
-                f"WHERE term IN ({tl})").toPandas()
-        if not len(pdf):
-            # keep the recount plan set by _wand (count == 0 either way)
-            return self._empty_hits()
-        jmap = self._canon_jidx(clauses)
-        wrows = [(t, w, jmap[(cid, t)]) for cid, t, w in clauses]
-        clause_terms = {cid: {t} for cid, t, _ in clauses}
-        return self._driver_score_pdf(field, pdf, wrows, clause_terms,
-                                      required, size)
 
     def _phrase_driver(self, field: str, terms, offsets, uniq, dfs,
                        idf_sum: float, slop: int,
@@ -849,7 +771,7 @@ class SearchEngine:
         if budget <= 0 or sum(dfs[t] for t in uniq) > budget:
             return None
         from elasticsearch_alps_spark.indexing.postings import decode_positions
-        tl = ", ".join("'" + t.replace("'", "''") + "'" for t in uniq)
+        tl = _sql_in(uniq)
         n_terms = len(uniq)
         view = self._postings_view(field)
         min_df = min(dfs[t] for t in uniq)
@@ -937,7 +859,6 @@ class SearchEngine:
         freq > 0. Equivalent to phrase_freq(slop=0) per doc: positions are
         unique per (term, doc), so each occurrence's adjusted key set is
         unique and np.intersect1d(assume_unique) is the anchor count."""
-        import numpy as np
         from elasticsearch_alps_spark.indexing.postings import varint_decode_np
         empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
         if not len(sub):
@@ -1076,17 +997,8 @@ class SearchEngine:
         size = size or self.qcfg.size_term
         if not is_single_word(text) or "exact" not in self._postings:
             return self._empty_hits()
-        term = text.strip().lower()
-        hits = self._score_clauses_driver("exact", [(0, term, 1.0)], 1, size)
-        if hits is not None:
-            return hits
-        if self.qcfg.fused_stats:
-            return self._score_clauses_fused("exact", [(0, term, 1.0)], 1, size)
-        dfs = self._df_lookup("exact", [term])
-        if not dfs:
-            return self._empty_hits()
-        clauses = [(0, term, self.idf("exact", dfs[term]))]
-        return self._score_clauses("exact", clauses, 1, size)
+        return self._score_query("exact", [(0, text.strip().lower(), 1.0)],
+                                 1, size)
 
     def wildcard_query(self, text: str, size: Optional[int] = None) -> DataFrame:
         """Q6 (search.py:244-279): single-word gate; ``*word*`` over the exact
@@ -1316,15 +1228,11 @@ class SearchEngine:
             word = text.strip()
             if not word:
                 return self._empty_hits()
+            # expansion boosts are the idf multipliers
             exp = self._fuzzy_expand("main", word)
-            # hybrid driver path first (r2): expansion boosts are exactly the
-            # idf multiplier the driver scorer applies — result-identical
-            hits = self._score_clauses_driver(
-                "main", [(0, t, boost) for t, boost, _ in exp], 1, size)
-            if hits is not None:
-                return hits
-            clauses = [(0, t, boost * self.idf("main", df)) for t, boost, df in exp]
-            return self._score_clauses("main", clauses, 1, size)
+            return self._score_query(
+                "main", [(0, t, boost) for t, boost, _ in exp], 1, size,
+                dfs={t: df for t, _, df in exp})
         words = analyze(text, self._analyzers["main"])
         if not words:
             return self._empty_hits()
@@ -1336,13 +1244,9 @@ class SearchEngine:
         for ci in range(len(uniq)):
             for t, boost, df in expansions[ci]:
                 clause_mults.append((ci, t, boost))
-        hits = self._score_clauses_driver("main", clause_mults, required, size)
-        if hits is not None:
-            return hits
-        dfs = {t: df for e in expansions.values() for t, _, df in e}
-        clauses = [(ci, t, boost * self.idf("main", dfs[t]))
-                   for ci, t, boost in clause_mults]
-        return self._score_clauses("main", clauses, required, size)
+        return self._score_query(
+            "main", clause_mults, required, size,
+            dfs={t: df for e in expansions.values() for t, _, df in e})
 
     def bool_must_query(self, text: str, size: Optional[int] = None) -> DataFrame:
         """Q8 (search.py:352-418): whitespace-split words (NOT analyzed as a
@@ -1381,15 +1285,7 @@ class SearchEngine:
             required = max(1, int(math.floor(pct / 100.0 * len(words))))
         else:
             required = 1
-        hits = self._score_clauses_driver("main", clause_mults, required, size)
-        if hits is not None:
-            return hits
-        if self.qcfg.fused_stats:
-            return self._score_clauses_fused("main", clause_mults, required, size)
-        dfs = self._df_lookup("main", [t for _, t, _ in clause_mults])
-        clauses = [(ci, t, k * self.idf("main", dfs.get(t, 0)))
-                   for ci, t, k in clause_mults]
-        return self._score_clauses("main", clauses, required, size)
+        return self._score_query("main", clause_mults, required, size)
 
     def match_all(self, size: int = 1) -> DataFrame:
         """Q11 (merge.py:151-155): all docs, constant score 1.0 — the

@@ -1,8 +1,15 @@
-"""Driver-side postings cache (r8): bit-identity with the per-query fetch
-path across every query family, plus the gating contract (uncached engines,
-zero budget, and over-budget vocabularies never build it)."""
+"""Driver-side working set: the postings cache (r8) — bit-identity with the
+per-query fetch path across every query family, the gating contract
+(uncached engines, zero budget, and over-budget vocabularies never build it)
+and one build under concurrent first queries — and the per-query fetch's SQL
+string quoting."""
+
+import os
+import sys
+import threading
 
 import pytest
+from pyspark.sql import functions as F
 
 from elasticsearch_alps_spark.config import QueryConfig
 from elasticsearch_alps_spark.queries.engine import SearchEngine
@@ -51,13 +58,93 @@ def test_fuzzy_and_bool_bit_identical(engines):
             == _rows(plain.bool_must_query("import json")))
 
 
-def test_wand_driver_route_bit_identical(spark, built_index):
+def test_wand_config_cached_vs_fetch_bit_identical(spark, built_index):
+    # use_wand=True still takes the driver working set under the budget
     w_cached = SearchEngine(spark, built_index.root,
                             QueryConfig(use_wand=True), cache=True)
     w_plain = SearchEngine(spark, built_index.root,
                            QueryConfig(use_wand=True), cache=False)
     for q in ["def", "import", "def import"]:
         assert _rows(w_cached.match_query(q)) == _rows(w_plain.match_query(q))
+        assert w_cached.last_scorer == w_plain.last_scorer == "driver"
+
+
+def test_concurrent_first_queries_build_cache_once(spark, built_index):
+    """Two threads' first queries on a fresh cache=True engine must share ONE
+    full-postings fetch (double-checked lock), not each run it."""
+    eng = SearchEngine(spark, built_index.root, QueryConfig(), cache=True)
+    builds = []
+    build = eng._dcache_build
+
+    def counted(field):
+        builds.append(field)
+        return build(field)
+
+    eng._dcache_build = counted
+    eng._hot_dfs("main")  # keep the race on the cache build itself
+    n = min(16, (os.cpu_count() or 4) + 2)  # more threads than cores
+    gate = threading.Barrier(n)
+    out, errors = {}, []
+
+    def run(i):
+        try:
+            gate.wait(timeout=60)
+            out[i] = _rows(eng.match_query("def"))
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(n)]
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert builds == ["main"]
+    assert eng._dcache_store["main"] is not None
+    assert len({tuple(r) for r in out.values()}) == 1 and out[0]
+
+
+def test_fetch_quotes_trailing_backslash(spark, built_index):
+    # "foo\" passes the single-word gate and becomes the exact-field term
+    # verbatim; an unescaped trailing backslash used to break the fetch SQL
+    eng = SearchEngine(spark, built_index.root, QueryConfig())
+    assert eng.term_query_exact("foo\\").collect() == []
+
+
+def test_fetch_quotes_backslash_terms(spark, tmp_path):
+    """A keyword-analyzed field keeps backslashes in its terms: the fetch
+    route must look up exactly ``c:\\path`` — not ``c:path``, which Spark
+    reads from an unescaped literal — and so agree with the distributed
+    route, whose term filter is not SQL text."""
+    from elasticsearch_alps_spark.config import (
+        KEYWORD_ANALYZER, ExtraField, IndexConfig,
+    )
+    from elasticsearch_alps_spark.indexing.builder import build_index
+    rows = [("r", f"p{i}", "c", "py", f"content {i}") for i in range(6)]
+    wpath = ["c:\\path", "c:path", "it's", "its", "a\\'b", "plain"]
+    docs = (spark.createDataFrame(
+        [r + (w,) for r, w in zip(rows, wpath)],
+        "repo string, path string, commit string, lang string, "
+        "content string, wpath string"))
+    cfg = IndexConfig(extra_fields=(
+        ExtraField("wpath", "wpath", KEYWORD_ANALYZER),))
+    paths = build_index(spark, docs, str(tmp_path / "idx_kw"), cfg, shards=2)
+    fetch = SearchEngine(spark, paths.root, QueryConfig())
+    dist = SearchEngine(spark, paths.root,
+                        QueryConfig(driver_score_max_postings=0))
+    ids = dict(spark.read.parquet(paths.docs)
+               .select(F.col("path"), "doc_id").collect())
+    for i, w in enumerate(wpath[:5]):
+        got = _rows(fetch.match_query(w, field="wpath"))
+        assert fetch.last_scorer == "driver"
+        assert got == _rows(dist.match_query(w, field="wpath")), w
+        assert [d for d, _ in got] == [ids[f"p{i}"]], w
 
 
 def test_total_hits_identical(engines):

@@ -210,8 +210,7 @@ def test_extra_url_field_build_and_query(spark, corpus_df, tmp_path):
     # field-parametric match with norms-free scoring: score per matched
     # term = idf(t) · 1/(1+k1), idf from the URL field's own stats
     eng = SearchEngine(spark, paths.root,
-                       QueryConfig(driver_score_max_postings=0,
-                                   fused_stats=False))
+                       QueryConfig(driver_score_max_postings=0))
     hits = eng.match_query("example py", field="url").collect()
     assert hits
     n = stats["url"]["n_docs"]
@@ -231,7 +230,7 @@ def test_extra_url_field_build_and_query(spark, corpus_df, tmp_path):
     assert got <= {round(both, 9), round(only, 9)}
     assert round(both, 9) in got
     # the driver serving path scores identically (norms-free branch there)
-    eng_drv = SearchEngine(spark, paths.root, QueryConfig(fused_stats=False))
+    eng_drv = SearchEngine(spark, paths.root, QueryConfig())
     drv = eng_drv.match_query("example py", field="url").collect()
     assert eng_drv.last_scorer == "driver"
     assert [(r["doc_id"], round(r["score"], 9)) for r in drv] == \

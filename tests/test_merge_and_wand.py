@@ -106,9 +106,8 @@ def test_merge_preserves_extra_fields(spark, tmp_path):
     assert ms["fields"]["url"]["norms"] is False
     assert ms["fields"]["url"]["index_options"] == "docs"
     # bit-exact url-field query parity, both serving paths
-    for qcfg in (QueryConfig(fused_stats=False),                # driver
-                 QueryConfig(driver_score_max_postings=0,
-                             fused_stats=False)):               # exhaustive
+    for qcfg in (QueryConfig(),                                 # driver
+                 QueryConfig(driver_score_max_postings=0)):     # distributed
         em = SearchEngine(spark, merged.root, qcfg)
         ea = SearchEngine(spark, pall.root, qcfg)
         got = [(r["doc_id"], r["score"])
@@ -153,12 +152,15 @@ def _ranked(rows):
 
 @pytest.mark.parametrize("q", WAND_QUERIES)
 def test_wand_identical_to_exhaustive(spark, built_index, q):
-    """Block-max WAND pruning must be lossless (SURVEY.md §7.1 M6).
-    Both engines use driver-side idf (fused_stats=False — WAND always does)."""
+    """Block-max WAND pruning must be lossless (SURVEY.md §7.1 M6). Budget
+    0 on both engines: the distributed scorer against wand_topk itself, not
+    the driver fold that serves every under-budget query."""
     exhaustive = SearchEngine(spark, built_index.root,
-                              QueryConfig(use_wand=False, fused_stats=False,
+                              QueryConfig(use_wand=False,
                                           driver_score_max_postings=0))
-    wand = SearchEngine(spark, built_index.root, QueryConfig(use_wand=True))
+    wand = SearchEngine(spark, built_index.root,
+                        QueryConfig(use_wand=True,
+                                    driver_score_max_postings=0))
     want = _ranked(exhaustive.match_query(q).collect())
     got = _ranked(wand.match_query(q).collect())
     assert got == want, q
@@ -166,76 +168,92 @@ def test_wand_identical_to_exhaustive(spark, built_index, q):
 
 def test_wand_small_k_prunes_consistently(spark, built_index):
     exhaustive = SearchEngine(spark, built_index.root,
-                              QueryConfig(use_wand=False, fused_stats=False,
+                              QueryConfig(use_wand=False,
                                           driver_score_max_postings=0))
-    wand = SearchEngine(spark, built_index.root, QueryConfig(use_wand=True))
+    wand = SearchEngine(spark, built_index.root,
+                        QueryConfig(use_wand=True,
+                                    driver_score_max_postings=0))
     for k in (1, 5, 10):
         want = _ranked(exhaustive.match_query("def", size=k).collect())
         got = _ranked(wand.match_query("def", size=k).collect())
         assert got == want, k
 
 
-def test_fused_vs_driver_idf_same_docsets(spark, built_index):
-    """Fused (JVM ln) vs driver-side (glibc ln) idf: same hit SET and scores
-    to 1e-9 rel; ORDER may legitimately differ inside exact-tie clusters."""
-    fused = SearchEngine(spark, built_index.root,
-                         QueryConfig(fused_stats=True,
-                                     driver_score_max_postings=0))
-    plain = SearchEngine(spark, built_index.root,
-                         QueryConfig(fused_stats=False,
-                                     driver_score_max_postings=0))
-    for q in ("def", "parse json config"):
-        a = {r["doc_id"]: r["score"] for r in fused.match_query(q, size=10_000).collect()}
-        b = {r["doc_id"]: r["score"] for r in plain.match_query(q, size=10_000).collect()}
-        assert set(a) == set(b), q
-        for d in a:
-            assert a[d] == pytest.approx(b[d], rel=1e-9), (q, d)
+def _hexed(df):
+    return [(r["doc_id"], r["score"].hex()) for r in df.collect()]
 
 
-@pytest.mark.parametrize("op,msm", [("or", None), ("and", None), ("or", 60)])
-def test_fused_casewhen_equals_join_clause_frame(spark, built_index, op, msm):
-    """r8: the match-family fused scorer builds the clause frame as literal
-    CASE WHEN projections (no join, no broadcast) instead of broadcasting a
-    (term, weight, jidx) frame joined with term_stats. Scores must be
-    BIT-identical to the join form for every operator/msm shape — the idf
-    expression tree is unchanged (JVM ln), only its df input moves from a
-    scanned column to a literal."""
-    lit_eng = SearchEngine(spark, built_index.root,
-                           QueryConfig(fused_stats=True,
-                                       driver_score_max_postings=0))
-    join_eng = SearchEngine(spark, built_index.root,
-                            QueryConfig(fused_stats=True,
-                                        driver_score_max_postings=0))
-    join_eng._force_join_clause_frame = True  # test hook: old broadcast form
-    for q in ("def", "parse json config", "import json"):
-        kw = {"operator": op} if msm is None else {"minimum_should_match": msm}
-        a = lit_eng.match_query(q, size=10_000, **kw).collect()
-        b = join_eng.match_query(q, size=10_000, **kw).collect()
-        assert lit_eng.last_scorer == "fused" and join_eng.last_scorer == "fused"
-        assert [(r["doc_id"], r["score"].hex()) for r in a] \
-            == [(r["doc_id"], r["score"].hex()) for r in b], (q, op, msm)
+@pytest.fixture(scope="module")
+def route_engines(spark, built_index):
+    """One engine per route a clause query can take: driver over the
+    postings cache, driver over a per-query fetch, the distributed scorer,
+    and distributed WAND (budget 0 forces the last two)."""
+    root = built_index.root
+    return {
+        "driver-cache": (SearchEngine(spark, root, QueryConfig(), cache=True),
+                         "driver"),
+        "driver-fetch": (SearchEngine(spark, root, QueryConfig()), "driver"),
+        "distributed": (SearchEngine(
+            spark, root, QueryConfig(driver_score_max_postings=0)),
+            "distributed"),
+        "wand": (SearchEngine(spark, root, QueryConfig(
+            use_wand=True, driver_score_max_postings=0)), "wand"),
+    }
 
 
-def test_bool_duplicate_terms_take_join_clause_frame(spark, built_index):
-    """A term shared by several clauses must fan each posting row out to
-    every clause row — only the join form does that; the CASE WHEN guard
-    must route such queries to it (plan carries the broadcast join), and
-    results must match the driver path (glibc-vs-JVM ln ⇒ 1e-9 rel, same
-    tolerance as test_fused_vs_driver_idf_same_docsets)."""
+ROUTE_MATRIX = [
+    # (case, query call, WAND applies — the match family only)
+    ("match_or", lambda e: e.match_query("parse json config"), True),
+    ("match_or_hot", lambda e: e.match_query("def import"), True),
+    ("match_and", lambda e: e.match_query("def main", "and"), True),
+    ("match_msm", lambda e: e.match_query("import numpy as np",
+                                          minimum_should_match=60), True),
+    ("term_exact", lambda e: e.term_query_exact("def"), False),
+    ("fuzzy_single", lambda e: e.fuzzy_query("improt"), False),
+    ("fuzzy_multi", lambda e: e.fuzzy_query("parse jsn confg"), False),
+    ("bool_and", lambda e: e.bool_must_query("import json"), False),
+    # a word duplicated into two clauses: one term, two clause rows
+    ("bool_dup_term", lambda e: e.bool_must_query("def"), False),
+]
+
+
+@pytest.mark.parametrize("case,call,wand_ok", ROUTE_MATRIX,
+                         ids=[c[0] for c in ROUTE_MATRIX])
+def test_route_matrix_scores_hex_identical(route_engines, case, call,
+                                           wand_ok):
+    """Every clause weight is multiplier · glibc-ln idf, computed once on the
+    driver and fed to every route as the same double — so each route must
+    return the SAME (doc_id, score.hex()) list, bit for bit, with no
+    tolerance."""
+    got = {}
+    for route, (eng, label) in route_engines.items():
+        if route == "wand" and not wand_ok:
+            continue
+        got[route] = _hexed(call(eng))
+        assert eng.last_scorer == label, (case, route)
+    want = got.pop("driver-fetch")
+    assert want, case
+    for route, hits in got.items():
+        assert hits == want, (case, route)
+
+
+def test_bool_duplicate_terms_fan_out_without_join(spark, built_index):
+    """A term shared by several clauses (bool_must duplicates a single word
+    into two clauses, search.py:358) fans each posting row out to every
+    clause through the literal inline(...) frame: one pruned postings scan,
+    no join, no broadcast — and scores hex-equal to the driver route."""
     eng = SearchEngine(spark, built_index.root,
-                       QueryConfig(fused_stats=True,
-                                   driver_score_max_postings=0))
+                       QueryConfig(driver_score_max_postings=0))
     drv = SearchEngine(spark, built_index.root, QueryConfig())
-    # bool_must duplicates a single word into two clauses (search.py:358)
     hits = eng.bool_must_query("def")
-    assert eng.last_scorer == "fused"
-    assert "BroadcastHashJoin" in hits._jdf.queryExecution().executedPlan().toString()
-    a = {r["doc_id"]: r["score"] for r in hits.collect()}
-    b = {r["doc_id"]: r["score"] for r in drv.bool_must_query("def").collect()}
+    assert eng.last_scorer == "distributed"
+    plan = hits._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+    assert plan.count("Scan parquet") == 1, "one pruned postings scan only"
+    assert "Generate" in plan, plan
+    want = _hexed(drv.bool_must_query("def"))
     assert drv.last_scorer == "driver"
-    assert set(a) == set(b)
-    for d in a:
-        assert a[d] == pytest.approx(b[d], rel=1e-9), d
+    assert want and _hexed(hits) == want
 
 
 @pytest.mark.parametrize("op,msm", [("or", None), ("and", None), ("or", 60)])
@@ -244,9 +262,11 @@ def test_wand_total_hits_matches_exhaustive(spark, built_index, op, msm):
     capped match count via a lazy positions-free recount plan, not
     min(len(rows), size)."""
     exhaustive = SearchEngine(spark, built_index.root,
-                              QueryConfig(use_wand=False, fused_stats=False,
+                              QueryConfig(use_wand=False,
                                           driver_score_max_postings=0))
-    wand = SearchEngine(spark, built_index.root, QueryConfig(use_wand=True))
+    wand = SearchEngine(spark, built_index.root,
+                        QueryConfig(use_wand=True,
+                                    driver_score_max_postings=0))
     for q in ("def", "def main", "parse json config"):
         rw = wand._response(wand.match_query(q, op, minimum_should_match=msm),
                             q, "match_query")
@@ -264,9 +284,11 @@ def test_wand_conjunctive_identical_to_exhaustive(spark, built_index, op, msm):
     """r2 (VERDICT r1 missing #4): the WAND conjunctive/msm extension must be
     lossless for AND and minimum_should_match matches too."""
     exhaustive = SearchEngine(spark, built_index.root,
-                              QueryConfig(use_wand=False, fused_stats=False,
+                              QueryConfig(use_wand=False,
                                           driver_score_max_postings=0))
-    wand = SearchEngine(spark, built_index.root, QueryConfig(use_wand=True))
+    wand = SearchEngine(spark, built_index.root,
+                        QueryConfig(use_wand=True,
+                                    driver_score_max_postings=0))
     for q in ("def main", "parse json config", "the value of the result",
               "import numpy as np"):
         want = _ranked(exhaustive.match_query(q, op,
@@ -283,7 +305,7 @@ class TestWandAuto:
 
     def test_auto_matches_better_scorer_per_query(self, spark, built_index):
         # threshold 5 on this corpus: "def" (hot, df ≫ 5) must take the WAND
-        # path; "uniq_100_1" (df 1) must take the fused exhaustive path —
+        # path; "uniq_100_1" (df 1) must take the distributed scorer —
         # same engine, per-query decision
         auto = SearchEngine(spark, built_index.root,
                             QueryConfig(use_wand="auto", wand_auto_min_df=5,
@@ -291,12 +313,11 @@ class TestWandAuto:
         got_hot = _ranked(auto.match_query("def").collect())
         assert auto.last_scorer == "wand"
         got_rare = _ranked(auto.match_query("uniq_100_1").collect())
-        assert auto.last_scorer == "fused"
+        assert auto.last_scorer == "distributed"
         # both choices are result-identical to the exhaustive reference
         exhaustive = SearchEngine(
             spark, built_index.root,
-            QueryConfig(use_wand=False, fused_stats=False,
-                        driver_score_max_postings=0))
+            QueryConfig(use_wand=False, driver_score_max_postings=0))
         assert got_hot == _ranked(exhaustive.match_query("def").collect())
         assert got_rare == _ranked(
             exhaustive.match_query("uniq_100_1").collect())
@@ -308,7 +329,7 @@ class TestWandAuto:
                                        wand_auto_min_df=10**9,
                                        driver_score_max_postings=0))
         eng.match_query("def").collect()
-        assert eng.last_scorer == "fused"
+        assert eng.last_scorer == "distributed"
 
     def test_auto_keeps_hybrid_driver_path_for_small_queries(self, spark,
                                                              built_index):
@@ -332,7 +353,7 @@ class TestWandAuto:
                                        driver_score_max_postings=0))
         assert eng.qcfg.wand_auto_min_df is None
         eng.match_query("def").collect()
-        assert eng.last_scorer == "fused"
+        assert eng.last_scorer == "distributed"
         got = calibrate._PROBE_CACHE["min_df"]
         assert calibrate.MIN_DF_FLOOR <= got <= calibrate.MIN_DF_CEIL
         assert calibrate.calibrated_min_df(spark) == got  # cached, no re-probe
@@ -430,7 +451,7 @@ class TestWandAuto:
         got = json.loads(line[len("RESULT:"):])
         assert got["resolved"] == side["wand_auto_min_df"]
         assert got["probe_cache"] == {}, "probe must not run when sidecar exists"
-        assert got["scorer"] in ("fused", "exhaustive", "wand")
+        assert got["scorer"] in ("distributed", "wand")
 
     def test_malformed_env_pin_falls_through(self, spark, built_index,
                                              monkeypatch):
@@ -473,7 +494,7 @@ class TestWandAuto:
         assert ceiling >= 5  # precondition: the ambiguous regime is live
         assert "uniq_100_1" not in hot
         eng.match_query("uniq_100_1").collect()
-        assert eng.last_scorer == "fused"  # df=1 < 5, resolved exactly
+        assert eng.last_scorer == "distributed"  # df=1 < 5, exactly
 
 
 def test_scores_independent_of_index_layout(spark, corpus_df, index_cfg,
@@ -489,10 +510,9 @@ def test_scores_independent_of_index_layout(spark, corpus_df, index_cfg,
                         shards=7)
     q = "parse json config"
     for qcfg in (QueryConfig(),                               # driver path
-                 QueryConfig(driver_score_max_postings=0),    # fused
-                 QueryConfig(driver_score_max_postings=0,
-                             fused_stats=False),              # exhaustive
-                 QueryConfig(use_wand=True)):                 # WAND
+                 QueryConfig(driver_score_max_postings=0),    # distributed
+                 QueryConfig(use_wand=True,
+                             driver_score_max_postings=0)):   # WAND
         a = SearchEngine(spark, built_index.root, qcfg)
         b = SearchEngine(spark, other.root, qcfg)
         got = [(r["doc_id"], r["score"]) for r in a.match_query(q).collect()]
@@ -504,19 +524,21 @@ def test_fallback_fold_above_det_sum_max_stays_cross_path_identical(
         spark, built_index, monkeypatch):
     """r7 (VERDICT r6 next #2): above DET_SUM_MAX (clause, term) pairs every
     path falls back to the r6 ascending-value fold — the switch is a pure
-    function of the QUERY, so driver/fused/exhaustive/WAND must still agree
+    function of the QUERY, so driver/distributed/WAND must still agree
     bit-for-bit with each other below AND above the threshold."""
     q = "parse json config"  # 3 pairs > the pinned threshold of 2
     monkeypatch.setattr(SearchEngine, "DET_SUM_MAX", 2)
     exhaustive = SearchEngine(spark, built_index.root,
-                              QueryConfig(use_wand=False, fused_stats=False,
+                              QueryConfig(use_wand=False,
                                           driver_score_max_postings=0))
-    wand = SearchEngine(spark, built_index.root, QueryConfig(use_wand=True))
-    driver = SearchEngine(spark, built_index.root,
-                          QueryConfig(fused_stats=False))
+    wand = SearchEngine(spark, built_index.root,
+                        QueryConfig(use_wand=True,
+                                    driver_score_max_postings=0))
+    driver = SearchEngine(spark, built_index.root, QueryConfig())
     want = _ranked(exhaustive.match_query(q).collect())
-    assert exhaustive.last_scorer == "exhaustive"
+    assert exhaustive.last_scorer == "distributed"
     got_w = _ranked(wand.match_query(q).collect())
+    assert wand.last_scorer == "wand"
     got_d = _ranked(driver.match_query(q).collect())
     assert driver.last_scorer == "driver"
     assert want and got_w == want and got_d == want

@@ -5,9 +5,10 @@ committed harness behind the r7 ``exh10m_fold_recovery`` runs.jsonl row
 the recording policy is now "no row without a committed harness").
 
 Times ``match_query`` with the driver path disabled and WAND off — i.e. the
-fused exhaustive distributed scorer, the path whose fold rework r7 measured
-(24.4 s collect_list fold → 7.3 s clause-order fold at 10M docs) — plus the
-same queries under use_wand=True for the crossover context.
+distributed scorer, the path whose fold rework r7 measured (24.4 s
+collect_list fold → 7.3 s clause-order fold at 10M docs) — plus the same
+queries under use_wand=True, also at budget 0 so they time ``wand_topk``
+rather than the driver fold, for the crossover context.
 
 Usage:
     python -m tools.exh_forced /path/to/index [--cpus 32] [--queries def,import]

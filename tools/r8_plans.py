@@ -1,6 +1,6 @@
 """Capture .explain("formatted") for the declared full-text queries (the
 gate configuration: distributed plans, driver path off) plus the bench-side
-fused/exhaustive match — used for the r8 before/after plan evidence in
+distributed match — used for the r8 before/after plan evidence in
 plans/r08/ (the judge checks plan claims against these files).
 
 Usage: python -m tools.r8_plans <outdir> [sf_dir]

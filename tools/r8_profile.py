@@ -109,7 +109,7 @@ def main() -> None:
         for q in ("def", "import", "parse json config"):
             t0 = time.time()
             wand.match_query(q).collect()
-            rows.append(("wand", q, time.time() - t0, "wand"))
+            rows.append(("wand", q, time.time() - t0, wand.last_scorer))
         tot = {}
         for qtype, q, dt, scorer in sorted(rows, key=lambda r: -r[2]):
             tot[qtype] = tot.get(qtype, 0.0) + dt
@@ -134,8 +134,9 @@ def main() -> None:
             exp = eng._fuzzy_expand("main", w)
             t_exp = time.time() - t0
             t0 = time.time()
-            hits = eng._score_clauses_driver(
-                "main", [(0, t, boost) for t, boost, _ in exp], 1, 50)
+            hits = eng._score_query(
+                "main", [(0, t, boost) for t, boost, _ in exp], 1, 50,
+                dfs={t: df for t, _, df in exp})
             hits.collect()
             t_score = time.time() - t0
             print(f"fuzzy {w!r}: expand={t_exp:.3f}s ({len(exp)} terms) "
