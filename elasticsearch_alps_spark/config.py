@@ -188,7 +188,8 @@ class QueryConfig:
     track_total_hits: int = 10_000  # ES 7 default cap, never overridden by search.py
     # hybrid serving path: when the query's term-pruned postings fit under
     # this budget, fetch them in ONE incremental job and score on the driver
-    # (what a search tier does for pruned term sets); a query that trips the
+    # (what a search tier does for pruned term sets) — every clause query
+    # and match_phrase (which fetches positions too); a query that trips the
     # budget — e.g. a 10^9-df hot term at 100 TB — automatically falls back
     # to the distributed scoring plan. 0 disables. Default re-measured r8
     # (tools/r8_profile + OPTIMIZATION_r08.md): the driver fold beats the
@@ -228,14 +229,6 @@ class QueryConfig:
     # every common token is far past either. Both scorers are result-
     # identical, so this knob is performance-only.
     wand_auto_min_df: Optional[int] = None
-    # phrase phase-2: broadcast the candidate doc_id set when the candidate
-    # upper bound (min term df) is at most this many rows (~8 B/row → ≤40 MB);
-    # above it the semi-join shuffles instead of broadcasting
-    phrase_broadcast_max_candidates: int = 5_000_000
-    # phrase driver path: when the candidate bound (min term df) is at most
-    # this, fetch positions ONLY for the candidate docs via an IN-list second
-    # fetch (a hot∧rare phrase then never transfers the hot term's blobs)
-    phrase_driver_candidate_fetch_max: int = 4096
 
     def __post_init__(self):
         if not isinstance(self.match_phrase_slop, list):

@@ -117,6 +117,23 @@ class SearchEngine:
         # makes concurrent first queries share ONE full-postings fetch
         self._dcache_store: Dict[str, Optional[dict]] = {}
         self._dcache_lock = threading.Lock()
+        # the other lazily built per-field state, each under its own
+        # double-checked lock. These three locks are leaves: a holder never
+        # takes another engine lock (_dcache_build and the fuzzy warm-up
+        # thread call _hot_dfs while holding theirs).
+        self._hot_df_cache: Dict[str, Tuple[Dict[str, int], int]] = {}
+        self._hot_df_lock = threading.Lock()
+        self._ts_lookups: Dict[str, int] = {}
+        self._views: Dict[str, str] = {}
+        self._views_lock = threading.Lock()
+        self._packed_cache: Dict[str, tuple] = {}
+        self._packed_lock = threading.Lock()
+        # built once, from a one-row LOCAL relation + limit(0) rather than
+        # createDataFrame([], ddl) (r8): the empty-list form is RDD-backed
+        # and schedules defaultParallelism EMPTY tasks per collect —
+        # measured 0.35 s/collect on local[32] vs 5 ms for this plan
+        self._empty_hits_df = spark.createDataFrame(
+            [(0, 0.0)], "doc_id long, score double").limit(0)
 
     def _set_total(self, df: Optional[DataFrame] = None,
                    count: Optional[int] = None, obs=None) -> None:
@@ -180,17 +197,14 @@ class SearchEngine:
         # build it (the hybrid scorer's budget check does) — a fresh engine
         # with the driver path disabled must not trade a tiny pruned lookup
         # for a top-50k collect it will never amortize
-        cached = getattr(self, "_hot_df_cache", None) or {}
-        hot, ceiling = cached.get(field, ({}, -1))
+        hot, ceiling = self._hot_df_cache.get(field, ({}, -1))
         if ceiling == -1:
             # no cache yet: from the SECOND lookup on this field onward,
             # build the top-K dictionary so repeated serving stops paying a
             # pruned-scan job per query (r8 — the distributed scorer takes df
             # driver-side). The first lookup stays a tiny pruned scan, so a
             # single-query engine never trades it for a top-K collect.
-            cnt = getattr(self, "_ts_lookups", None)
-            if cnt is None:
-                cnt = self._ts_lookups = {}
+            cnt = self._ts_lookups
             cnt[field] = cnt.get(field, 0) + 1
             if cnt[field] >= 2:
                 hot, ceiling = self._hot_dfs(field)
@@ -222,16 +236,7 @@ class SearchEngine:
 
     def _empty_hits(self) -> DataFrame:
         self._set_total(count=0)
-        # Built once and reused, and from a one-row LOCAL relation + limit(0)
-        # rather than createDataFrame([], ddl) (r8): the empty-list form is
-        # RDD-backed and schedules defaultParallelism EMPTY tasks per
-        # collect — measured 0.35 s/collect on local[32] vs 5 ms for the
-        # local-relation plan. Schema is identical.
-        df = getattr(self, "_empty_hits_df", None)
-        if df is None:
-            df = self._empty_hits_df = self.spark.createDataFrame(
-                [(0, 0.0)], "doc_id long, score double").limit(0)
-        return df
+        return self._empty_hits_df
 
     # Driver-side top-K-by-df term dictionary cap. 400k × ~50 B ≈ 20 MB —
     # an ES data node keeps a comparable terms index in heap per shard.
@@ -248,33 +253,36 @@ class SearchEngine:
     def _postings_view(self, field: str) -> str:
         """Register (once) the postings DataFrame as a temp view so driver
         queries go through one spark.sql() call."""
-        views = getattr(self, "_views", None)
-        if views is None:
-            views = self._views = {}
+        views = self._views
         if field not in views:
-            name = f"alps_postings_{abs(id(self))}_{field}"
-            self._postings[field].createOrReplaceTempView(name)
-            views[field] = name
+            with self._views_lock:
+                if field not in views:
+                    name = f"alps_postings_{abs(id(self))}_{field}"
+                    self._postings[field].createOrReplaceTempView(name)
+                    views[field] = name
         return views[field]
 
     def _hot_dfs(self, field: str) -> Tuple[Dict[str, int], int]:
         """(top-K terms by df → df, ceiling df for every other term) — one
-        job at first use, then free per query."""
-        cached = getattr(self, "_hot_df_cache", None)
-        if cached is None:
-            cached = self._hot_df_cache = {}
+        job at first use (under a double-checked lock, so concurrent first
+        queries share it), then free per query."""
+        cached = self._hot_df_cache
         if field not in cached:
-            # Arrow transfer (toPandas), not collect(): a row-object
-            # collect of a few 100k terms costs ~0.5 s of py4j
-            # deserialization; the Arrow path is ~10× cheaper (r8)
-            pdf = (self._term_stats[field]
-                   .orderBy(F.desc("df"), F.asc("term"))
-                   .limit(self._HOT_DF_K).select("term", "df").toPandas())
-            hot = dict(zip(pdf["term"].tolist(),
-                           (int(d) for d in pdf["df"].tolist())))
-            ceiling = min(hot.values()) if len(hot) >= self._HOT_DF_K else 0
-            # ceiling==0 means the dict holds the WHOLE vocabulary
-            cached[field] = (hot, ceiling)
+            with self._hot_df_lock:
+                if field not in cached:
+                    # Arrow transfer (toPandas), not collect(): a row-object
+                    # collect of a few 100k terms costs ~0.5 s of py4j
+                    # deserialization; the Arrow path is ~10× cheaper (r8)
+                    pdf = (self._term_stats[field]
+                           .orderBy(F.desc("df"), F.asc("term"))
+                           .limit(self._HOT_DF_K).select("term", "df")
+                           .toPandas())
+                    hot = dict(zip(pdf["term"].tolist(),
+                                   (int(d) for d in pdf["df"].tolist())))
+                    # ceiling==0 means the dict holds the WHOLE vocabulary
+                    ceiling = (min(hot.values())
+                               if len(hot) >= self._HOT_DF_K else 0)
+                    cached[field] = (hot, ceiling)
         return cached[field]
 
     def _driver_cache(self, field: str) -> Optional[dict]:
@@ -351,29 +359,34 @@ class SearchEngine:
             data["positions"] = cache["positions"][idx]
         return pd.DataFrame(data)
 
-    def _driver_working_set(self, field: str,
-                            terms: List[str]) -> Optional[pd.DataFrame]:
-        """The query's term-pruned postings (term, doc_id, freq, dl) on the
-        driver — a slice of the driver postings cache, else ONE incremental
-        Spark fetch (positions never read) — or None when the estimated Σdf
-        exceeds qcfg.driver_score_max_postings (the caller then takes the
-        distributed plan — the path a 10^9-df hot term takes at scale)."""
+    def _driver_working_set(self, field: str, terms: List[str],
+                            positions: bool = False,
+                            dfs: Optional[Dict[str, int]] = None
+                            ) -> Optional[pd.DataFrame]:
+        """The query's term-pruned postings (term, doc_id, freq, dl, and
+        positions when asked) on the driver — a slice of the driver postings
+        cache, else ONE incremental Spark fetch — or None when Σdf exceeds
+        qcfg.driver_score_max_postings (the caller then takes the
+        distributed plan — the path a 10^9-df hot term takes at scale).
+        Σdf is exact when the caller holds ``dfs``, else an O(1) upper bound
+        from the cached hot-term dict (any term absent from it has df ≤ the
+        K-th df) — no Spark job spent deciding the path."""
         budget = self.qcfg.driver_score_max_postings
         if budget <= 0:
             return None
-        # O(1) budget check: upper-bound Σdf from the cached hot-term df dict
-        # (any term absent from the top-k dict has df ≤ the k-th df) — no
-        # Spark job spent deciding the path
-        hot, ceiling = self._hot_dfs(field)
-        if sum(hot.get(t, ceiling) for t in terms) > budget:
+        if dfs is None:
+            hot, ceiling = self._hot_dfs(field)
+            dfs = {t: hot.get(t, ceiling) for t in terms}
+        if sum(dfs.get(t, 0) for t in terms) > budget:
             return None
         cache = self._driver_cache(field)
         if cache is not None:
-            return self._dcache_frame(cache, terms, with_positions=False)
+            return self._dcache_frame(cache, terms, positions)
         # one SQL string (single py4j round trip, vs ~100 ms of Column-API
         # chatter) + Arrow transfer
+        cols = "term, doc_id, freq, dl" + (", positions" if positions else "")
         return self.spark.sql(
-            f"SELECT term, doc_id, freq, dl FROM {self._postings_view(field)} "
+            f"SELECT {cols} FROM {self._postings_view(field)} "
             f"WHERE term IN ({_sql_in(terms)})").toPandas()
 
     def _driver_score_pdf(self, field: str, pdf: pd.DataFrame,
@@ -460,6 +473,10 @@ class SearchEngine:
     # projection widens the agg buffer by one double per pair, so very fat
     # expansions (≫ typical fuzzy-multiword) keep the compact path
     DET_SUM_MAX = 64
+    # distributed phrase phase 2 broadcasts the candidate doc_id set when
+    # its upper bound (min term df) is at most this many rows (~8 B/row →
+    # ≤40 MB); above it the semi-join shuffles instead
+    PHRASE_BROADCAST_MAX_CANDIDATES = 5_000_000
 
     @staticmethod
     def _canon_jidx(clause_rows) -> Dict[Tuple[int, str], int]:
@@ -540,12 +557,13 @@ class SearchEngine:
         (``wand`` marks the match family; its ValueErrors fire first), then
         the driver working set under driver_score_max_postings, then WAND or
         the distributed scorer. ``dfs`` spares the df lookup when the caller
-        already holds them (fuzzy expansions carry their df)."""
+        already holds them (fuzzy expansions carry their df) and makes the
+        budget check exact."""
         if not clause_mults:
             return self._empty_hits()
         terms = list(dict.fromkeys(t for _, t, _ in clause_mults))
         use_wand = wand and self._resolve_use_wand(field, terms)
-        pdf = self._driver_working_set(field, terms)
+        pdf = self._driver_working_set(field, terms, dfs=dfs)
         if pdf is not None:
             self.last_scorer = "driver"
             if not len(pdf):
@@ -715,16 +733,17 @@ class SearchEngine:
         from elasticsearch_alps_spark.queries.wand import wand_topk
         _, avgdl = self._fstat(field)
         src = self._field_src.get(field, field)
-        cached = getattr(self, "_packed_cache", None)
-        if cached is None:
-            cached = self._packed_cache = {}
+        cached = self._packed_cache
         if src not in cached:
-            df = self.spark.read.parquet(self.paths.packed(src))
-            if self._cache:
-                df = df.cache()
-            meta = fsio.read_json(os.path.join(self.paths.field_dir(src),
-                                               "packed_meta.json"), self.spark)
-            cached[src] = (df, meta["n_buckets"])
+            with self._packed_lock:
+                if src not in cached:
+                    df = self.spark.read.parquet(self.paths.packed(src))
+                    if self._cache:
+                        df = df.cache()
+                    meta = fsio.read_json(
+                        os.path.join(self.paths.field_dir(src),
+                                     "packed_meta.json"), self.spark)
+                    cached[src] = (df, meta["n_buckets"])
         packed_df, n_buckets = cached[src]
         # WAND prunes, so the scoring job can't observe the full match count.
         # Keep an UNOBSERVED positions-free recount plan as the lazy fallback
@@ -759,65 +778,15 @@ class SearchEngine:
                          packed_df=packed_df, n_buckets=n_buckets,
                          term_order=term_order)
 
-    def _phrase_driver(self, field: str, terms, offsets, uniq, dfs,
-                       idf_sum: float, slop: int,
-                       size: int) -> Optional[DataFrame]:
-        """Hybrid serving path for phrases (r2): ONE fetch of the term-pruned
-        postings WITH positions, then candidate filtering + phrase_freq +
-        BM25 in Python on the driver — the same closed form the oracle and
-        the distributed pfreq UDF use, so results are identical. Returns
-        None over budget (exact Σdf — already fetched for idf)."""
-        budget = self.qcfg.driver_score_max_postings
-        if budget <= 0 or sum(dfs[t] for t in uniq) > budget:
-            return None
+    def _phrase_driver(self, field: str, pdf: pd.DataFrame, terms, offsets,
+                       idf_sum: float, slop: int, size: int) -> DataFrame:
+        """Driver phrase scorer over the working set (term-pruned postings
+        WITH positions): keep the docs holding every phrase term, then
+        phrase_freq + BM25 — the same closed form the oracle and the
+        distributed pfreq UDF use, so results are identical."""
         from elasticsearch_alps_spark.indexing.postings import decode_positions
-        tl = _sql_in(uniq)
-        n_terms = len(uniq)
-        view = self._postings_view(field)
-        min_df = min(dfs[t] for t in uniq)
-        sum_df = sum(dfs[t] for t in uniq)
-        # Two-fetch only when the hot∧rare asymmetry actually pays (r8):
-        # the second job's fixed cost (~0.1 s) buys skipping ~sum_df −
-        # n_terms·min_df position blobs. For balanced mid-df phrases that
-        # saving is ~nothing, so one fetch with positions wins a whole job;
-        # both variants feed the identical scorer → identical results.
-        two_fetch_pays = sum_df > max(32_000, 4 * n_terms * min_df)
-        cache = self._driver_cache(field)
-        if cache is not None:
-            # driver postings cache hit: the working set is already local, so
-            # the two-fetch transfer optimization is moot — assemble the one-
-            # fetch frame (identical scorer input → identical results; both
-            # fetch variants were already asserted result-equal)
-            pdf = self._dcache_frame(cache, uniq, with_positions=True)
-            counts = pdf.groupby("doc_id")["term"].nunique()
-            cand_ids = set(counts.index[counts == n_terms])
-            sub = pdf[pdf["doc_id"].isin(cand_ids)]
-        elif (min_df <= self.qcfg.phrase_driver_candidate_fetch_max
-                and two_fetch_pays):
-            # two-fetch variant (mirrors the distributed two-phase plan): a
-            # positions-FREE fetch finds conjunction candidates (≤ min df of
-            # the phrase terms), then positions transfer only for those docs
-            # — a hot∧rare phrase skips the hot term's position blobs
-            light = self.spark.sql(
-                f"SELECT term, doc_id, freq, dl FROM {view} "
-                f"WHERE term IN ({tl})").toPandas()
-            counts = light.groupby("doc_id")["term"].nunique()
-            cand_ids = set(int(d) for d in counts.index[counts == n_terms])
-            if not cand_ids:
-                return self._empty_hits()
-            il = ", ".join(str(d) for d in sorted(cand_ids))
-            pos_pdf = self.spark.sql(
-                f"SELECT term, doc_id, positions FROM {view} "
-                f"WHERE term IN ({tl}) AND doc_id IN ({il})").toPandas()
-            sub = light[light["doc_id"].isin(cand_ids)].merge(
-                pos_pdf, on=["term", "doc_id"])
-        else:
-            pdf = self.spark.sql(
-                f"SELECT term, doc_id, freq, dl, positions "
-                f"FROM {view} WHERE term IN ({tl})").toPandas()
-            counts = pdf.groupby("doc_id")["term"].nunique()
-            cand_ids = set(counts.index[counts == n_terms])
-            sub = pdf[pdf["doc_id"].isin(cand_ids)]
+        counts = pdf.groupby("doc_id")["term"].nunique()
+        sub = pdf[pdf["doc_id"].isin(counts.index[counts == len(set(terms))])]
         _, avgdl = self._fstat(field)
         k1, b = self.k1, self.b
         if slop == 0:
@@ -899,9 +868,11 @@ class SearchEngine:
         base[nonzero] = cs[seg_start[nonzero]] - deltas[seg_start[nonzero]]
         flat_pos = cs - np.repeat(base, row_len)
         flat_doc = np.repeat(row_doc, row_len)
-        # per-row term code aligned to the flattened positions
+        # per-row term code aligned to the flattened positions; a row whose
+        # term is not in the phrase gets code -1 and so joins no key set
         term_code = {t: i for i, t in enumerate(dict.fromkeys(terms))}
-        row_code = sub["term"].map(term_code).to_numpy(dtype=np.int64)
+        row_code = pd.Categorical(sub["term"], categories=list(term_code)
+                                  ).codes.astype(np.int64)
         flat_code = np.repeat(row_code, row_len)
         SHIFT = np.int64(1) << np.int64(32)
         inter = None
@@ -941,10 +912,12 @@ class SearchEngine:
             return self._empty_hits()
         # Lucene PhraseWeight sums idf per term occurrence
         idf_sum = sum(self.idf("main", dfs[t]) for t in terms)
-        hits = self._phrase_driver("main", terms, offsets, uniq, dfs, idf_sum,
-                                   slop, size)
-        if hits is not None:
-            return hits
+        pdf = self._driver_working_set("main", uniq, positions=True, dfs=dfs)
+        if pdf is not None:
+            self.last_scorer = "driver"
+            return self._phrase_driver("main", pdf, terms, offsets, idf_sum,
+                                       slop, size)
+        self.last_scorer = "distributed"
         # Two-phase candidate plan (r2 rework — VERDICT r1 wrong #1): the r1
         # plan collect_list'ed positions for EVERY doc containing ANY phrase
         # term, so one frequent term shuffled the corpus's position blobs.
@@ -960,7 +933,7 @@ class SearchEngine:
         # when that bound is small (positions then never cross an exchange
         # pre-aggregation), else fall back to a shuffle semi-join.
         min_df = min(dfs[t] for t in uniq)
-        ids = cand_ids if min_df > self.qcfg.phrase_broadcast_max_candidates \
+        ids = cand_ids if min_df > self.PHRASE_BROADCAST_MAX_CANDIDATES \
             else F.broadcast(cand_ids)
         cand = (post.join(ids, "doc_id", "left_semi")
                 .groupBy("doc_id")
@@ -1024,33 +997,6 @@ class SearchEngine:
         ts = self._term_stats[field]
         return F.col("term_len") if "term_len" in ts.columns \
             else F.length("term")
-
-    def _fuzzy_expand_df(self, field: str, word: str) -> DataFrame:
-        """Expansion plan for one word: term-dictionary scan with JVM-side
-        levenshtein; top max_expansions by (boost desc, term asc) like
-        Lucene's TopTermsRewrite queue. boost = 1 − ed/min(len(term),
-        len(word))."""
-        max_d = fuzzy_auto_distance(word)
-        ts = self._term_stats[field]
-        tlen = self._term_len_col(field)
-        return (ts.filter(
-                    (tlen >= len(word) - max_d)
-                    & (tlen <= len(word) + max_d))
-                  .withColumn("ed", F.levenshtein(F.col("term"), F.lit(word)))
-                  .filter(F.col("ed") <= max_d)
-                  .withColumn("boost", F.when(F.col("ed") == 0, F.lit(1.0)).otherwise(
-                      F.lit(1.0) - F.col("ed").cast("double")
-                      / F.least(F.length("term"), F.lit(len(word))).cast("double")))
-                  .orderBy(F.desc("boost"), F.asc("term"))
-                  .limit(self.qcfg.fuzzy_max_expansions)
-                  .select("term", "boost", "df"))
-
-    def _fuzzy_expand(self, field: str, word: str) -> List[Tuple[str, float]]:
-        local = self._fuzzy_expand_local(field, [word])
-        if local is not None:
-            return local[0]
-        cand = self._fuzzy_expand_df(field, word).collect()
-        return [(r["term"], r["boost"], r["df"]) for r in cand]
 
     def _fuzzy_vocab_arrays(self, field: str):
         """Driver-side term dictionary as numpy arrays sorted by
@@ -1132,8 +1078,9 @@ class SearchEngine:
         |vocab| ≤ _HOT_DF_K and the driver serving path is active), the
         banded scan + levenshtein + top-k runs in numpy on the driver with
         no Spark job at all — one job per fuzzy query instead of two.
-        Result-identical to _fuzzy_expand_df: same band, same distance,
-        same boost expression, same (boost desc, term asc) top-k cut.
+        Result-identical to _fuzzy_expand_multi_df: same band, same
+        distance, same boost expression, same (boost desc, term asc) top-k
+        cut.
         Returns None when the dictionary exceeds the cache (the 100-TB
         regime) or the driver path is disabled — callers then run the
         distributed expansion plan exactly as before."""
@@ -1181,9 +1128,11 @@ class SearchEngine:
         return out
 
     def _fuzzy_expand_multi_df(self, field: str, words: List[str]) -> DataFrame:
-        """Expansion plan for several words in ONE term-dictionary scan (join
-        with a broadcast words frame + per-word rank window) instead of a
-        Spark job per word."""
+        """Distributed expansion plan for one or several words in ONE
+        term-dictionary scan (join with a broadcast words frame + per-word
+        rank window) instead of a Spark job per word: JVM-side levenshtein,
+        boost = 1 − ed/min(len(term), len(word)), top max_expansions per
+        word by (boost desc, term asc) like Lucene's TopTermsRewrite queue."""
         from pyspark.sql import Window
         wrows = [(i, w, fuzzy_auto_distance(w), len(w)) for i, w in enumerate(words)]
         wdf = self.spark.createDataFrame(
@@ -1229,7 +1178,7 @@ class SearchEngine:
             if not word:
                 return self._empty_hits()
             # expansion boosts are the idf multipliers
-            exp = self._fuzzy_expand("main", word)
+            exp = self._fuzzy_expand_multi("main", [word])[0]
             return self._score_query(
                 "main", [(0, t, boost) for t, boost, _ in exp], 1, size,
                 dfs={t: df for t, _, df in exp})
@@ -1434,16 +1383,16 @@ class SearchEngine:
         live engine over the same index directory shares the cache entries
         and falls back to disk reads (correctness unaffected) after this
         unpersists them."""
-        for name in getattr(self, "_views", {}).values():
+        for name in self._views.values():
             self.spark.catalog.dropTempView(name)
-        self._views = {}
+        self._views.clear()
         if self._cache:
             for df in list(self._postings.values()) + \
                     list(self._term_stats.values()):
                 df.unpersist()
-            for df, _ in getattr(self, "_packed_cache", {}).values():
+            for df, _ in self._packed_cache.values():
                 df.unpersist()
-        self._packed_cache = {}
+        self._packed_cache.clear()
 
     def register_views(self, prefix: str = "alps") -> Dict[str, str]:
         """Expose the index as SQL views (``{prefix}_docs``,

@@ -69,20 +69,10 @@ def test_wand_config_cached_vs_fetch_bit_identical(spark, built_index):
         assert w_cached.last_scorer == w_plain.last_scorer == "driver"
 
 
-def test_concurrent_first_queries_build_cache_once(spark, built_index):
-    """Two threads' first queries on a fresh cache=True engine must share ONE
-    full-postings fetch (double-checked lock), not each run it."""
-    eng = SearchEngine(spark, built_index.root, QueryConfig(), cache=True)
-    builds = []
-    build = eng._dcache_build
-
-    def counted(field):
-        builds.append(field)
-        return build(field)
-
-    eng._dcache_build = counted
-    eng._hot_dfs("main")  # keep the race on the cache build itself
-    n = min(16, (os.cpu_count() or 4) + 2)  # more threads than cores
+def _race_first_queries(eng):
+    """Run one first match query on ``eng`` from more threads than cores,
+    released together with a tiny switch interval; all must agree."""
+    n = min(16, (os.cpu_count() or 4) + 2)
     gate = threading.Barrier(n)
     out, errors = {}, []
 
@@ -105,9 +95,52 @@ def test_concurrent_first_queries_build_cache_once(spark, built_index):
         sys.setswitchinterval(old_interval)
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors
+    assert len({tuple(r) for r in out.values()}) == 1 and out[0]
+
+
+def test_concurrent_first_queries_build_cache_once(spark, built_index):
+    """Concurrent first queries on a fresh cache=True engine must share ONE
+    full-postings fetch (double-checked lock), not each run it."""
+    eng = SearchEngine(spark, built_index.root, QueryConfig(), cache=True)
+    builds = []
+    build = eng._dcache_build
+
+    def counted(field):
+        builds.append(field)
+        return build(field)
+
+    eng._dcache_build = counted
+    eng._hot_dfs("main")  # keep the race on the cache build itself
+    _race_first_queries(eng)
     assert builds == ["main"]
     assert eng._dcache_store["main"] is not None
-    assert len({tuple(r) for r in out.values()}) == 1 and out[0]
+
+
+class _SortCountingFrame:
+    """A term_stats DataFrame that records each orderBy — the hot-dict
+    build's top-K sort — and delegates everything else."""
+
+    def __init__(self, df):
+        self._df, self.sorts = df, []
+
+    def orderBy(self, *cols):
+        self.sorts.append(cols)
+        return self._df.orderBy(*cols)
+
+    def __getattr__(self, name):
+        return getattr(self._df, name)
+
+
+def test_concurrent_first_queries_build_hot_dict_once(spark, built_index):
+    """Concurrent first queries on a fresh engine must share ONE top-K
+    term_stats collect for the hot-df dict (double-checked lock): the
+    router's budget check, the postings-cache build and the fuzzy warm-up
+    thread all read it."""
+    eng = SearchEngine(spark, built_index.root, QueryConfig(), cache=True)
+    ts = eng._term_stats["main"] = _SortCountingFrame(eng._term_stats["main"])
+    _race_first_queries(eng)
+    assert len(ts.sorts) == 1, ts.sorts
+    assert eng._hot_df_cache["main"][0]
 
 
 def test_fetch_quotes_trailing_backslash(spark, built_index):

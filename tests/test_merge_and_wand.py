@@ -214,6 +214,12 @@ ROUTE_MATRIX = [
     ("bool_and", lambda e: e.bool_must_query("import json"), False),
     # a word duplicated into two clauses: one term, two clause rows
     ("bool_dup_term", lambda e: e.bool_must_query("def"), False),
+    ("phrase", lambda e: e.match_phrase_query("def main"), False),
+    # "as" is a stopword: a position gap inside the phrase
+    ("phrase_gap", lambda e: e.match_phrase_query("import numpy as np", 0),
+     False),
+    ("phrase_slop", lambda e: e.match_phrase_query("import numpy as np", 1),
+     False),
 ]
 
 
@@ -224,7 +230,7 @@ def test_route_matrix_scores_hex_identical(route_engines, case, call,
     """Every clause weight is multiplier · glibc-ln idf, computed once on the
     driver and fed to every route as the same double — so each route must
     return the SAME (doc_id, score.hex()) list, bit for bit, with no
-    tolerance."""
+    tolerance. Phrase folds one summed idf the same way on every route."""
     got = {}
     for route, (eng, label) in route_engines.items():
         if route == "wand" and not wand_ok:

@@ -6,6 +6,7 @@ invariants transfer."""
 
 import string
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from elasticsearch_alps_spark.analysis.analyzers import analyze, analyze_positions
@@ -347,10 +348,13 @@ def test_png_roundtrip_all_filters(h, w, filts, seed):
 ), min_size=1, max_size=60, unique_by=lambda t: (t[0], t[1])),
     st.booleans(), st.booleans())
 @settings(max_examples=150, deadline=None)
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 def test_phrase_freqs_vec_equals_loop(rows, pre_encoded, three_terms):
     """r8 vectorized exact-phrase scorer (engine._phrase_freqs_vec) must be
     bit-identical to the per-doc phrase_freq loop it replaced, for both
-    position encodings and for phrases with stopword-gap offsets."""
+    position encodings and for phrases with stopword-gap offsets. Two-term
+    phrases keep their "gamma" rows: a term outside the phrase must join no
+    key set, with no NaN-to-int cast on the way."""
     import numpy as np
     import pandas as pd
     import random

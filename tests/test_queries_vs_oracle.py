@@ -232,13 +232,14 @@ def test_register_views_sql_surface(spark, engine):
 @pytest.mark.parametrize("q,slop", [("def main", 0), ("import numpy as np", 1)])
 def test_phrase_driver_single_fetch_branch(spark, built_index, oracle_index,
                                            q, slop):
-    """Force the driver phrase path's single-fetch variant (candidate bound
-    over phrase_driver_candidate_fetch_max) — must match the oracle too."""
-    eng = SearchEngine(spark, built_index.root,
-                       QueryConfig(phrase_driver_candidate_fetch_max=0))
+    """An uncached default engine serves phrases from its one per-query
+    positions fetch — the only uncached driver path — and must match the
+    oracle."""
+    eng = SearchEngine(spark, built_index.root, QueryConfig())
     assert_hits_equal(eng.match_phrase_query(q, slop),
                       oracle_index.match_phrase_query(q, slop),
                       f"phrase_single_fetch[{q},{slop}]")
+    assert eng.last_scorer == "driver"
 
 
 def test_concurrent_queries_one_engine(spark, built_index, oracle_index):
@@ -278,20 +279,20 @@ def test_engine_close_releases_views_and_cache(spark, built_index):
 def test_fuzzy_local_expansion_equals_spark_plan(engine):
     """r8: the driver-side fuzzy expansion (full-vocab hot cache + numpy
     levenshtein) must reproduce the Spark expansion plan exactly — same
-    candidates, same boosts, same dfs, same (boost desc, term asc) top-k
-    cut — for every band width (max_d 0, 1 and 2) and for multi-word."""
+    candidates, same boosts, same dfs, in the same (boost desc, term asc)
+    top-k cut order — for every band width (max_d 0, 1 and 2), whether the
+    plan expands one word or several."""
     words = ["improt", "retrun", "pars", "de", "tokeniz", "uniq_100_1",
              "snake_case_token"]
     local = engine._fuzzy_expand_local("main", words)
     assert local is not None, "test vocab must fit the hot-df cache"
-    for wi, w in enumerate(words):
-        spark_rows = engine._fuzzy_expand_df("main", w).collect()
-        expected = [(r["term"], r["boost"], r["df"]) for r in spark_rows]
-        assert local[wi] == expected, f"expansion mismatch for {w!r}"
     multi = engine._fuzzy_expand_multi_df("main", words).collect()
     by_w = {i: [] for i in range(len(words))}
     for r in multi:
         by_w[r["widx"]].append((r["term"], r["boost"], r["df"]))
-    for wi in by_w:
-        assert sorted(local[wi], key=lambda c: (-c[1], c[0])) == \
-            sorted(by_w[wi], key=lambda c: (-c[1], c[0]))
+    for wi, w in enumerate(words):
+        expected = sorted(by_w[wi], key=lambda c: (-c[1], c[0]))
+        assert local[wi] == expected, f"expansion mismatch for {w!r}"
+        single = engine._fuzzy_expand_multi_df("main", [w]).collect()
+        assert sorted(((r["term"], r["boost"], r["df"]) for r in single),
+                      key=lambda c: (-c[1], c[0])) == expected, w

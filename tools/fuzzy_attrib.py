@@ -6,7 +6,7 @@ fuzzy path (the configuration qscale measures: driver scoring off)
 separately at two parallelism levels on an existing index:
 
   (a) expansion — the term-dictionary scan + levenshtein + top-50 collect
-      (engine._fuzzy_expand_df(...).collect())
+      (engine._fuzzy_expand_multi_df(...).collect())
   (b) scoring  — the distributed exhaustive scorer over the FIXED expansion
       clause set (engine._score_clauses(...).collect())
   (c) end-to-end fuzzy_query
@@ -53,12 +53,12 @@ def leg(cores: int, index_dir: str, words, reps: int) -> dict:
                        QueryConfig(driver_score_max_postings=0))
     out = {"cores": cores}
     for w in words:
-        eng._fuzzy_expand_df("main", w).collect()  # warm
+        eng._fuzzy_expand_multi_df("main", [w]).collect()  # warm
         ts = []
         for _ in range(reps):
             t0 = time.perf_counter()
             exp = [(r["term"], r["boost"], r["df"])
-                   for r in eng._fuzzy_expand_df("main", w).collect()]
+                   for r in eng._fuzzy_expand_multi_df("main", [w]).collect()]
             ts.append(time.perf_counter() - t0)
         out[f"{w}_expand"] = round(statistics.median(ts), 4)
         out[f"{w}_n_exp"] = len(exp)

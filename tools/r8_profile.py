@@ -131,7 +131,7 @@ def main() -> None:
         # fuzzy anatomy: expansion vs scoring
         for w in ("improt", "tokeniz"):
             t0 = time.time()
-            exp = eng._fuzzy_expand("main", w)
+            exp = eng._fuzzy_expand_multi("main", [w])[0]
             t_exp = time.time() - t0
             t0 = time.time()
             hits = eng._score_query(
