@@ -150,10 +150,6 @@ def main() -> None:
         # the driver path disabled so the DISTRIBUTED scorers are compared —
         # auto must track the better of the two per query
         mixed = mixed_queries
-        # pin the auto-scorer crossover for the bench (ADVICE r5: a
-        # load-dependent probe makes recorded numbers nonreproducible);
-        # 200k = the dev-box-measured anchor (queries/calibrate.py)
-        os.environ.setdefault("ALPS_WAND_MIN_DF", "200000")
         three = {
             "mixed_exh_p50": SearchEngine(
                 spark, paths.root, QueryConfig(driver_score_max_postings=0)),

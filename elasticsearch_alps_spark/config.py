@@ -216,19 +216,11 @@ class QueryConfig:
     fuzzy_multiword_minimum_should_match: str = "60%"  # search.py:295
     # block-max WAND scorer (must be result-identical). False / True /
     # "auto" — auto picks WAND per query when the largest clause df (O(1)
-    # from the hot-term cache) reaches wand_auto_min_df, else the
-    # distributed scorer (r4, VERDICT r3 next #2). Match queries only, and
-    # only past the driver budget: an under-budget query is driver-served.
+    # from the hot-term cache) reaches the constant
+    # SearchEngine.WAND_AUTO_MIN_DF, else the distributed scorer (r4,
+    # VERDICT r3 next #2). Match queries only, and only past the driver
+    # budget: an under-budget query is driver-served.
     use_wand: Union[bool, str] = False
-    # The crossover df is a MACHINE property (Python bucket-decode overhead
-    # vs JVM codegen scan speed). None (default) self-calibrates once per
-    # process from a micro-probe anchored to the dev box's measured
-    # crossover (queries/calibrate.py — r5, VERDICT r4 next #4); an int
-    # pins it (the r3-measured dev-box value was 200_000: df ≈ 6×10⁴ loses
-    # 0.77–0.83×, 10⁴–10⁵ parity, 10⁶ wins 1.23–1.48×). At 100-TB scale
-    # every common token is far past either. Both scorers are result-
-    # identical, so this knob is performance-only.
-    wand_auto_min_df: Optional[int] = None
 
     def __post_init__(self):
         if not isinstance(self.match_phrase_slop, list):

@@ -474,20 +474,6 @@ def build_index(spark: SparkSession, docs_df: DataFrame, out_dir: str,
         "build_sec": round(time.time() - t0, 3),
     }
     fsio.write_json(paths.stats, stats, spark=spark, indent=2)
-    try:
-        # pin the WAND/exhaustive crossover at BUILD time (ADVICE r5: a
-        # query-time probe on a loaded box skews scorer choice for the
-        # process lifetime); serving reads this sidecar before probing
-        from elasticsearch_alps_spark.queries.calibrate import (
-            persist_calibration,
-        )
-        tc0 = time.time()
-        persist_calibration(spark, paths.lineage_dir)
-        phase["calibration"] = round(time.time() - tc0, 3)
-    except Exception:
-        logging.getLogger(__name__).exception(
-            "calibration sidecar write failed (query-time probe will "
-            "self-calibrate instead)")
     phase["total"] = round(time.time() - t0, 3)
     try:
         _write_lineage(paths, "phase_times", phase)

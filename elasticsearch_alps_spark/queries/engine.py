@@ -106,7 +106,8 @@ class SearchEngine:
         # action — no second job, r2 VERDICT wrong #8), or a recount plan as
         # last resort. Thread-LOCAL so a serving tier can run concurrent
         # queries through one engine without cross-talk (Spark job submission
-        # itself is thread-safe).
+        # itself is thread-safe). The scorer label (last_scorer) lives there
+        # too, so one thread never reads the route of another's query.
         self._totals = threading.local()
         # fuzzy vocab arrays may be pre-built by a background thread while
         # the driver postings cache fetch waits on the JVM — both the lock
@@ -137,11 +138,24 @@ class SearchEngine:
 
     def _set_total(self, df: Optional[DataFrame] = None,
                    count: Optional[int] = None, obs=None) -> None:
-        """Reset ALL total-hits sources (a stale count from the previous
-        query must never leak into the next response)."""
+        """Reset ALL total-hits sources and the scorer label (a stale count
+        or route from the previous query must never leak into the next
+        response); a scorer sets its label after its totals (_routed)."""
         self._totals.df = df
         self._totals.count = count
         self._totals.obs = obs
+        self._totals.scorer = None
+
+    def _routed(self, scorer: str, hits: DataFrame) -> DataFrame:
+        self._totals.scorer = scorer
+        return hits
+
+    @property
+    def last_scorer(self) -> Optional[str]:
+        """Which scorer served this thread's last query: "driver" |
+        "distributed" | "wand", or None when no scorer ran (stopword-only
+        or df-0 queries, gated term/wildcard, wildcard, match_all)."""
+        return getattr(self._totals, "scorer", None)
 
     @property
     def _last_total_df(self):
@@ -246,9 +260,6 @@ class SearchEngine:
     # ~300k distinct terms. At 100-TB vocabularies the dict simply holds
     # the hottest 400k terms and routing behaves as before.
     _HOT_DF_K = 400_000
-    # which scorer served the last clause query: "driver" | "distributed" |
-    # "wand" (diagnostics + use_wand="auto" tests)
-    last_scorer: Optional[str] = None
 
     def _postings_view(self, field: str) -> str:
         """Register (once) the postings DataFrame as a temp view so driver
@@ -477,6 +488,12 @@ class SearchEngine:
     # its upper bound (min term df) is at most this many rows (~8 B/row →
     # ≤40 MB); above it the semi-join shuffles instead
     PHRASE_BROADCAST_MAX_CANDIDATES = 5_000_000
+    # use_wand="auto" picks WAND when the largest clause df reaches this:
+    # the WAND/distributed crossover measured by tools/wand_crossover.py
+    # (BENCH/BASELINE.md r3: df ≈ 6×10⁴ loses 0.77–0.83×, ≈ 10⁵ parity,
+    # ≈ 10⁶ wins 1.23–1.48×). Both scorers are result-identical, so it
+    # only moves speed.
+    WAND_AUTO_MIN_DF = 200_000
 
     @staticmethod
     def _canon_jidx(clause_rows) -> Dict[Tuple[int, str], int]:
@@ -565,23 +582,24 @@ class SearchEngine:
         use_wand = wand and self._resolve_use_wand(field, terms)
         pdf = self._driver_working_set(field, terms, dfs=dfs)
         if pdf is not None:
-            self.last_scorer = "driver"
             if not len(pdf):
-                return self._empty_hits()
+                return self._routed("driver", self._empty_hits())
             # the working set is complete (under budget): its per-term row
             # counts ARE the df
             clauses = self._clause_weights(field, clause_mults,
                                            pdf["term"].value_counts())
-            return self._driver_score_pdf(field, pdf, clauses, required, size)
-        self.last_scorer = "wand" if use_wand else "distributed"
+            return self._routed("driver", self._driver_score_pdf(
+                field, pdf, clauses, required, size))
         if dfs is None:
             dfs = self._df_lookup(field, terms)
         if not any(dfs.get(t, 0) for t in terms):
             return self._empty_hits()
         clauses = self._clause_weights(field, clause_mults, dfs)
         if use_wand:
-            return self._wand(field, clauses, size, required)
-        return self._score_clauses(field, clauses, required, size)
+            return self._routed("wand",
+                                self._wand(field, clauses, size, required))
+        return self._routed("distributed", self._score_clauses(
+            field, clauses, required, size))
 
     def _clause_weights(self, field: str, clause_mults: List[Clause],
                         dfs) -> List[Clause]:
@@ -670,17 +688,18 @@ class SearchEngine:
 
     def _resolve_use_wand(self, field: str, terms: List[str]) -> bool:
         """``use_wand="auto"`` (r4, VERDICT r3 next #2): pick WAND per query
-        when the LARGEST clause df reaches qcfg.wand_auto_min_df — pruning
-        pays exactly where posting lists get long (measured crossover,
-        BENCH/BASELINE.md r3: df≈6×10⁴ loses, ≈10⁵ parity, ≈10⁶ wins) — else
-        the distributed scorer. The decision is O(1) from the hot-term
-        cache except in one regime — every query term outside the top-K dict
-        while the K-th df itself clears the threshold — where a pruned
-        term_stats lookup resolves it exactly (ADVICE r4: assuming the
-        ceiling there misrouted all rare-term queries to WAND on corpora
-        whose 50k-th term is that hot). WAND also needs the packed blocks
-        on disk."""
+        when the LARGEST clause df reaches the constant WAND_AUTO_MIN_DF
+        (the measured crossover: pruning pays exactly where posting lists
+        get long) — else the distributed scorer.
+        The decision is O(1) from the hot-term cache except in one regime —
+        every query term outside the top-K dict while the K-th df itself
+        clears the threshold — where a pruned term_stats lookup resolves it
+        exactly (ADVICE r4: assuming the ceiling there misrouted all
+        rare-term queries to WAND on corpora whose K-th term is that hot).
+        WAND also needs the packed blocks on disk and a norms field."""
         mode = self.qcfg.use_wand
+        if not mode:
+            return False
         src = self._field_src.get(field, field)
         packed = self.paths.packed(src)
         has_packed = "://" in packed or os.path.exists(packed)
@@ -690,27 +709,22 @@ class SearchEngine:
             # its max-score bounds use the norms/dl BM25 formula, which is
             # WRONG for a norms-free field (ExtraField builds both ways:
             # build_packed=False, norms=False).
-            if mode and not self._norms_enabled(field):
+            if not self._norms_enabled(field):
                 raise ValueError(
                     f"use_wand=True is invalid for field {field!r}: norms "
                     "are disabled (docs-only scoring), and WAND's max-score "
                     "bounds assume the norms/dl BM25 formula. Use "
                     "use_wand=False or 'auto' (auto never picks WAND here).")
-            if mode and not has_packed:
+            if not has_packed:
                 raise ValueError(
                     f"use_wand=True but field {field!r} has no packed "
                     f"blocks at {packed} (index built with "
                     "build_packed=False?). Rebuild with build_packed=True "
                     "or use use_wand=False / 'auto'.")
-            return bool(mode)
+            return True
         if not has_packed or not self._norms_enabled(field):
             return False
-        thresh = self.qcfg.wand_auto_min_df
-        if thresh is None:  # env pin → build-time sidecar → process probe
-            from elasticsearch_alps_spark.queries.calibrate import (
-                resolve_min_df,
-            )
-            thresh = resolve_min_df(self.spark, self.paths.lineage_dir)
+        thresh = self.WAND_AUTO_MIN_DF
         hot, ceiling = self._hot_dfs(field)
         if any(hot.get(t, 0) >= thresh for t in terms):
             return True  # exact: a hot term alone clears the bar
@@ -719,7 +733,7 @@ class SearchEngine:
             # hot answers exactly (ceiling==0 → full vocabulary: absent
             # terms have df 0), or no absent term can reach the threshold
             return False
-        # ambiguous regime (ADVICE r4): the 50k-th df is ≥ the threshold, so
+        # ambiguous regime (ADVICE r4): the K-th df is ≥ the threshold, so
         # "absent ⇒ ceiling" would misroute every rare-term query to WAND —
         # resolve with the tiny pruned term_stats lookup instead
         dfs = self._df_lookup(field, missing)
@@ -914,10 +928,8 @@ class SearchEngine:
         idf_sum = sum(self.idf("main", dfs[t]) for t in terms)
         pdf = self._driver_working_set("main", uniq, positions=True, dfs=dfs)
         if pdf is not None:
-            self.last_scorer = "driver"
-            return self._phrase_driver("main", pdf, terms, offsets, idf_sum,
-                                       slop, size)
-        self.last_scorer = "distributed"
+            return self._routed("driver", self._phrase_driver(
+                "main", pdf, terms, offsets, idf_sum, slop, size))
         # Two-phase candidate plan (r2 rework — VERDICT r1 wrong #1): the r1
         # plan collect_list'ed positions for EVERY doc containing ANY phrase
         # term, so one frequent term shuffled the corpus's position blobs.
@@ -960,8 +972,9 @@ class SearchEngine:
                       .filter(F.col("freq") > 0.0)
                       .withColumn("score", F.lit(idf_sum) * self._tf_norm_col("main")))
         scored, obs = self._observe_total(scored)
-        return (scored.select("doc_id", "score")
-                      .orderBy(F.desc("score"), F.asc("doc_id")).limit(size))
+        return self._routed("distributed", scored.select("doc_id", "score")
+                            .orderBy(F.desc("score"), F.asc("doc_id"))
+                            .limit(size))
 
     def term_query_exact(self, text: str, size: Optional[int] = None) -> DataFrame:
         """Q5 (search.py:207-242): single-word gate; manual lowercase only (the
@@ -1000,56 +1013,58 @@ class SearchEngine:
 
     def _fuzzy_vocab_arrays(self, field: str):
         """Driver-side term dictionary as numpy arrays sorted by
-        (term_len, term): (lens, terms, dfs, padded char-code matrix).
-        Built once per field from the full-vocabulary hot-df cache; only
-        valid when that cache holds the WHOLE dictionary (ceiling == 0)."""
-        with self._fuzzy_vocab_lock:
-            return self._fuzzy_vocab_arrays_locked(field,
-                                                   self._fuzzy_vocab_cache)
-
-    def _fuzzy_vocab_arrays_locked(self, field: str, cached: dict):
+        (term_len, term): (lens, terms, dfs, padded char-code matrix,
+        char signatures). Built once per field, under a double-checked
+        lock, from the full-vocabulary hot-df cache; only valid when that
+        cache holds the WHOLE dictionary (ceiling == 0)."""
+        cached = self._fuzzy_vocab_cache
         if field not in cached:
-            hot, _ = self._hot_dfs(field)
-            if hot:
-                # r8.2: numpy end to end — np.lexsort over a fixed-width
-                # UTF-32 ("U") array gives the same (len, term) order as the
-                # Python sort (numpy U-comparison is codepoint order, == str
-                # comparison), and the U<width> buffer already IS the
-                # null-padded char-code matrix, so the scatter-fill
-                # disappears. Build time 1.1 s → ~0.5 s at 300k terms
-                # (this was the whole first-fuzzy-query latency tail).
-                tu = np.array(list(hot.keys()), dtype="U")
-                dfs_u = np.fromiter(hot.values(), dtype=np.int64,
-                                    count=len(hot))
-                lens_u = np.char.str_len(tu)
-                order = np.lexsort((tu, lens_u))
-                terms = tu[order]
-                dfs = dfs_u[order]
-                lens = lens_u[order].astype(np.int64)
-                width = int(lens[-1])
-                # pad is 0 (U-dtype null padding) instead of the old -1:
-                # tokens never contain NUL, and the DP answer only reads
-                # columns ≤ term_len, so the pad value is inert either way
-                mat = (np.ascontiguousarray(terms.astype(f"U{width}"))
-                       .view(np.uint32).reshape(len(terms), width)
-                       .astype(np.int32))
-                # hashed char-count signature (26+ buckets): one edit
-                # changes at most two bucket counts by 1 each, so
-                # L1(sig_a, sig_b) ≤ 2d is NECESSARY for edit distance ≤ d —
-                # a cheap vectorized prefilter that empties the
-                # ~|vocab|-sized DP band a long rare word would otherwise
-                # pay (measured ~0.8 s → ~0.1 s)
-                rows_idx = np.repeat(np.arange(len(terms)), lens)
-                sig = np.bincount(rows_idx * 32 + (mat[mat > 0] % 32),
-                                  minlength=len(terms) * 32
-                                  ).reshape(len(terms), 32).astype(np.int16)
-            else:
-                terms = np.zeros(0, dtype="U1")
-                dfs = np.zeros(0, dtype=np.int64)
-                lens = np.zeros(0, dtype=np.int64)
-                mat = np.zeros((0, 0), dtype=np.int32)
-                sig = np.zeros((0, 32), dtype=np.int16)
-            cached[field] = (lens, terms, dfs, mat, sig)
+            with self._fuzzy_vocab_lock:
+                if field not in cached:
+                    hot, _ = self._hot_dfs(field)
+                    if hot:
+                        # r8.2: numpy end to end — np.lexsort over a fixed-
+                        # width UTF-32 ("U") array gives the same (len, term)
+                        # order as the Python sort (numpy U-comparison is
+                        # codepoint order, == str comparison), and the
+                        # U<width> buffer already IS the null-padded
+                        # char-code matrix, so the scatter-fill disappears.
+                        # Build time 1.1 s → ~0.5 s at 300k terms (this was
+                        # the whole first-fuzzy-query latency tail).
+                        tu = np.array(list(hot.keys()), dtype="U")
+                        dfs_u = np.fromiter(hot.values(), dtype=np.int64,
+                                            count=len(hot))
+                        lens_u = np.char.str_len(tu)
+                        order = np.lexsort((tu, lens_u))
+                        terms = tu[order]
+                        dfs = dfs_u[order]
+                        lens = lens_u[order].astype(np.int64)
+                        width = int(lens[-1])
+                        # pad is 0 (U-dtype null padding) instead of the old
+                        # -1: tokens never contain NUL, and the DP answer
+                        # only reads columns ≤ term_len, so the pad value is
+                        # inert either way
+                        mat = (np.ascontiguousarray(terms.astype(f"U{width}"))
+                               .view(np.uint32).reshape(len(terms), width)
+                               .astype(np.int32))
+                        # hashed char-count signature (26+ buckets): one edit
+                        # changes at most two bucket counts by 1 each, so
+                        # L1(sig_a, sig_b) ≤ 2d is NECESSARY for edit
+                        # distance ≤ d — a cheap vectorized prefilter that
+                        # empties the ~|vocab|-sized DP band a long rare
+                        # word would otherwise pay (measured ~0.8 s → ~0.1 s)
+                        rows_idx = np.repeat(np.arange(len(terms)), lens)
+                        sig = np.bincount(
+                            rows_idx * 32 + (mat[mat > 0] % 32),
+                            minlength=len(terms) * 32,
+                        ).reshape(len(terms), 32).astype(np.int16)
+                    else:
+                        terms = np.zeros(0, dtype="U1")
+                        dfs = np.zeros(0, dtype=np.int64)
+                        lens = np.zeros(0, dtype=np.int64)
+                        mat = np.zeros((0, 0), dtype=np.int32)
+                        sig = np.zeros((0, 32), dtype=np.int16)
+                    cached[field] = (lens, terms, dfs, mat, sig)
         return cached[field]
 
     @staticmethod
@@ -1076,11 +1091,10 @@ class SearchEngine:
         """Driver-side expansion (r8): when the hot-df cache already holds
         the ENTIRE term dictionary (ceiling == 0 — always true once
         |vocab| ≤ _HOT_DF_K and the driver serving path is active), the
-        banded scan + levenshtein + top-k runs in numpy on the driver with
-        no Spark job at all — one job per fuzzy query instead of two.
-        Result-identical to _fuzzy_expand_multi_df: same band, same
-        distance, same boost expression, same (boost desc, term asc) top-k
-        cut.
+        banded scan + levenshtein runs in numpy on the driver with no
+        Spark job at all. Returns the same uncut candidates as
+        _fuzzy_expand_multi_df: same band, same distance, same boost
+        expression (_fuzzy_expand_multi cuts both the same way).
         Returns None when the dictionary exceeds the cache (the 100-TB
         regime) or the driver path is disabled — callers then run the
         distributed expansion plan exactly as before."""
@@ -1123,17 +1137,17 @@ class SearchEngine:
                 boost = (1.0 if e == 0
                          else 1.0 - float(e) / float(min(len(t), len(word))))
                 cand.append((t, boost, int(dfs[band_ix[k]])))
-            cand.sort(key=lambda c: (-c[1], c[0]))
-            out[wi] = cand[:self.qcfg.fuzzy_max_expansions]
+            out[wi] = cand
         return out
 
     def _fuzzy_expand_multi_df(self, field: str, words: List[str]) -> DataFrame:
-        """Distributed expansion plan for one or several words in ONE
-        term-dictionary scan (join with a broadcast words frame + per-word
-        rank window) instead of a Spark job per word: JVM-side levenshtein,
-        boost = 1 − ed/min(len(term), len(word)), top max_expansions per
-        word by (boost desc, term asc) like Lucene's TopTermsRewrite queue."""
-        from pyspark.sql import Window
+        """Distributed expansion candidates for one or several words in ONE
+        term-dictionary scan (join with a broadcast words frame): every
+        (widx, term, boost, df) within the word's edit distance, by
+        JVM-side levenshtein, boost = 1 − ed/min(len(term), len(word)).
+        No window rank: the candidates are bounded by each word's
+        edit-distance neighbourhood, so the top-k cut runs on the driver
+        (_fuzzy_expand_multi) without a shuffle."""
         wrows = [(i, w, fuzzy_auto_distance(w), len(w)) for i, w in enumerate(words)]
         wdf = self.spark.createDataFrame(
             wrows, "widx int, word string, maxd int, wlen int")
@@ -1143,7 +1157,7 @@ class SearchEngine:
         # into the scan, but this pre-filter can (pushed parquet predicate)
         lo = min(len(w) - d for _, w, d, _ in wrows)
         hi = max(len(w) + d for _, w, d, _ in wrows)
-        cand = (ts.filter((tlen >= lo) & (tlen <= hi))
+        return (ts.filter((tlen >= lo) & (tlen <= hi))
                 .join(F.broadcast(wdf),
                       (tlen >= F.col("wlen") - F.col("maxd"))
                       & (tlen <= F.col("wlen") + F.col("maxd")))
@@ -1151,21 +1165,21 @@ class SearchEngine:
                 .filter(F.col("ed") <= F.col("maxd"))
                 .withColumn("boost", F.when(F.col("ed") == 0, F.lit(1.0)).otherwise(
                     F.lit(1.0) - F.col("ed").cast("double")
-                    / F.least(F.length("term"), F.col("wlen")).cast("double"))))
-        w = Window.partitionBy("widx").orderBy(F.desc("boost"), F.asc("term"))
-        return (cand.withColumn("rn", F.row_number().over(w))
-                    .filter(F.col("rn") <= self.qcfg.fuzzy_max_expansions)
-                    .select("widx", "term", "boost", "df"))
+                    / F.least(F.length("term"), F.col("wlen")).cast("double")))
+                .select("widx", "term", "boost", "df"))
 
     def _fuzzy_expand_multi(self, field: str, words: List[str]) -> Dict[int, list]:
-        local = self._fuzzy_expand_local(field, words)
-        if local is not None:
-            return local
-        top = self._fuzzy_expand_multi_df(field, words).collect()
-        out: Dict[int, list] = {i: [] for i in range(len(words))}
-        for r in top:
-            out[r["widx"]].append((r["term"], r["boost"], r["df"]))
-        return out
+        """Each word's top fuzzy_max_expansions (term, boost, df) by (boost
+        desc, term asc), like Lucene's TopTermsRewrite queue — cut on the
+        driver over the numpy or the distributed candidates. Python str
+        order is code-point order, which is Spark's UTF-8 binary order."""
+        cand = self._fuzzy_expand_local(field, words)
+        if cand is None:
+            cand = {i: [] for i in range(len(words))}
+            for r in self._fuzzy_expand_multi_df(field, words).collect():
+                cand[r["widx"]].append((r["term"], r["boost"], r["df"]))
+        return {wi: sorted(c, key=lambda e: (-e[1], e[0]))
+                [:self.qcfg.fuzzy_max_expansions] for wi, c in cand.items()}
 
     def fuzzy_query(self, text: str, size: Optional[int] = None) -> DataFrame:
         """Q7 (search.py:282-349). Single word: term-level fuzzy (NO analysis of

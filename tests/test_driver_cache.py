@@ -69,8 +69,8 @@ def test_wand_config_cached_vs_fetch_bit_identical(spark, built_index):
         assert w_cached.last_scorer == w_plain.last_scorer == "driver"
 
 
-def _race_first_queries(eng):
-    """Run one first match query on ``eng`` from more threads than cores,
+def _race_first_queries(eng, query=lambda e: e.match_query("def")):
+    """Run one first query on ``eng`` from more threads than cores,
     released together with a tiny switch interval; all must agree."""
     n = min(16, (os.cpu_count() or 4) + 2)
     gate = threading.Barrier(n)
@@ -79,7 +79,7 @@ def _race_first_queries(eng):
     def run(i):
         try:
             gate.wait(timeout=60)
-            out[i] = _rows(eng.match_query("def"))
+            out[i] = _rows(query(eng))
         except Exception as e:  # surfaced by the assert below
             errors.append(e)
 
@@ -141,6 +141,75 @@ def test_concurrent_first_queries_build_hot_dict_once(spark, built_index):
     _race_first_queries(eng)
     assert len(ts.sorts) == 1, ts.sorts
     assert eng._hot_df_cache["main"][0]
+
+
+class _SetCountingDict(dict):
+    """A lazily built per-field store that records each key it stores."""
+
+    def __init__(self):
+        super().__init__()
+        self.sets = []
+
+    def __setitem__(self, key, value):
+        self.sets.append(key)
+        super().__setitem__(key, value)
+
+
+def test_concurrent_first_fuzzy_queries_build_vocab_once(spark, built_index):
+    """Concurrent first fuzzy queries (and the cache build's warm-up
+    thread) must share ONE vocabulary-array build (double-checked lock)."""
+    eng = SearchEngine(spark, built_index.root, QueryConfig(), cache=True)
+    eng._fuzzy_vocab_cache = _SetCountingDict()
+    _race_first_queries(eng, lambda e: e.fuzzy_query("improt"))
+    assert eng._fuzzy_vocab_cache.sets == ["main"]
+
+
+def test_last_scorer_is_per_thread_and_reset(spark, built_index):
+    """last_scorer is the route of THIS thread's last query: thread A's
+    driver query must not read thread B's later distributed route on the
+    same engine, and a query that runs no scorer (stopword-only match)
+    leaves None, not the previous label."""
+    probe = SearchEngine(spark, built_index.root, QueryConfig())
+    dfs = probe._df_lookup("main", ["uniq_100_1", "def"])
+    assert dfs["uniq_100_1"] < dfs["def"]
+    # budget between the rare and the hot term: rare → driver, hot →
+    # distributed
+    eng = SearchEngine(spark, built_index.root, QueryConfig(
+        driver_score_max_postings=dfs["def"] - 1))
+    a_ran, b_ran = threading.Event(), threading.Event()
+    seen, errors = {}, []
+
+    def thread_a():
+        try:
+            eng.match_query("uniq_100_1").collect()
+            a_ran.set()
+            assert b_ran.wait(timeout=300)
+            seen["a"] = eng.last_scorer
+            eng.match_query("the of").collect()
+            seen["a_stopwords"] = eng.last_scorer
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+            a_ran.set()
+
+    def thread_b():
+        try:
+            assert a_ran.wait(timeout=300)
+            eng.match_query("def").collect()
+            seen["b"] = eng.last_scorer
+        except Exception as e:
+            errors.append(e)
+        finally:
+            b_ran.set()
+
+    threads = [threading.Thread(target=thread_a),
+               threading.Thread(target=thread_b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert seen == {"a": "driver", "b": "distributed", "a_stopwords": None}
 
 
 def test_fetch_quotes_trailing_backslash(spark, built_index):

@@ -243,8 +243,9 @@ def test_extra_url_field_build_and_query(spark, corpus_df, tmp_path):
         eng_w.match_query("example py", field="url").collect()
     # auto never routes a norms-free field to WAND, whatever the df
     eng_a = SearchEngine(spark, paths.root,
-                         QueryConfig(use_wand="auto", wand_auto_min_df=1,
+                         QueryConfig(use_wand="auto",
                                      driver_score_max_postings=0))
+    eng_a.WAND_AUTO_MIN_DF = 1
     eng_a.match_query("example py", field="url").collect()
     assert eng_a.last_scorer != "wand"
 

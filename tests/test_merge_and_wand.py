@@ -306,16 +306,18 @@ def test_wand_conjunctive_identical_to_exhaustive(spark, built_index, op, msm):
 
 class TestWandAuto:
     """use_wand="auto" (r4, VERDICT r3 next #2): per-query scorer choice on
-    the max clause df, calibrated from the measured crossover
-    (BENCH/BASELINE.md r3 — pruning wins only once posting lists get long)."""
+    the max clause df against SearchEngine.WAND_AUTO_MIN_DF, the measured
+    crossover (BENCH/BASELINE.md r3 — pruning wins only once posting lists
+    get long). Tests move the threshold per instance."""
 
     def test_auto_matches_better_scorer_per_query(self, spark, built_index):
         # threshold 5 on this corpus: "def" (hot, df ≫ 5) must take the WAND
         # path; "uniq_100_1" (df 1) must take the distributed scorer —
         # same engine, per-query decision
         auto = SearchEngine(spark, built_index.root,
-                            QueryConfig(use_wand="auto", wand_auto_min_df=5,
+                            QueryConfig(use_wand="auto",
                                         driver_score_max_postings=0))
+        auto.WAND_AUTO_MIN_DF = 5
         got_hot = _ranked(auto.match_query("def").collect())
         assert auto.last_scorer == "wand"
         got_rare = _ranked(auto.match_query("uniq_100_1").collect())
@@ -332,8 +334,8 @@ class TestWandAuto:
                                                        built_index):
         eng = SearchEngine(spark, built_index.root,
                            QueryConfig(use_wand="auto",
-                                       wand_auto_min_df=10**9,
                                        driver_score_max_postings=0))
+        eng.WAND_AUTO_MIN_DF = 10**9
         eng.match_query("def").collect()
         assert eng.last_scorer == "distributed"
 
@@ -343,148 +345,24 @@ class TestWandAuto:
         # driver-side even in auto mode (auto only redirects the distributed
         # plan)
         eng = SearchEngine(spark, built_index.root,
-                           QueryConfig(use_wand="auto", wand_auto_min_df=10**9))
+                           QueryConfig(use_wand="auto"))
+        eng.WAND_AUTO_MIN_DF = 10**9
         eng.match_query("parse json").collect()
         assert eng.last_scorer == "driver"
 
-    def test_auto_default_self_calibrates(self, spark, built_index):
-        # r5 (VERDICT r4 next #4): wand_auto_min_df=None (the new default)
-        # derives the threshold from the per-machine micro-probe, clamped
-        # to [20k, 2M]; on this small corpus every df is far below any
-        # clamped value, so auto must pick the non-WAND path — and the
-        # probe result must be cached process-wide
-        from elasticsearch_alps_spark.queries import calibrate
+    def test_auto_default_constant_keeps_small_corpus_distributed(
+            self, spark, built_index):
+        # the default crossover is the constant 200k; every df of this
+        # small corpus is far below it, so auto at budget 0 must take the
+        # distributed scorer even for its hottest term
         eng = SearchEngine(spark, built_index.root,
                            QueryConfig(use_wand="auto",
                                        driver_score_max_postings=0))
-        assert eng.qcfg.wand_auto_min_df is None
+        assert eng.WAND_AUTO_MIN_DF == SearchEngine.WAND_AUTO_MIN_DF == 200_000
+        hot, _ = eng._hot_dfs("main")
+        assert max(hot.values()) < eng.WAND_AUTO_MIN_DF
         eng.match_query("def").collect()
         assert eng.last_scorer == "distributed"
-        got = calibrate._PROBE_CACHE["min_df"]
-        assert calibrate.MIN_DF_FLOOR <= got <= calibrate.MIN_DF_CEIL
-        assert calibrate.calibrated_min_df(spark) == got  # cached, no re-probe
-
-    def test_calibration_scales_with_probe_ratio(self, spark, monkeypatch):
-        # relatively slower Python (ratio up) must RAISE the crossover
-        # threshold; relatively faster must lower it; clamps bound both
-        from elasticsearch_alps_spark.queries import calibrate
-        for ratio, expect in [
-                (calibrate.REF_PROBE_RATIO, calibrate.REF_CROSSOVER_DF),
-                (calibrate.REF_PROBE_RATIO * 4,
-                 calibrate.REF_CROSSOVER_DF * 4),
-                (calibrate.REF_PROBE_RATIO * 1000, calibrate.MIN_DF_CEIL),
-                (calibrate.REF_PROBE_RATIO / 1000, calibrate.MIN_DF_FLOOR)]:
-            monkeypatch.setattr(calibrate, "probe_ratio", lambda s, r=ratio: r)
-            assert calibrate.calibrated_min_df(spark, force=True) == expect
-        calibrate._PROBE_CACHE.clear()  # drop monkeypatched values
-
-    def test_resolve_min_df_env_sidecar_probe_order(self, spark, built_index,
-                                                    monkeypatch, tmp_path):
-        # ADVICE r5: the None threshold resolves env pin → build-time
-        # sidecar → per-process probe, so benchmarks pin and serving
-        # inherits a load-independent build-time value
-        import json
-        import os
-
-        from elasticsearch_alps_spark.queries import calibrate
-        monkeypatch.setenv(calibrate.ENV_PIN, "123456")
-        assert calibrate.resolve_min_df(
-            spark, built_index.lineage_dir) == 123456
-        monkeypatch.delenv(calibrate.ENV_PIN)
-        # build_index wrote the sidecar; prove it is actually read
-        p = os.path.join(built_index.lineage_dir, calibrate.SIDECAR)
-        assert os.path.exists(p)
-        side = json.load(open(p))
-        assert calibrate.MIN_DF_FLOOR <= side["wand_auto_min_df"] \
-            <= calibrate.MIN_DF_CEIL
-        json.dump({"wand_auto_min_df": 777}, open(p, "w"))
-        try:
-            assert calibrate.resolve_min_df(
-                spark, built_index.lineage_dir) == 777
-        finally:
-            json.dump(side, open(p, "w"), indent=2)
-        # no env, no sidecar → falls back to the (cached) process probe
-        assert calibrate.resolve_min_df(spark, str(tmp_path)) \
-            == calibrate.calibrated_min_df(spark)
-
-    def test_sidecar_serves_fresh_process_without_probe(self, built_index):
-        """r7 (VERDICT r6 next #6): a FRESH serving process with no env pin
-        must inherit the build-time calibration sidecar — threshold equals
-        the sidecar value and the per-process probe never runs
-        (calibrate._PROBE_CACHE stays empty). Subprocess, not monkeypatch:
-        this is the cross-process contract the sidecar exists for."""
-        import json
-        import os
-        import subprocess
-        import sys
-        import textwrap
-
-        from elasticsearch_alps_spark.queries import calibrate
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        side = json.load(open(os.path.join(built_index.lineage_dir,
-                                           calibrate.SIDECAR)))
-        script = textwrap.dedent(f"""
-            import json, os, sys
-            sys.path.insert(0, {repo!r})
-            os.environ.pop("ALPS_WAND_MIN_DF", None)
-            from pyspark.sql import SparkSession
-            from elasticsearch_alps_spark.session import ship_package
-            from elasticsearch_alps_spark.config import QueryConfig
-            from elasticsearch_alps_spark.queries import calibrate
-            from elasticsearch_alps_spark.queries.engine import SearchEngine
-            spark = (SparkSession.builder.master("local[2]")
-                     .config("spark.sql.shuffle.partitions", "2")
-                     .config("spark.ui.enabled", "false").getOrCreate())
-            ship_package(spark)
-            eng = SearchEngine(spark, {built_index.root!r},
-                               QueryConfig(use_wand="auto",
-                                           driver_score_max_postings=0))
-            eng.match_query("def parse").collect()
-            resolved = calibrate.resolve_min_df(
-                spark, {built_index.lineage_dir!r})
-            print("RESULT:" + json.dumps({{
-                "probe_cache": dict(calibrate._PROBE_CACHE),
-                "resolved": resolved, "scorer": eng.last_scorer}}))
-            spark.stop()
-        """)
-        env = {k: v for k, v in os.environ.items()
-               if k != "ALPS_WAND_MIN_DF"}
-        p = subprocess.run([sys.executable, "-c", script], env=env,
-                           capture_output=True, text=True, timeout=300)
-        assert p.returncode == 0, p.stderr[-2000:]
-        line = [ln for ln in p.stdout.splitlines()
-                if ln.startswith("RESULT:")][0]
-        got = json.loads(line[len("RESULT:"):])
-        assert got["resolved"] == side["wand_auto_min_df"]
-        assert got["probe_cache"] == {}, "probe must not run when sidecar exists"
-        assert got["scorer"] in ("distributed", "wand")
-
-    def test_malformed_env_pin_falls_through(self, spark, built_index,
-                                             monkeypatch):
-        # ADVICE r6 #5: a malformed ALPS_WAND_MIN_DF must not crash every
-        # auto-mode query — it warns and falls through to the sidecar
-        import json
-        import os
-
-        from elasticsearch_alps_spark.queries import calibrate
-        p = os.path.join(built_index.lineage_dir, calibrate.SIDECAR)
-        want = json.load(open(p))["wand_auto_min_df"]
-        monkeypatch.setenv(calibrate.ENV_PIN, "not-a-number")
-        with pytest.warns(UserWarning, match="malformed"):
-            got = calibrate.resolve_min_df(spark, built_index.lineage_dir)
-        assert got == want
-
-    def test_auto_env_pin_reaches_scorer_choice(self, spark, built_index,
-                                                monkeypatch):
-        # end-to-end: ALPS_WAND_MIN_DF=5 with the default None config must
-        # route the hot term to WAND without any probe
-        from elasticsearch_alps_spark.queries import calibrate
-        monkeypatch.setenv(calibrate.ENV_PIN, "5")
-        eng = SearchEngine(spark, built_index.root,
-                           QueryConfig(use_wand="auto",
-                                       driver_score_max_postings=0))
-        eng.match_query("def").collect()
-        assert eng.last_scorer == "wand"
 
     def test_auto_rare_term_outside_hot_cache_not_misrouted(self, spark,
                                                             built_index):
@@ -493,8 +371,9 @@ class TestWandAuto:
         # from the cache used to inherit the ceiling and misroute to WAND;
         # the fix resolves it exactly via the pruned term_stats lookup
         eng = SearchEngine(spark, built_index.root,
-                           QueryConfig(use_wand="auto", wand_auto_min_df=5,
+                           QueryConfig(use_wand="auto",
                                        driver_score_max_postings=0))
+        eng.WAND_AUTO_MIN_DF = 5
         eng._HOT_DF_K = 1  # cache holds only the single hottest term
         hot, ceiling = eng._hot_dfs("main")
         assert ceiling >= 5  # precondition: the ambiguous regime is live

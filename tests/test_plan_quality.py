@@ -122,11 +122,14 @@ def test_fuzzy_length_band_pushed_to_scan(spark, engine):
     """r3 (VERDICT r2 next #7): term_len is STORED in term_stats, so the
     fuzzy length-band filter reaches the parquet scan as a pushed predicate
     (row-group min/max skipping): the literal envelope over all words'
-    bands pushes into the one expansion plan."""
+    bands pushes into the one expansion plan. The plan ranks nothing: the
+    per-word top-k cut runs on the driver, so no Window (and no shuffle
+    for it) is planned."""
     multi = _formatted_plan(engine._fuzzy_expand_multi_df("main",
                                                           ["pars", "jsno"]))
     assert "GreaterThanOrEqual(term_len" in multi
     assert "LessThanOrEqual(term_len" in multi
+    assert "Window" not in multi
 
 
 def test_pq_topk_plan_is_shuffle_free(spark):

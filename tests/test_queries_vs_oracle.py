@@ -278,21 +278,25 @@ def test_engine_close_releases_views_and_cache(spark, built_index):
 
 def test_fuzzy_local_expansion_equals_spark_plan(engine):
     """r8: the driver-side fuzzy expansion (full-vocab hot cache + numpy
-    levenshtein) must reproduce the Spark expansion plan exactly — same
-    candidates, same boosts, same dfs, in the same (boost desc, term asc)
-    top-k cut order — for every band width (max_d 0, 1 and 2), whether the
-    plan expands one word or several."""
+    levenshtein) must find exactly the Spark expansion plan's candidates —
+    same terms, same boosts, same dfs — for every band width (max_d 0, 1
+    and 2), whether the plan expands one word or several; the one
+    driver-side (boost desc, term asc) top-k cut then gives both the same
+    expansion."""
     words = ["improt", "retrun", "pars", "de", "tokeniz", "uniq_100_1",
              "snake_case_token"]
     local = engine._fuzzy_expand_local("main", words)
     assert local is not None, "test vocab must fit the hot-df cache"
+    got = engine._fuzzy_expand_multi("main", words)
     multi = engine._fuzzy_expand_multi_df("main", words).collect()
     by_w = {i: [] for i in range(len(words))}
     for r in multi:
         by_w[r["widx"]].append((r["term"], r["boost"], r["df"]))
+    cap = engine.qcfg.fuzzy_max_expansions
     for wi, w in enumerate(words):
-        expected = sorted(by_w[wi], key=lambda c: (-c[1], c[0]))
-        assert local[wi] == expected, f"expansion mismatch for {w!r}"
+        cands = sorted(by_w[wi], key=lambda c: (-c[1], c[0]))
+        assert sorted(local[wi], key=lambda c: (-c[1], c[0])) == cands, w
+        assert got[wi] == cands[:cap], f"expansion mismatch for {w!r}"
         single = engine._fuzzy_expand_multi_df("main", [w]).collect()
         assert sorted(((r["term"], r["boost"], r["df"]) for r in single),
-                      key=lambda c: (-c[1], c[0])) == expected, w
+                      key=lambda c: (-c[1], c[0])) == cands, w

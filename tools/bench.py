@@ -8,7 +8,6 @@ comparisons stop being hand-assembled.
     python -m tools.bench --suite wand             # WAND crossover sweep
     python -m tools.bench --suite memo             # analyzer-memo A/B
     python -m tools.bench --suite gates --sf /root/testdata/sf0.1 ft_match_or
-    python -m tools.bench --suite anchor           # calibration probe legs
     python -m tools.bench --suite aba --ref <commit> --trials 3
 
 Suites delegate to the per-topic scripts (tools/scaling_bench.py etc. keep
@@ -38,7 +37,6 @@ SCRIPTS = {
     "merge": "tools/merge_scale.py",
     "wand": "tools/wand_crossover.py",
     "memo": "tools/analyzer_memo_bench.py",
-    "anchor": "tools/calibrate_anchor.py",
     "skew": "tools/skew_stress.py",
     "recall": "tools/ann_recall.py",
     "qscale": "tools/query_scaling.py",

@@ -59,7 +59,6 @@ def main():
                    for fn in fns) / 1e9, 2)}
         _row(rep)
         print("BUILD:" + json.dumps(rep), flush=True)
-        os.environ["ALPS_WAND_MIN_DF"] = "200000"
         q = {}
         for label, qcfg, queries in (
             ("auto", QueryConfig(use_wand="auto",

@@ -151,7 +151,6 @@ def main() -> None:
 
             # ---- 4. query battery on the merged 30M index (same set as
             # tools/build30m.py so rows compare)
-            os.environ["ALPS_WAND_MIN_DF"] = "200000"
             from elasticsearch_alps_spark.config import QueryConfig
             from elasticsearch_alps_spark.queries.engine import SearchEngine
             q = {}

@@ -44,7 +44,6 @@ def main() -> None:
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     ship_package(spark)
-    os.environ.setdefault("ALPS_WAND_MIN_DF", "200000")
 
     mixed = ("def", "import", "parse json config", "def main")
     three = {

@@ -14,8 +14,8 @@ experimental shape for a serving tier:
 - legs interleave cores across trials (2,8,2,8,…) to neutralize the
   measured warm-up/drift modes of this box (BENCH/BASELINE.md r3-r5);
   best-of-trials per (cores, query type) is reported;
-- the WAND auto threshold is pinned via ALPS_WAND_MIN_DF so scorer choice
-  cannot vary between legs (ADVICE r5).
+- the WAND auto threshold is the constant SearchEngine.WAND_AUTO_MIN_DF,
+  so scorer choice cannot vary between legs.
 
 Env: ALPS_QSCALE_DOCS (default 1_000_000), ALPS_QSCALE_NS ("2,8"),
 ALPS_QSCALE_TRIALS (2), ALPS_QSCALE_REPS (5).
@@ -120,7 +120,6 @@ def main() -> None:
     ap.add_argument("--reps", type=int,
                     default=int(os.environ.get("ALPS_QSCALE_REPS", "5")))
     args = ap.parse_args()
-    os.environ.setdefault("ALPS_WAND_MIN_DF", "200000")  # pin scorer choice
     if args.leg:
         run_leg(args.leg, args.index, args.reps)
         return
@@ -144,9 +143,10 @@ def main() -> None:
             legs[n].append(leg)
             print(f"leg local[{n}] trial {trial + 1}: {leg}", flush=True)
 
+    from elasticsearch_alps_spark.queries.engine import SearchEngine
     report = {"date": str(date.today()), "kind": "query_scaling",
               "n_docs": n_docs, "trials": trials, "reps": args.reps,
-              "wand_min_df_pin": os.environ["ALPS_WAND_MIN_DF"]}
+              "wand_min_df_pin": SearchEngine.WAND_AUTO_MIN_DF}
     small, big = min(ns), max(ns)
     for label, *_ in QUERIES:
         b_small = min(leg[label] for leg in legs[small])

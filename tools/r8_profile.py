@@ -82,7 +82,7 @@ def main() -> None:
                     with open(p) as f:
                         d = json.load(f)
                     keep = {k: d[k] for k in
-                            ("normalize_ids", "tokenize", "calibration",
+                            ("normalize_ids", "tokenize",
                              "total", "elapsed_sec", "phase_sec")
                             if k in d}
                     print(f"  {name}: {json.dumps(keep)}")
