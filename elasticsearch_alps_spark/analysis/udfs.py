@@ -1,57 +1,30 @@
-"""Spark-side analysis: vectorized Arrow ``pandas_udf`` wrappers around the
-shared pure-Python chain, plus a pure-Catalyst (JVM, whole-stage-codegen) path
-for the SQL-expressible ``simple`` profile.
+"""Spark-side analysis: one flat Arrow stream over the shared pure-Python
+chain, plus a pure-Catalyst (JVM, whole-stage-codegen) path for the
+SQL-expressible ``simple`` profile.
 
-Per the input contract: no per-row Python UDFs — tokenization crosses the
-JVM↔Python boundary once per Arrow batch.
+Every Python-analyzed field of a build (main, exact, each ExtraField) comes
+out of ONE ``mapInArrow`` pass (:func:`doc_postings_flat`): tokenization
+crosses the JVM↔Python boundary once per Arrow batch, and each document's
+text is analyzed once per field — no per-row Python UDFs, no nested struct
+columns.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, functions as F, types as T
+from typing import List, Sequence
 
-from elasticsearch_alps_spark.analysis.analyzers import (
-    analyze_positions, analyze_positions_multi,
-)
+from pyspark.sql import Column, functions as F
+
+from elasticsearch_alps_spark.analysis.analyzers import analyze_positions_multi
 from elasticsearch_alps_spark.config import AnalyzerConfig
-
-# token stream element: term + position (position gaps from stopword removal)
-TOKEN_STREAM_TYPE = T.ArrayType(
-    T.StructType([
-        T.StructField("t", T.StringType(), False),
-        T.StructField("p", T.IntegerType(), False),
-    ])
-)
-
-DUAL_STREAM_TYPE = T.StructType([
-    T.StructField("main", TOKEN_STREAM_TYPE, False),
-    T.StructField("exact", TOKEN_STREAM_TYPE, False),
-])
-
-# per-doc postings computed inside the analyzer UDF: doc_len + one entry per
-# distinct term (freq + positions as delta+varint binary). Aggregating
-# term→positions in Python while the tokens are already in Python removes the
-# groupBy(term, doc_id) shuffle from the index build (one shuffle per field,
-# not two); binary positions keep shuffle rows ~3× smaller than int arrays
-# and feed the packed-block builder without re-encoding.
-DOC_POSTINGS_TYPE = T.StructType([
-    T.StructField("len", T.IntegerType(), False),
-    T.StructField("posts", T.ArrayType(T.StructType([
-        T.StructField("t", T.StringType(), False),
-        T.StructField("f", T.IntegerType(), False),
-        T.StructField("ps", T.BinaryType(), False),
-    ])), False),
-])
-
-DUAL_POSTINGS_TYPE = T.StructType([
-    T.StructField("main", DOC_POSTINGS_TYPE, False),
-    T.StructField("exact", DOC_POSTINGS_TYPE, False),
-])
 
 
 def _doc_posts(stream):
-    """[(term, pos)] → (doc_len, [(term, freq, varint-packed positions)])."""
+    """[(term, pos)] → (doc_len, [(term, freq, varint-packed positions)]).
+    Aggregating term→positions here, while the tokens are already in
+    Python, removes the groupBy(term, doc_id) shuffle from the index build;
+    binary positions keep shuffle rows ~3× smaller than int arrays and feed
+    the packed-block builder without re-encoding."""
     from elasticsearch_alps_spark.indexing.postings import encode_positions
     d = {}
     for t, p in stream:
@@ -60,59 +33,29 @@ def _doc_posts(stream):
                           for t, ps in d.items()])
 
 
-def doc_postings_udf(cfg: AnalyzerConfig):
-    """pandas_udf: text → struct<len, posts> (single field)."""
-
-    @F.pandas_udf(DOC_POSTINGS_TYPE)
-    def _posts(s: pd.Series) -> pd.DataFrame:
-        lens, posts = [], []
-        for x in s:
-            ln, ps = _doc_posts(analyze_positions(x, cfg) if x is not None else [])
-            lens.append(ln)
-            posts.append(ps)
-        return pd.DataFrame({"len": lens, "posts": posts})
-
-    return _posts
-
-
-def dual_doc_postings_udf(cfg_main: AnalyzerConfig, cfg_exact: AnalyzerConfig):
-    """pandas_udf: text → struct<main: <len, posts>, exact: <len, posts>> —
-    both fields' postings in ONE Python pass (shared char filter + tokenizer)."""
-
-    @F.pandas_udf(DUAL_POSTINGS_TYPE)
-    def _posts2(s: pd.Series) -> pd.DataFrame:
-        main, exact = [], []
-        for x in s:
-            m, e = analyze_positions_multi(x, [cfg_main, cfg_exact])
-            main.append(_doc_posts(m))
-            exact.append(_doc_posts(e))
-        return pd.DataFrame({"main": main, "exact": exact})
-
-    return _posts2
-
-
-# flat per-(doc, field, term) postings row stream — see dual_doc_postings_flat
+# flat per-(doc, field, term) postings row stream — see doc_postings_flat
 FLAT_POSTINGS_SCHEMA = ("doc_id long, fld int, doc_len int, term string, "
                         "freq int, ps binary")
 
 
-def dual_doc_postings_flat(cfg_main: AnalyzerConfig,
-                           cfg_exact: AnalyzerConfig):
-    """mapInArrow batch fn: (doc_id, text) batches → FLAT postings rows for
-    BOTH fields (fld 0 = main, 1 = exact), one row per (doc, field, distinct
-    term), with per-posting varint-packed positions.
+def doc_postings_flat(groups: Sequence[List[AnalyzerConfig]]):
+    """mapInArrow batch fn: (doc_id, text_0, …, text_{g-1}) batches → FLAT
+    postings rows, one per (doc, field, distinct term), with per-posting
+    varint-packed positions.
 
-    r8 replacement for dual_doc_postings_udf + the JVM-side explode in the
-    builder: the nested struct<struct<array<struct>>> column cost far more
-    in pandas→Arrow object conversion (and in caching the nested rows) than
-    the analysis itself — measured ~0.36 s of 32-core Python compute inside
-    a ~7 s stage. Flat columns are built directly as Arrow arrays from flat
-    Python lists (C-speed conversion), and the downstream shuffle consumes
-    them with no explode. Emits identical (doc_id, dl-source, term, freq,
-    positions) content to the exploded nested path."""
+    ``groups[i]`` is the list of analyzers run over text column ``i``; the
+    fields are numbered ``fld`` 0, 1, … in group order, then analyzer order.
+    The analyzers of one group share the char filter and tokenizer when
+    they agree on them (``analyze_positions_multi``: the main and exact
+    fields over the same text). Flat columns are built directly as Arrow
+    arrays from flat Python lists (C-speed conversion) and the downstream
+    shuffle consumes them with no explode — the nested
+    struct<array<struct>> UDF column this replaces cost far more in
+    pandas→Arrow object conversion than the analysis itself."""
     import pyarrow as pa
 
-    cfgs = [cfg_main, cfg_exact]
+    groups = [list(g) for g in groups]
+    first_fld = [sum(len(g) for g in groups[:i]) for i in range(len(groups))]
     arrow_schema = pa.schema([
         ("doc_id", pa.int64()), ("fld", pa.int32()), ("doc_len", pa.int32()),
         ("term", pa.string()), ("freq", pa.int32()), ("ps", pa.binary()),
@@ -120,21 +63,22 @@ def dual_doc_postings_flat(cfg_main: AnalyzerConfig,
 
     def _flat(batches):
         for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            texts = batch.column(1).to_pylist()
+            doc_ids = batch.column(0).to_pylist()
             o_doc, o_fld, o_len = [], [], []
             o_term, o_freq, o_ps = [], [], []
-            for did, x in zip(doc_ids, texts):
-                streams = analyze_positions_multi(x, cfgs)
-                for fld, stream in enumerate(streams):
-                    ln, posts = _doc_posts(stream)
-                    for t, f, ps in posts:
-                        o_doc.append(did)
-                        o_fld.append(fld)
-                        o_len.append(ln)
-                        o_term.append(t)
-                        o_freq.append(f)
-                        o_ps.append(ps)
+            for gi, cfgs in enumerate(groups):
+                texts = batch.column(gi + 1).to_pylist()
+                for did, x in zip(doc_ids, texts):
+                    streams = analyze_positions_multi(x, cfgs)
+                    for fld, stream in enumerate(streams, first_fld[gi]):
+                        ln, posts = _doc_posts(stream)
+                        for t, f, ps in posts:
+                            o_doc.append(did)
+                            o_fld.append(fld)
+                            o_len.append(ln)
+                            o_term.append(t)
+                            o_freq.append(f)
+                            o_ps.append(ps)
             yield pa.record_batch([
                 pa.array(o_doc, pa.int64()), pa.array(o_fld, pa.int32()),
                 pa.array(o_len, pa.int32()), pa.array(o_term, pa.string()),
@@ -142,36 +86,6 @@ def dual_doc_postings_flat(cfg_main: AnalyzerConfig,
             ], schema=arrow_schema)
 
     return _flat
-
-
-def dual_token_stream_udf(cfg_main: AnalyzerConfig, cfg_exact: AnalyzerConfig):
-    """pandas_udf producing BOTH fields' token streams in one Python pass —
-    char filter + tokenizer shared (the reference indexes text and text.exact
-    from the same input)."""
-
-    @F.pandas_udf(DUAL_STREAM_TYPE)
-    def _tokenize2(s: pd.Series) -> pd.DataFrame:
-        main, exact = [], []
-        for x in s:
-            m, e = analyze_positions_multi(x, [cfg_main, cfg_exact])
-            main.append(m)
-            exact.append(e)
-        return pd.DataFrame({"main": main, "exact": exact})
-
-    return _tokenize2
-
-
-def token_stream_udf(cfg: AnalyzerConfig):
-    """pandas_udf: string column → array<struct<t,p>> token stream.
-
-    ``cfg`` is a small frozen dataclass captured in the closure (pickled once
-    per task, not per row)."""
-
-    @F.pandas_udf(TOKEN_STREAM_TYPE)
-    def _tokenize(s: pd.Series) -> pd.Series:
-        return s.map(lambda x: analyze_positions(x, cfg) if x is not None else [])
-
-    return _tokenize
 
 
 def simple_expressible(cfg: AnalyzerConfig) -> bool:
@@ -196,14 +110,9 @@ def simple_tokens_col(text_col: Column) -> Column:
     )
 
 
-def tokens_with_positions(df, text_col: str, cfg: AnalyzerConfig, out_col: str = "tok"):
-    """Add ``out_col`` = array<struct<t,p>> token stream for ``text_col``,
-    choosing the JVM path when expressible, else the Arrow UDF path."""
-    if simple_expressible(cfg):
-        toks = simple_tokens_col(F.col(text_col))
-        # zip terms with their index as position (no stopword gaps in simple mode)
-        stream = F.transform(
-            toks, lambda x, i: F.struct(x.alias("t"), i.cast("int").alias("p"))
-        )
-        return df.withColumn(out_col, stream)
-    return df.withColumn(out_col, token_stream_udf(cfg)(F.col(text_col)))
+def simple_token_stream_col(text_col: Column) -> Column:
+    """array<struct<t,p>> token stream for the simple profile, all in the
+    JVM: terms zipped with their index as position (no stopword gaps)."""
+    return F.transform(
+        simple_tokens_col(text_col),
+        lambda x, i: F.struct(x.alias("t"), i.cast("int").alias("p")))

@@ -2,10 +2,14 @@
 
 Spark-first re-expression of the reference's indexing path
 (``/root/reference/scripts/index/index.py:335-536`` + what Lucene does inside
-ES under ``index_config_1.json``): select/filter/truncate → vectorized
-analyzer → explode → groupBy(term, doc) → postings + stats side tables →
-delta+varint packed blocks, all as DataFrame jobs (thread/bulk-queue tuning in
-the reference becomes Spark partitioning).
+ES under ``index_config_1.json``): select/filter/truncate → one flat
+analysis pass emitting per-(doc, field, term) postings rows for every
+Python-analyzed field (the SQL-expressible simple profile tokenizes in the
+JVM instead) → per field, :func:`write_field`: range-sorted postings +
+term_stats + delta+varint packed blocks, all as DataFrame jobs
+(thread/bulk-queue tuning in the reference becomes Spark partitioning). A
+merge (``merging/merger.py``) writes its fields through the same
+:func:`write_field`.
 
 On-disk layout (one "index" = one directory):
 
@@ -15,7 +19,7 @@ On-disk layout (one "index" = one directory):
       fields/<field>/postings/  exploded postings: term, doc_id, freq, positions, dl
                                 (range-partitioned + sorted by term → parquet
                                 min/max stats give term-pruning at query time)
-      fields/<field>/term_stats/  term, df, cf
+      fields/<field>/term_stats/  term, df, cf, term_len
       fields/<field>/packed/    delta+varint blocks (see indexing/postings.py)
       stats.json                N, cf_total, avgdl per field + config
       _lineage/                 per-stage lineage + metrics JSON (resume markers,
@@ -39,7 +43,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from elasticsearch_alps_spark import fsio
 from elasticsearch_alps_spark.analysis.udfs import (
-    simple_expressible, tokens_with_positions,
+    FLAT_POSTINGS_SCHEMA, doc_postings_flat, simple_expressible,
+    simple_token_stream_col,
 )
 from elasticsearch_alps_spark.config import AnalyzerConfig, IndexConfig
 from elasticsearch_alps_spark.indexing.ids import assign_dense_doc_ids
@@ -163,15 +168,14 @@ def _stage_done(paths: IndexPaths, stage: str, config_key: str) -> bool:
 def _build_field(spark: SparkSession, n_docs: int, src: DataFrame,
                  src_kind: str, paths: IndexPaths, field: str,
                  analyzer: AnalyzerConfig, cfg: IndexConfig, shards: int,
-                 config_key: str, resume: bool, build_packed: bool,
-                 index_options: str = "positions",
+                 config_key: str, index_options: str = "positions",
                  norms_enabled: bool = True) -> dict:
-    """Build postings + term_stats (+ packed) for one analyzed field.
+    """Postings rows for one analyzed field, handed to :func:`write_field`.
 
     ``src_kind``:
-    - "posts": (doc_id, doc_len, posts: array<struct<t,f,ps>>) — per-doc
-      postings already aggregated inside the analyzer UDF → the only shuffle
-      is the term-range exchange for the sorted layout.
+    - "flat": (doc_id, doc_len, term, freq, ps) — one row per (doc, term),
+      aggregated inside the Python analysis pass (``doc_postings_flat``) →
+      the only shuffle is the term-range exchange for the sorted layout.
     - "tok": (doc_id, tok: array<struct<t,p>>) — JVM-side token stream (the
       SQL-expressible simple profile); per-(term,doc) aggregation happens via
       groupBy (one extra shuffle, but zero Python in the path).
@@ -182,49 +186,53 @@ def _build_field(spark: SparkSession, n_docs: int, src: DataFrame,
     ``norms_enabled=False`` is recorded in the field stats so the engine
     scores through the norms-free BM25 branch.
     """
-    if resume and _stage_done(paths, f"field_{field}", config_key):
-        return fsio.read_json(_lineage_path(paths, f"field_{field}"))["stats"]
-
-    t0 = time.time()
-    phase: dict = {}
-    if src_kind == "posts":
-        dl = (quantize_length_col(F.col("doc_len")) if cfg.quantize_norms
-              else F.col("doc_len").cast("long"))
-        postings = (src.withColumn("dl", dl)
-                    .select("doc_id", "dl", F.explode("posts").alias("e"))
-                    .select("doc_id", "dl",
-                            F.col("e.t").alias("term"),
-                            F.col("e.f").cast("long").alias("freq"),
-                            F.col("e.ps").alias("positions")))
-    elif src_kind == "flat":
-        # already one row per (doc, term) — no explode (r8 flat UDF stream)
-        dl = (quantize_length_col(F.col("doc_len")) if cfg.quantize_norms
-              else F.col("doc_len").cast("long"))
+    dl = (quantize_length_col(F.col("doc_len")) if cfg.quantize_norms
+          else F.col("doc_len").cast("long"))
+    if src_kind == "flat":
         postings = src.select("doc_id", dl.alias("dl"), "term",
                               F.col("freq").cast("long").alias("freq"),
                               F.col("ps").alias("positions"))
     else:
-        tok = src.select("doc_id", F.size("tok").alias("doc_len"), F.col("tok"))
-        dl = (quantize_length_col(F.col("doc_len")) if cfg.quantize_norms
-              else F.col("doc_len").cast("long"))
-        exploded = (tok.withColumn("dl", dl)
-                       .select("doc_id", "dl", F.explode("tok").alias("e"))
-                       .select("doc_id", "dl",
-                               F.col("e.t").alias("term"), F.col("e.p").alias("pos")))
-        postings = (exploded.groupBy("term", "doc_id")
-                    .agg(F.count("*").alias("freq"),
-                         F.sort_array(F.collect_list("pos")).alias("positions"),
-                         F.first("dl").alias("dl")))
+        postings = (src.select("doc_id", F.size("tok").alias("doc_len"), "tok")
+                       .select("doc_id", dl.alias("dl"), F.explode("tok").alias("e"))
+                       .select("doc_id", "dl", F.col("e.t").alias("term"),
+                               F.col("e.p").alias("pos"))
+                       .groupBy("term", "doc_id")
+                       .agg(F.count("*").alias("freq"),
+                            F.sort_array(F.collect_list("pos")).alias("positions"),
+                            F.first("dl").alias("dl")))
     if index_options == "docs":
         postings = postings.select(
             "term", "doc_id",
             F.lit(1).cast("long").alias("freq"),
             F.expr("CAST(array() AS array<int>)").alias("positions"),
             F.lit(1).cast("long").alias("dl"))
+    meta = {"analyzer": analyzer.name()}
+    if index_options != "positions":
+        meta["index_options"] = index_options
+    if not norms_enabled:
+        meta["norms"] = False
+    return write_field(spark, postings, paths, field, cfg, n_docs, shards,
+                       meta, config_key)
+
+
+def write_field(spark: SparkSession, postings: DataFrame, paths: IndexPaths,
+                field: str, cfg: IndexConfig, n_docs: int, shards: int,
+                meta: dict, config_key: Optional[str]) -> dict:
+    """The one field writer of a build and a merge: postings rows (term,
+    doc_id, freq, positions, dl) → the field's postings, term_stats and, for
+    ``main`` when ``cfg.build_packed``, packed blocks, plus its
+    ``_lineage/field_<field>.json`` record. Returns the field stats:
+    ``n_docs``, ``cf_total`` (Σ freq over the written postings),
+    ``avgdl`` and ``meta``."""
+    t0 = time.time()
+    phase: dict = {}
     # NOTE: observe() on this plan would double-count — the range exchange's
     # sampling pass flows every row through the accumulator-backed
     # CollectMetrics node a second time. Measured: cf_total came back exactly
     # 2×. Hence the explicit single-column aggregation job below instead.
+    # Range partitioning on (term, doc_id) gives the term-pruned layout and
+    # spreads a hot term's postings across partitions (SURVEY.md §2.6 J1).
     (postings.repartitionByRange(shards, "term", "doc_id")
              .sortWithinPartitions("term", "doc_id")
              .write.mode("overwrite").option("compression", "zstd").parquet(paths.postings(field)))
@@ -249,12 +257,7 @@ def _build_field(spark: SparkSession, n_docs: int, src: DataFrame,
     cf_total = int(ts_agg.agg(F.sum("cf").alias("cf")).collect()[0]["cf"] or 0)
     phase["cf_total"] = round(time.time() - t1, 3)
     avgdl = cf_total / n_docs if n_docs else 0.0
-    stats = {"n_docs": n_docs, "cf_total": cf_total, "avgdl": avgdl,
-             "analyzer": analyzer.name()}
-    if index_options != "positions":
-        stats["index_options"] = index_options
-    if not norms_enabled:
-        stats["norms"] = False
+    stats = {"n_docs": n_docs, "cf_total": cf_total, "avgdl": avgdl, **meta}
 
     written = spark.read.parquet(paths.postings(field))
 
@@ -272,7 +275,8 @@ def _build_field(spark: SparkSession, n_docs: int, src: DataFrame,
         phase["term_stats"] = round(time.time() - ts0, 3)
 
     try:
-        if build_packed:
+        # packed blocks exist for WAND, which only runs on the main field
+        if cfg.build_packed and field == "main":
             # term_stats and packed blocks both derive from the written
             # postings and are independent — overlap their jobs so the small
             # term_stats shuffle fills scheduler gaps of the packing pass
@@ -428,14 +432,8 @@ def build_index(spark: SparkSession, docs_df: DataFrame, out_dir: str,
                 "config_key": config_key,
                 "elapsed_sec": round(time.time() - t0, 3)})
 
-        if os.environ.get("ALPS_SERIAL_DOCS_WRITE") == "1":
-            # diagnostic switch (r4 scaling work): run the docs-store write
-            # serially to measure the overlap's effect at low core counts,
-            # where the background write can oversubscribe the executor pool
-            _write_docs()
-        else:
-            docs_pool = ThreadPoolExecutor(max_workers=1)
-            docs_write_fut = docs_pool.submit(_write_docs)
+        docs_pool = ThreadPoolExecutor(max_workers=1)
+        docs_write_fut = docs_pool.submit(_write_docs)
     fields_ok = False
     try:
         field_stats = _build_fields(
@@ -485,7 +483,7 @@ def build_index(spark: SparkSession, docs_df: DataFrame, out_dir: str,
 def _build_fields(spark: SparkSession, cfg: IndexConfig, paths: IndexPaths,
                   text_col: str, shards: Optional[int], config_key: str,
                   resume: bool, norm: Optional[DataFrame],
-                  n_docs: Optional[int], phase: Optional[dict] = None) -> dict:
+                  n_docs: Optional[int], phase: dict) -> dict:
     """The per-field build section of :func:`build_index`, factored out so the
     caller can guarantee (try/finally) the background docs-store write and the
     docID cache are settled even when a field build raises."""
@@ -495,7 +493,7 @@ def _build_fields(spark: SparkSession, cfg: IndexConfig, paths: IndexPaths,
         # (metadata-backed parquet count)
         n_docs = (norm if norm is not None
                   else spark.read.parquet(paths.docs)).count()
-    # The analyzer UDF (the dominant cost) must fan out to every core. The
+    # The analyzer pass (the dominant cost) must fan out to every core. The
     # FRESH-path `norm` already has exactly n_shards balanced partitions
     # (assign_dense_doc_ids range-partitions by the unique key with sampled
     # boundaries), so re-spreading it shuffles the full corpus text for
@@ -504,102 +502,86 @@ def _build_fields(spark: SparkSession, cfg: IndexConfig, paths: IndexPaths,
     # written docs store lands as smallish files Spark would coalesce.
     docs = (norm if norm is not None
             else spark.read.parquet(paths.docs).repartition(n_shards))
-    field_stats = {}
     same_analyzer = (cfg.exact_analyzer is not None
                      and cfg.exact_analyzer == cfg.analyzer)
     dual = cfg.exact_analyzer is not None and not same_analyzer
-    cached = None
-    if dual:
-        # one Python pass produces BOTH fields' postings (shared char
-        # filter + tokenizer), cached across the two field builds — and the
-        # per-(term,doc) aggregation happens inside the UDF, so each field
-        # needs only the term-range shuffle (no groupBy shuffle). r8: the
-        # UDF emits FLAT (doc, fld, term) rows via mapInArrow instead of a
-        # nested struct column + JVM explode — the nested pandas→Arrow
-        # object conversion dominated this stage (guide §4.2), flat arrays
-        # convert at C speed and cache smaller.
-        from elasticsearch_alps_spark.analysis.udfs import (
-            FLAT_POSTINGS_SCHEMA, dual_doc_postings_flat,
-        )
-        flat = docs.select("doc_id", F.col(text_col)).mapInArrow(
-            dual_doc_postings_flat(cfg.analyzer, cfg.exact_analyzer),
-            FLAT_POSTINGS_SCHEMA)
-        cached = flat.persist()
-        src_main = cached.filter(F.col("fld") == 0).drop("fld")
-        src_exact = cached.filter(F.col("fld") == 1).drop("fld")
-        kind = "flat"
-    elif simple_expressible(cfg.analyzer):
-        # JVM-only token path (SQL-expressible simple profile)
-        src_main = tokens_with_positions(
-            docs.select("doc_id", text_col), text_col, cfg.analyzer
-        ).select("doc_id", "tok")
-        src_exact = src_main
-        kind = "tok"
-    else:
-        from elasticsearch_alps_spark.analysis.udfs import doc_postings_udf
-        one = docs.select(
-            "doc_id", doc_postings_udf(cfg.analyzer)(F.col(text_col)).alias("dp"))
-        src_main = one.select("doc_id", F.col("dp.len").alias("doc_len"),
-                              F.col("dp.posts").alias("posts"))
-        src_exact = src_main
-        kind = "posts"
 
+    def pending(field: str) -> bool:
+        return not (resume and _stage_done(paths, f"field_{field}", config_key))
+
+    # Every Python-analyzed field comes out of ONE flat analysis pass, grouped
+    # by the text it reads: main+exact share a group (shared char filter +
+    # tokenizer), each ExtraField is its own group over its source column.
+    # The SQL-expressible simple profile keeps the JVM token path instead.
+    groups = []  # (text column, [(field, analyzer)])
+    if dual:
+        groups.append((F.col(text_col), [("main", cfg.analyzer),
+                                         ("exact", cfg.exact_analyzer)]))
+    elif not simple_expressible(cfg.analyzer):
+        groups.append((F.col(text_col), [("main", cfg.analyzer)]))
+    for ef in cfg.extra_fields:
+        groups.append((F.coalesce(F.col(ef.source_col).cast("string"), F.lit("")),
+                       [(ef.name, ef.analyzer)]))
+    groups = [(col, todo) for col, fs in groups
+              if (todo := [(f, a) for f, a in fs if pending(f)])]
+    flat_src: dict = {}
+    cached = None
+    if groups:
+        flat = docs.select(
+            "doc_id", *[col.alias(f"_text{i}") for i, (col, _) in enumerate(groups)]
+        ).mapInArrow(doc_postings_flat([[a for _, a in fs] for _, fs in groups]),
+                     FLAT_POSTINGS_SCHEMA)
+        # pinned across every field build: each field filters its rows out
+        # of the one materialized pass instead of re-running the analyzers
+        cached = flat.persist()
+        fields = [f for _, fs in groups for f, _ in fs]
+        flat_src = {f: cached.filter(F.col("fld") == i).drop("fld")
+                    for i, f in enumerate(fields)}
+
+    def build(field: str, analyzer: AnalyzerConfig, **kw) -> dict:
+        if not pending(field):
+            return fsio.read_json(_lineage_path(paths, f"field_{field}"))["stats"]
+        if field in flat_src:
+            src, kind = flat_src[field], "flat"
+        else:  # JVM-only token path (SQL-expressible simple profile)
+            src = docs.select("doc_id", simple_token_stream_col(
+                F.col(text_col)).alias("tok"))
+            kind = "tok"
+        return _build_field(spark, n_docs, src, kind, paths, field, analyzer,
+                            cfg, n_shards, config_key, **kw)
+
+    field_stats = {}
     try:
-        if dual and cached is not None:
+        if cached is not None:
             # materialize the shared analyzer pass ONCE before the concurrent
             # field builds — two threads hitting an unmaterialized persist
             # would both compute every partition of the (dominant-cost)
             # tokenize stage
             tt0 = time.time()
             cached.count()
-            if phase is not None:
-                phase["tokenize"] = round(time.time() - tt0, 3)
+            phase["tokenize"] = round(time.time() - tt0, 3)
+        if dual:
             # the two field builds are independent jobs over the cached
             # postings — overlap them so the exact field's shuffle/write fills
             # the straggler tail of the main field's stages (round-2 scaling)
             with ThreadPoolExecutor(max_workers=1) as pool:
-                exact_fut = pool.submit(
-                    _build_field, spark, n_docs, src_exact, kind, paths,
-                    "exact", cfg.exact_analyzer, cfg, n_shards, config_key,
-                    resume, False)
-                field_stats["main"] = _build_field(
-                    spark, n_docs, src_main, kind, paths, "main", cfg.analyzer,
-                    cfg, n_shards, config_key, resume, cfg.build_packed)
-                # packed blocks exist for WAND, which only runs on the main
-                # field — the exact field skips the packing cost
+                exact_fut = pool.submit(build, "exact", cfg.exact_analyzer)
+                field_stats["main"] = build("main", cfg.analyzer)
                 field_stats["exact"] = exact_fut.result()
         else:
-            field_stats["main"] = _build_field(
-                spark, n_docs, src_main, kind, paths, "main", cfg.analyzer,
-                cfg, n_shards, config_key, resume,
-                build_packed=cfg.build_packed)
+            field_stats["main"] = build("main", cfg.analyzer)
             if same_analyzer:
                 # text.exact has the identical analysis chain → alias, don't
                 # rebuild
                 field_stats["exact"] = {**field_stats["main"], "alias": "main"}
-            elif cfg.exact_analyzer is not None:
-                field_stats["exact"] = _build_field(
-                    spark, n_docs, src_exact, kind, paths, "exact",
-                    cfg.exact_analyzer, cfg, n_shards, config_key, resume,
-                    build_packed=False)
+        for ef in cfg.extra_fields:
+            # r6 (VERDICT r5 next #4): additional analyzed columns — the
+            # reference's url field (docs-only fields collapse to
+            # (term, doc_id) pairs)
+            field_stats[ef.name] = build(ef.name, ef.analyzer,
+                                         index_options=ef.index_options,
+                                         norms_enabled=ef.norms)
     finally:
         if cached is not None:
             cached.unpersist()
-    for ef in cfg.extra_fields:
-        # r6 (VERDICT r5 next #4): additional analyzed columns — the
-        # reference's url field. Each is its own small postings build
-        # (docs-only fields collapse to (term, doc_id) pairs); no packed
-        # blocks (WAND serves the main field only).
-        from elasticsearch_alps_spark.analysis.udfs import doc_postings_udf
-        src_ef = (docs.select(
-            "doc_id",
-            doc_postings_udf(ef.analyzer)(
-                F.coalesce(F.col(ef.source_col).cast("string"),
-                           F.lit(""))).alias("dp"))
-            .select("doc_id", F.col("dp.len").alias("doc_len"),
-                    F.col("dp.posts").alias("posts")))
-        field_stats[ef.name] = _build_field(
-            spark, n_docs, src_ef, "posts", paths, ef.name, ef.analyzer,
-            cfg, n_shards, config_key, resume, build_packed=False,
-            index_options=ef.index_options, norms_enabled=ef.norms)
     return field_stats

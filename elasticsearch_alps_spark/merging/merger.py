@@ -15,9 +15,16 @@ instead of 4×25 SLURM jobs:
     hot-spotting one, SURVEY.md §2.6 J1) → rewrite postings + re-aggregate
     term_stats → recompute collection stats → repack blocks.
 
+Everything after the union is the build's own field writer
+(``indexing.builder.write_field``): a merged field gets the same postings
+layout, term_stats, packed blocks and ``_lineage/field_<f>.json`` record as
+a built one. The merger keeps only the docID rebase, the union and its
+refusals of incompatible sources.
+
 Invariant (property-tested): merge(build(A), build(B)) ≡ build(A ∪ B) when A
 precedes B in docID order. Count verification mirrors the reference's ≥90%
-bar (merge.py:202) — but exact, not approximate.
+bar (merge.py:202) — but exact, not approximate: the writer's cf_total must
+equal Σ source cf_total.
 
 Resume: the merge writes a lineage marker; re-running with ``resume=True``
 skips completed merges (analog of stage1_balanced_merge_v2.sh:491-496).
@@ -35,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from elasticsearch_alps_spark import fsio
 from elasticsearch_alps_spark.config import IndexConfig
-from elasticsearch_alps_spark.indexing.builder import IndexPaths, _build_packed
+from elasticsearch_alps_spark.indexing.builder import IndexPaths, write_field
 
 
 def _offset_doc_ids(df: DataFrame, offset: int) -> DataFrame:
@@ -107,45 +114,27 @@ def merge_indexes(spark: SparkSession, index_dirs: List[str], out_dir: str,
     for field in fields:
         if field in aliased:
             continue  # resolved after the concrete fields are merged
+        src_fields = [s["fields"][field] for s in stats]
         merged = reduce(
             DataFrame.unionByName,
             [_offset_doc_ids(spark.read.parquet(p.postings(field)), off)
              for p, off in zip(sources, offsets)])
-        # range partition on (term, doc_id): term-pruned layout + hot-term salting
-        (merged.repartitionByRange(n_shards, "term", "doc_id")
-               .sortWithinPartitions("term", "doc_id")
-               .write.mode("overwrite").option("compression", "zstd").parquet(out.postings(field)))
-        written = spark.read.parquet(out.postings(field))
-        (written.groupBy("term")
-                .agg(F.count("*").alias("df"), F.sum("freq").alias("cf"))
-                .withColumn("term_len", F.length("term"))
-                .repartitionByRange(max(1, n_shards // 4), "term")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite").option("compression", "zstd").parquet(out.term_stats(field)))
-        n_docs = sum(s["fields"][field]["n_docs"] for s in stats)
-        cf_total = sum(s["fields"][field]["cf_total"] for s in stats)
-        avgdl = cf_total / n_docs if n_docs else 0.0
-        field_stats[field] = {
-            "n_docs": n_docs, "cf_total": cf_total, "avgdl": avgdl,
-            "analyzer": stats[0]["fields"][field]["analyzer"],
-        }
         # ExtraField metadata must survive a merge (r7, VERDICT r6 next #5 —
         # found by the extra-field merge≡rebuild test): norms /
         # index_options select the engine's scoring branch; dropping them
         # defaulted norms to True, scoring a docs-only field with the
         # norms/dl formula after any merge.
-        for k in ("index_options", "norms"):
-            if k in stats[0]["fields"][field]:
-                field_stats[field][k] = stats[0]["fields"][field][k]
-        if cfg.build_packed and field == "main":  # WAND only runs on main
-            _build_packed(spark, written, out, field, cfg, avgdl, n_docs)
+        meta = {k: src_fields[0][k] for k in ("analyzer", "index_options", "norms")
+                if k in src_fields[0]}
+        field_stats[field] = write_field(
+            spark, merged, out, field, cfg, sum(f["n_docs"] for f in src_fields),
+            n_shards, meta, stats[0].get("config_key"))
         # exact count verification (reference uses a ≥90% bar, merge.py:202)
-        expected_cf = sum(s["fields"][field]["cf_total"] for s in stats)
-        actual_cf = written.agg(F.sum("freq")).collect()[0][0] or 0
-        if actual_cf != expected_cf:
+        expected_cf = sum(f["cf_total"] for f in src_fields)
+        if field_stats[field]["cf_total"] != expected_cf:
             raise RuntimeError(
                 f"merge verification failed for field {field}: "
-                f"cf {actual_cf} != expected {expected_cf}")
+                f"cf {field_stats[field]['cf_total']} != expected {expected_cf}")
 
     for field, target in aliased.items():
         field_stats[field] = {**field_stats[target], "alias": target}

@@ -786,10 +786,8 @@ class SearchEngine:
         jmap = self._canon_jidx(clauses)
         term_order = ({t: jmap[(cid, t)] for cid, t, _ in clauses}
                       if len(clauses) <= self.DET_SUM_MAX else None)
-        return wand_topk(self.spark, self.paths.packed(src),
-                         self.paths.field_dir(src), clauses, size,
+        return wand_topk(self.spark, packed_df, n_buckets, clauses, size,
                          self.k1, self.b, avgdl, required,
-                         packed_df=packed_df, n_buckets=n_buckets,
                          term_order=term_order)
 
     def _phrase_driver(self, field: str, pdf: pd.DataFrame, terms, offsets,
@@ -1142,25 +1140,29 @@ class SearchEngine:
 
     def _fuzzy_expand_multi_df(self, field: str, words: List[str]) -> DataFrame:
         """Distributed expansion candidates for one or several words in ONE
-        term-dictionary scan (join with a broadcast words frame): every
-        (widx, term, boost, df) within the word's edit distance, by
-        JVM-side levenshtein, boost = 1 − ed/min(len(term), len(word)).
-        No window rank: the candidates are bounded by each word's
+        term-dictionary scan: every (widx, term, boost, df) within the
+        word's edit distance, by JVM-side levenshtein, boost = 1 −
+        ed/min(len(term), len(word)). The words are SQL literals
+        (``inline(array(named_struct(…)))``, one Generate over the scan) —
+        no join and no createDataFrame, whose collect is a Spark job of its
+        own. No window rank: the candidates are bounded by each word's
         edit-distance neighbourhood, so the top-k cut runs on the driver
         (_fuzzy_expand_multi) without a shuffle."""
-        wrows = [(i, w, fuzzy_auto_distance(w), len(w)) for i, w in enumerate(words)]
-        wdf = self.spark.createDataFrame(
-            wrows, "widx int, word string, maxd int, wlen int")
+        wrows = [(i, w, fuzzy_auto_distance(w)) for i, w in enumerate(words)]
+        words_sql = "inline(array(" + ", ".join(
+            f"named_struct('widx', {i}, 'word', {_sql_str(w)}, 'maxd', {d}, "
+            f"'wlen', {len(w)})" for i, w, d in wrows) + "))"
         ts = self._term_stats[field]
         tlen = self._term_len_col(field)
-        # literal envelope over ALL words' bands — join conditions can't push
-        # into the scan, but this pre-filter can (pushed parquet predicate)
-        lo = min(len(w) - d for _, w, d, _ in wrows)
-        hi = max(len(w) + d for _, w, d, _ in wrows)
+        # literal envelope over ALL words' bands — the per-word band below
+        # can't push into the scan, but this pre-filter can (pushed parquet
+        # predicate)
+        lo = min(len(w) - d for _, w, d in wrows)
+        hi = max(len(w) + d for _, w, d in wrows)
         return (ts.filter((tlen >= lo) & (tlen <= hi))
-                .join(F.broadcast(wdf),
-                      (tlen >= F.col("wlen") - F.col("maxd"))
-                      & (tlen <= F.col("wlen") + F.col("maxd")))
+                .select("term", "df", tlen.alias("tlen"), F.expr(words_sql))
+                .filter((F.col("tlen") >= F.col("wlen") - F.col("maxd"))
+                        & (F.col("tlen") <= F.col("wlen") + F.col("maxd")))
                 .withColumn("ed", F.levenshtein(F.col("term"), F.col("word")))
                 .filter(F.col("ed") <= F.col("maxd"))
                 .withColumn("boost", F.when(F.col("ed") == 0, F.lit(1.0)).otherwise(

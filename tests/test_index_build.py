@@ -146,6 +146,28 @@ def test_resume_skips_built_stages(spark, corpus_df, tmp_path):
     assert p2.read_stats()["fields"]["main"]["n_docs"] > 0
 
 
+def test_single_analyzer_build_matches_dual_main(spark, built_index,
+                                                corpus_df, tmp_path):
+    """A single-analyzer build (no exact field) takes the same flat
+    analysis pass as the default dual build: it records a tokenize phase,
+    and its main postings equal the dual build's main postings over the
+    same corpus and shard count."""
+    import json
+
+    p = build_index(spark, corpus_df, str(tmp_path / "idx_single"),
+                    IndexConfig(exact_analyzer=None, build_packed=False),
+                    shards=4)
+    with open(os.path.join(p.lineage_dir, "phase_times.json")) as f:
+        assert "tokenize" in json.load(f)
+    assert "exact" not in p.read_stats()["fields"]
+
+    def postings(path):
+        return {(r["term"], r["doc_id"], r["freq"], bytes(r["positions"]),
+                 r["dl"]) for r in spark.read.parquet(path).collect()}
+
+    assert postings(p.postings("main")) == postings(built_index.postings("main"))
+
+
 def test_no_leaked_persisted_rdds_after_build(spark, corpus_df, tmp_path):
     """r2 (ADVICE r1): the docID-assignment cache and the dual-analyzer cache
     must be unpersisted once the build completes — a leaked persist stays

@@ -124,12 +124,15 @@ def test_fuzzy_length_band_pushed_to_scan(spark, engine):
     (row-group min/max skipping): the literal envelope over all words'
     bands pushes into the one expansion plan. The plan ranks nothing: the
     per-word top-k cut runs on the driver, so no Window (and no shuffle
-    for it) is planned."""
+    for it) is planned. The words are SQL literals over the scan, not a
+    joined createDataFrame frame (whose collect is a Spark job of its own)."""
     multi = _formatted_plan(engine._fuzzy_expand_multi_df("main",
                                                           ["pars", "jsno"]))
     assert "GreaterThanOrEqual(term_len" in multi
     assert "LessThanOrEqual(term_len" in multi
     assert "Window" not in multi
+    assert "Join" not in multi
+    assert "BroadcastExchange" not in multi
 
 
 def test_pq_topk_plan_is_shuffle_free(spark):
