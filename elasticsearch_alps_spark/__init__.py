@@ -6,8 +6,8 @@ around single-node Elasticsearch 7.17 / Lucene 8.11), re-expressed Spark-first:
 
 - ingest + analysis: DataFrame transforms + vectorized Arrow ``pandas_udf`` analyzers
   (reference: ES analyzer config ``index_config/index_config_1.json``)
-- inverted index build: tokenize → explode → groupBy(term, doc) → delta+varint
-  packed, docID-sorted posting blocks with skip pointers and block-max metadata
+- inverted index build: tokenize → (term, doc_id)-sorted postings with
+  varint positions, plus a block-max table (one bound per 128-posting block)
   (reference: Lucene index, ``index_options: positions``)
 - query engine: the reference's 6 query types (``scripts/search/search.py:141-418``)
   with Lucene-8.11-faithful BM25 (k1=1.2, b=0.75, SmallFloat norms, no (k1+1) factor)

@@ -1,7 +1,7 @@
 """Small-file metadata IO through the Hadoop FileSystem API.
 
 The index layout carries driver-written JSON sidecars (stats.json, lineage
-markers, packed_meta.json). r1 wrote them with ``open``/``os.replace`` —
+markers). r1 wrote them with ``open``/``os.replace`` —
 fine on a laptop, broken the moment ``out_dir`` is ``hdfs://`` or ``s3a://``
 (VERDICT r1 wrong #7). Every helper here routes through
 ``Path.getFileSystem(hadoopConf)`` via py4j, so the same code works on any

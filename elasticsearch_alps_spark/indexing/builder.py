@@ -6,7 +6,7 @@ ES under ``index_config_1.json``): select/filter/truncate → one flat
 analysis pass emitting per-(doc, field, term) postings rows for every
 Python-analyzed field (the SQL-expressible simple profile tokenizes in the
 JVM instead) → per field, :func:`write_field`: range-sorted postings +
-term_stats + delta+varint packed blocks, all as DataFrame jobs
+term_stats + (main only) the block-max table, all as DataFrame jobs
 (thread/bulk-queue tuning in the reference becomes Spark partitioning). A
 merge (``merging/merger.py``) writes its fields through the same
 :func:`write_field`.
@@ -20,8 +20,12 @@ On-disk layout (one "index" = one directory):
                                 (range-partitioned + sorted by term → parquet
                                 min/max stats give term-pruning at query time)
       fields/<field>/term_stats/  term, df, cf, term_len
-      fields/<field>/packed/    delta+varint blocks (see indexing/postings.py)
-      stats.json                N, cf_total, avgdl per field + config
+      fields/main/blockmax/     term, first_doc, last_doc, max_tf_norm: one row
+                                per run of ≤ block_size postings of a term
+                                (score bounds for the pruned route; see
+                                indexing/blockmax.py)
+      stats.json                N, cf_total, avgdl per field (+ block_size
+                                for a field with a block-max table) + config
       _lineage/                 per-stage lineage + metrics JSON (resume markers,
                                 analog of the reference's completion files,
                                 stage1_balanced_merge_v2.sh:491-496)
@@ -31,14 +35,12 @@ from __future__ import annotations
 
 import json
 import logging
-import math
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Optional, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from elasticsearch_alps_spark import fsio
@@ -49,7 +51,9 @@ from elasticsearch_alps_spark.analysis.udfs import (
 from elasticsearch_alps_spark.config import AnalyzerConfig, IndexConfig
 from elasticsearch_alps_spark.indexing.ids import assign_dense_doc_ids
 from elasticsearch_alps_spark.indexing.norms import quantize_length_col
-from elasticsearch_alps_spark.indexing.postings import PACKED_SCHEMA, pack_frame
+from elasticsearch_alps_spark.indexing.blockmax import (
+    BLOCKMAX_SCHEMA, block_max_frame,
+)
 
 
 @dataclass
@@ -69,8 +73,8 @@ class IndexPaths:
     def term_stats(self, field: str) -> str:
         return os.path.join(self.field_dir(field), "term_stats")
 
-    def packed(self, field: str) -> str:
-        return os.path.join(self.field_dir(field), "packed")
+    def blockmax(self, field: str) -> str:
+        return os.path.join(self.field_dir(field), "blockmax")
 
     @property
     def stats(self) -> str:
@@ -221,7 +225,7 @@ def write_field(spark: SparkSession, postings: DataFrame, paths: IndexPaths,
                 meta: dict, config_key: Optional[str]) -> dict:
     """The one field writer of a build and a merge: postings rows (term,
     doc_id, freq, positions, dl) → the field's postings, term_stats and, for
-    ``main`` when ``cfg.build_packed``, packed blocks, plus its
+    ``main`` when ``cfg.build_packed``, the block-max table, plus its
     ``_lineage/field_<field>.json`` record. Returns the field stats:
     ``n_docs``, ``cf_total`` (Σ freq over the written postings),
     ``avgdl`` and ``meta``."""
@@ -259,8 +263,6 @@ def write_field(spark: SparkSession, postings: DataFrame, paths: IndexPaths,
     avgdl = cf_total / n_docs if n_docs else 0.0
     stats = {"n_docs": n_docs, "cf_total": cf_total, "avgdl": avgdl, **meta}
 
-    written = spark.read.parquet(paths.postings(field))
-
     def _write_term_stats() -> None:
         # term_len is stored (not computed per query) so the fuzzy length-band
         # filter reaches the parquet scan as a pushed predicate (r3, VERDICT
@@ -275,15 +277,17 @@ def write_field(spark: SparkSession, postings: DataFrame, paths: IndexPaths,
         phase["term_stats"] = round(time.time() - ts0, 3)
 
     try:
-        # packed blocks exist for WAND, which only runs on the main field
+        # the block-max table serves the pruned route, which scores the
+        # main field only
         if cfg.build_packed and field == "main":
-            # term_stats and packed blocks both derive from the written
-            # postings and are independent — overlap their jobs so the small
-            # term_stats shuffle fills scheduler gaps of the packing pass
+            # the pruned route sizes its block read from df / block_size
+            stats["block_size"] = cfg.block_size
+            # term_stats and the block table both derive from the written
+            # postings and are independent — overlap their jobs
             tp0 = time.time()
             with ThreadPoolExecutor(max_workers=1) as pool:
                 ts_fut = pool.submit(_write_term_stats)
-                _build_packed(spark, written, paths, field, cfg, avgdl, n_docs)
+                _build_block_max(spark, paths, field, cfg, avgdl)
                 phase["packed"] = round(time.time() - tp0, 3)
                 ts_fut.result()
         else:
@@ -305,75 +309,30 @@ def write_field(spark: SparkSession, postings: DataFrame, paths: IndexPaths,
     return stats
 
 
-def _build_packed(spark: SparkSession, postings: DataFrame, paths: IndexPaths,
-                  field: str, cfg: IndexConfig, avgdl: float, n_docs: int) -> None:
-    """Pack exploded postings into delta+varint blocks, bucketed by doc range
-    (bucket = doc_id // bucket_docs) — explicit skew salting: a hot term's
-    postings split across buckets, bounding every packing group.
+def _build_block_max(spark: SparkSession, paths: IndexPaths, field: str,
+                     cfg: IndexConfig, avgdl: float) -> None:
+    """Write the field's block-max table (see indexing/blockmax.py) from
+    the postings just written, read back. Every read split is already
+    (term, doc_id)-sorted, so one ``mapInArrow`` cuts each Arrow batch into
+    blocks with a numpy segmented max: no exchange, no sort."""
+    import pyarrow as pa
+    k1, b, block_size = cfg.bm25.k1, cfg.bm25.b, cfg.block_size
 
-    One ``mapInPandas`` pass over (bucket, term, doc_id)-sorted partitions —
-    NOT applyInPandas-per-(bucket,term): a large vocabulary would mean
-    millions of tiny Spark groups whose per-group overhead dwarfs the packing
-    work. Group continuity across Arrow batches is handled by carrying the
-    trailing (bucket, term) run into the next batch."""
-    parallelism = spark.sparkContext.defaultParallelism
-    bucket_docs = max(cfg.block_size, math.ceil(max(1, n_docs) / max(1, 2 * parallelism)))
-    k1, b = cfg.bm25.k1, cfg.bm25.b
-    block_size = cfg.block_size
+    def blocks(batches):
+        for batch in batches:
+            if batch.num_rows:
+                yield pa.RecordBatch.from_pydict(block_max_frame(
+                    batch.column("term").to_numpy(zero_copy_only=False),
+                    batch.column("doc_id").to_numpy(),
+                    batch.column("freq").to_numpy(),
+                    batch.column("dl").to_numpy(),
+                    block_size, k1, b, avgdl))
 
-    def _pack_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-        # rows are already (bucket, term, doc_id)-sorted
-        # (sortWithinPartitions); pack the whole slice in one vectorized
-        # pass (r8) — the per-(bucket,term) pandas groupby it replaces
-        # allocated one sub-DataFrame per group and was the dominant cost
-        # of this stage (byte-identical output, property-tested)
-        return pd.DataFrame(pack_frame(
-            pdf["bucket"].to_numpy(), pdf["term"].to_numpy(),
-            pdf["doc_id"].to_numpy(), pdf["freq"].to_numpy(),
-            pdf["dl"].to_numpy(), pdf["positions"].to_numpy(),
-            block_size, k1, b, avgdl))
-
-    def pack_partition(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last_b = pdf["bucket"].iloc[-1]
-            last_t = pdf["term"].iloc[-1]
-            tail = (pdf["bucket"] == last_b) & (pdf["term"] == last_t)
-            carry = pdf[tail]
-            body = pdf[~tail]
-            if len(body):
-                yield _pack_pdf(body)
-        if carry is not None and len(carry):
-            yield _pack_pdf(carry)
-
-    n_buckets = math.ceil(max(1, n_docs) / bucket_docs)
-    # HASH-partition on the composite (bucket, term) key (r8; replaces the
-    # r5 range partitioning). The packing groups only need rows sharing a
-    # (bucket, term) key in one partition — hash on the composite gives
-    # that, and with vocab × n_buckets distinct keys (≫ 100× the partition
-    # count) balls-into-bins is smooth, unlike the r5-rejected hash on
-    # `bucket` ALONE (~as many keys as partitions → measured 3.2×
-    # max/median skew). It also spreads a pathologically heavy bucket's
-    # terms across every partition — strictly better skew behavior than
-    # range splitting at term boundaries — and, unlike repartitionByRange,
-    # needs no boundary-sampling job (which re-ran the full postings scan:
-    # guide §2.4, measured ~2 s of the stage at bench scale).
-    bucketed = (postings
-                .withColumn("bucket",
-                            (F.col("doc_id") / F.lit(bucket_docs)).cast("int"))
-                .repartition(max(1, min(n_buckets, 2 * parallelism)),
-                             "bucket", "term")
-                .sortWithinPartitions("bucket", "term", "doc_id"))
-    packed = bucketed.mapInPandas(pack_partition, PACKED_SCHEMA)
-    packed.write.mode("overwrite").option("compression", "zstd").parquet(paths.packed(field))
-    meta = {"bucket_docs": bucket_docs, "n_buckets": n_buckets,
-            "block_size": block_size}
-    fsio.write_json(os.path.join(paths.field_dir(field), "packed_meta.json"),
-                    meta)
+    (spark.read.parquet(paths.postings(field))
+          .select("term", "doc_id", "freq", "dl")
+          .mapInArrow(blocks, BLOCKMAX_SCHEMA)
+          .write.mode("overwrite").option("compression", "zstd")
+          .parquet(paths.blockmax(field)))
 
 
 def build_index(spark: SparkSession, docs_df: DataFrame, out_dir: str,

@@ -1,25 +1,13 @@
-"""Packed posting-list format: docID-sorted, delta + varint compressed blocks
-with skip metadata (first/last doc per block) and block-max scores.
+"""Varint codecs for the postings' positions column.
 
-This is the north-star's "real index format" (SURVEY.md §2.4 I1, §4.2.1),
-replacing what Lucene does inside ES in the reference. A block holds up to
-``block_size`` (default 128, like Lucene) postings of one term within one
-doc-range bucket:
-
-- ``docs``  : varint(first_doc), then varint(gap) for subsequent docIDs
-- ``freqs`` : varint per posting
-- ``dls``   : varint per posting (quantized doc length — denormalized norms)
-- ``pos``   : per posting varint(count) then varint position deltas
-- ``first_doc``/``last_doc``: the skip pointer — a scan skips a whole block
-  when looking for docIDs beyond ``last_doc``
-- ``max_tf_norm``: max over the block of freq/(freq + k1·(1−b+b·dl/avgdl)) —
-  the block-max metadata driving WAND pruning (upper bound = idf·max_tf_norm)
-
-Doc-range bucketing (``bucket = doc_id // bucket_docs``) serves two purposes:
-(1) hot-term skew — a term with 10^9 postings splits across buckets, bounding
-any single applyInPandas group (explicit salting per SURVEY.md §2.6 J1); and
-(2) distributed WAND — one bucket holds *every* term's postings for its doc
-range, so a per-bucket task can run doc-at-a-time top-k with all query terms.
+A posting stores its positions as one ``bytes`` value: varint(count), then
+varint position deltas (:func:`encode_positions`). The analyzer UDF emits
+that buffer directly, so positions never travel as Arrow int arrays through
+shuffles (≈3× smaller rows through sort/exchange/parquet), and the phrase
+scorers decode it (:func:`decode_positions`, or one
+:func:`varint_decode_np` over many rows' buffers at once). The pure-Python
+coders are the reference implementations the numpy ones are
+property-tested against.
 """
 
 from __future__ import annotations
@@ -41,11 +29,8 @@ def varint_encode(values: Iterable[int]) -> bytes:
 
 
 def encode_positions(plist: List[int]) -> bytes:
-    """One posting's positions → varint(count) + varint deltas. This is the
-    SAME byte layout a packed block uses per posting, so block packing can
-    concatenate these buffers without re-encoding. Produced directly inside
-    the analyzer UDF — positions never travel as Arrow int arrays through
-    shuffles (≈3× smaller rows through sort/exchange/parquet)."""
+    """One posting's positions → varint(count) + varint deltas. Produced
+    directly inside the analyzer UDF."""
     out = bytearray()
     prev = 0
     vals = [len(plist)]
@@ -85,8 +70,7 @@ def varint_decode(buf: bytes) -> List[int]:
 
 def varint_decode_np(buf: bytes) -> np.ndarray:
     """Vectorized varint decode (int64 array) — the hot-loop replacement for
-    ``varint_decode`` (r2, VERDICT r1 wrong #2: the per-byte Python loop was
-    the dominant per-block cost in WAND). Whole-buffer numpy: terminal bytes
+    ``varint_decode``. Whole-buffer numpy: terminal bytes
     (high bit clear) delimit groups; each byte contributes
     ``(b & 0x7F) << (7 · offset_in_group)``, summed per group.
 
@@ -111,9 +95,7 @@ def varint_decode_np(buf: bytes) -> np.ndarray:
 def varint_encode_np_offsets(values) -> Tuple[bytes, np.ndarray]:
     """Vectorized varint encode returning ``(buffer, byte_end_per_value)`` —
     ``ends[i]`` is the exclusive byte offset of value ``i``'s encoding, so a
-    caller can slice the encoding of any value RANGE out of the one buffer
-    (r8: lets block packing encode a whole partition in one numpy pass and
-    cut per-block byte windows, instead of one encode call per block).
+    caller can slice the encoding of any value RANGE out of the one buffer.
     Processes one 7-bit byte POSITION of every value per numpy pass (≤ 10
     passes for 64-bit inputs); property-tested byte-identical to
     ``varint_encode``."""
@@ -140,156 +122,5 @@ def varint_encode_np_offsets(values) -> Tuple[bytes, np.ndarray]:
 
 
 def varint_encode_np(values) -> bytes:
-    """Vectorized varint encode (r2); see ``varint_encode_np_offsets``."""
+    """Vectorized varint encode; see ``varint_encode_np_offsets``."""
     return varint_encode_np_offsets(values)[0]
-
-
-def pack_block(doc_ids: np.ndarray, freqs: np.ndarray, dls: np.ndarray,
-               positions: List[List[int]], k1: float, b: float,
-               avgdl: float) -> Tuple[bytes, bytes, bytes, bytes, float]:
-    """Pack one docID-sorted block. Returns (docs, freqs, dls, pos, max_tf_norm)."""
-    gaps = np.empty_like(doc_ids)
-    gaps[0] = doc_ids[0]
-    gaps[1:] = np.diff(doc_ids)
-    docs_b = varint_encode_np(gaps)
-    freqs_b = varint_encode_np(freqs)
-    dls_b = varint_encode_np(dls)
-    if positions and isinstance(positions[0], (bytes, bytearray)):
-        # already per-posting varint buffers (encode_positions) — concatenate
-        pos_b = b"".join(bytes(p) for p in positions)
-    else:
-        pos_parts: List[int] = []
-        for plist in positions:
-            pos_parts.append(len(plist))
-            prev = 0
-            for p in plist:
-                pos_parts.append(p - prev)
-                prev = p
-        pos_b = varint_encode(pos_parts)
-    denom = freqs + k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl)
-    max_tf_norm = float(np.max(freqs / denom))
-    return docs_b, freqs_b, dls_b, pos_b, max_tf_norm
-
-
-def unpack_block(docs_b: bytes, freqs_b: bytes, dls_b: bytes,
-                 pos_b: bytes) -> Tuple[np.ndarray, np.ndarray, np.ndarray, List[List[int]]]:
-    gaps = varint_decode(docs_b)
-    doc_ids = np.cumsum(np.asarray(gaps, dtype=np.int64))
-    freqs = np.asarray(varint_decode(freqs_b), dtype=np.int64)
-    dls = np.asarray(varint_decode(dls_b), dtype=np.int64)
-    flat = varint_decode(pos_b)
-    positions: List[List[int]] = []
-    i = 0
-    for _ in range(len(doc_ids)):
-        n = flat[i]
-        i += 1
-        deltas = flat[i:i + n]
-        i += n
-        acc = 0
-        plist = []
-        for d in deltas:
-            acc += d
-            plist.append(acc)
-        positions.append(plist)
-    return doc_ids, freqs, dls, positions
-
-
-PACKED_SCHEMA = (
-    "bucket int, term string, block_id int, n int, first_doc long, last_doc long, "
-    "docs binary, freqs binary, dls binary, pos binary, max_tf_norm double"
-)
-
-
-def pack_term_bucket(term: str, bucket: int, doc_ids: np.ndarray,
-                     freqs: np.ndarray, dls: np.ndarray,
-                     positions: List[List[int]], block_size: int,
-                     k1: float, b: float, avgdl: float) -> List[tuple]:
-    """Pack one (term, bucket) group (already docID-sorted) into block rows."""
-    rows = []
-    for bi, start in enumerate(range(0, len(doc_ids), block_size)):
-        sl = slice(start, start + block_size)
-        d, f, l = doc_ids[sl], freqs[sl], dls[sl]
-        p = positions[start:start + block_size]
-        docs_b, freqs_b, dls_b, pos_b, mtf = pack_block(d, f, l, p, k1, b, avgdl)
-        rows.append((bucket, term, bi, len(d), int(d[0]), int(d[-1]),
-                     docs_b, freqs_b, dls_b, pos_b, mtf))
-    return rows
-
-
-def pack_frame(bucket: np.ndarray, terms: np.ndarray, doc_ids: np.ndarray,
-               freqs: np.ndarray, dls: np.ndarray, positions: np.ndarray,
-               block_size: int, k1: float, b: float, avgdl: float) -> dict:
-    """Vectorized packing of a whole (bucket, term, doc_id)-sorted partition
-    slice into block rows — byte-identical to running ``pack_term_bucket``
-    over every (bucket, term) group in order (property-tested), but with the
-    per-group / per-block Python replaced by whole-array numpy (r8: the
-    pandas ``groupby`` iteration that fed ``pack_term_bucket`` created one
-    sub-DataFrame per group — hundreds of thousands of ~50 µs allocations
-    per build — and dominated the packed-build stage).
-
-    ``positions`` must hold per-posting pre-encoded varint buffers (bytes)
-    as produced by ``encode_positions`` (the analyzer-UDF output shape).
-    Returns a dict of column arrays/lists in PACKED_SCHEMA order.
-    """
-    n = len(doc_ids)
-    if n == 0:
-        return {c: [] for c in ("bucket", "term", "block_id", "n",
-                                "first_doc", "last_doc", "docs", "freqs",
-                                "dls", "pos", "max_tf_norm")}
-    doc = np.asarray(doc_ids, dtype=np.int64)
-    frq = np.asarray(freqs, dtype=np.int64)
-    dl = np.asarray(dls, dtype=np.int64)
-    # group boundaries: a new (bucket, term) run starts where either changes
-    new_grp = np.empty(n, dtype=bool)
-    new_grp[0] = True
-    new_grp[1:] = (bucket[1:] != bucket[:-1]) | (terms[1:] != terms[:-1])
-    grp_start = np.flatnonzero(new_grp)
-    grp_end = np.append(grp_start[1:], n)
-    sizes = grp_end - grp_start
-    nblocks = (sizes + block_size - 1) // block_size
-    grp_of_block = np.repeat(np.arange(len(grp_start)), nblocks)
-    first_block_of_grp = np.concatenate(([0], np.cumsum(nblocks)[:-1]))
-    block_id = (np.arange(int(nblocks.sum()))
-                - first_block_of_grp[grp_of_block])
-    blk_start = grp_start[grp_of_block] + block_id * block_size
-    blk_end = np.minimum(blk_start + block_size, grp_end[grp_of_block])
-    # docID deltas, absolute at every block start (pack_block's layout)
-    gaps = np.empty(n, dtype=np.int64)
-    gaps[1:] = doc[1:] - doc[:-1]
-    gaps[blk_start] = doc[blk_start]
-    docs_buf, docs_ends = varint_encode_np_offsets(gaps)
-    freqs_buf, freqs_ends = varint_encode_np_offsets(frq)
-    dls_buf, dls_ends = varint_encode_np_offsets(dl)
-
-    def _cut(buf: bytes, ends: np.ndarray) -> List[bytes]:
-        lo = np.where(blk_start > 0, ends[blk_start - 1], 0).tolist()
-        hi = ends[blk_end - 1].tolist()
-        return [buf[a:z] for a, z in zip(lo, hi)]
-
-    # per-posting tf_norm once, per-block max via segmented reduce —
-    # identical arithmetic to pack_block (freq/(freq + k1·(1−b+b·dl/avgdl)))
-    denom = frq + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl)
-    tfn = frq / denom
-    max_tf_norm = np.maximum.reduceat(tfn, blk_start)
-    pos_list = positions.tolist()
-    first = next((p for p in pos_list if p is not None), None)
-    if first is not None and not isinstance(first, (bytes, bytearray)):
-        # int-array positions (the SQL-expressible profile stores raw
-        # arrays): per-posting varint encode, then concatenate like the
-        # pre-encoded case — byte-identical to pack_block's else branch
-        pos_list = [encode_positions(list(p)) for p in pos_list]
-    pos_cuts = [b"".join(bytes(p) for p in pos_list[s:e])
-                for s, e in zip(blk_start.tolist(), blk_end.tolist())]
-    return {
-        "bucket": bucket[blk_start],
-        "term": terms[blk_start],
-        "block_id": block_id,
-        "n": blk_end - blk_start,
-        "first_doc": doc[blk_start],
-        "last_doc": doc[blk_end - 1],
-        "docs": _cut(docs_buf, docs_ends),
-        "freqs": _cut(freqs_buf, freqs_ends),
-        "dls": _cut(dls_buf, dls_ends),
-        "pos": pos_cuts,
-        "max_tf_norm": max_tf_norm,
-    }

@@ -13,11 +13,11 @@ instead of 4×25 SLURM jobs:
     (range partitioning on BOTH columns is the explicit hot-term salting:
     a term with 10^9 postings spreads across many partitions instead of
     hot-spotting one, SURVEY.md §2.6 J1) → rewrite postings + re-aggregate
-    term_stats → recompute collection stats → repack blocks.
+    term_stats → recompute collection stats → rewrite the block-max table.
 
 Everything after the union is the build's own field writer
 (``indexing.builder.write_field``): a merged field gets the same postings
-layout, term_stats, packed blocks and ``_lineage/field_<f>.json`` record as
+layout, term_stats, block-max table and ``_lineage/field_<f>.json`` record as
 a built one. The merger keeps only the docID rebase, the union and its
 refusals of incompatible sources.
 
@@ -35,13 +35,14 @@ from __future__ import annotations
 import json
 import os
 import time
+from dataclasses import replace
 from functools import reduce
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from elasticsearch_alps_spark import fsio
-from elasticsearch_alps_spark.config import IndexConfig
+from elasticsearch_alps_spark.config import BM25Params, IndexConfig
 from elasticsearch_alps_spark.indexing.builder import IndexPaths, write_field
 
 
@@ -77,6 +78,13 @@ def merge_indexes(spark: SparkSession, index_dirs: List[str], out_dir: str,
                         f"cannot merge: field {f!r} differs on {k!r} "
                         f"({stats[0]['fields'][f].get(k)!r} vs "
                         f"{s['fields'][f].get(k)!r})")
+        if s["bm25"] != stats[0]["bm25"]:
+            raise ValueError(f"cannot merge: bm25 differs ({stats[0]['bm25']!r}"
+                             f" vs {s['bm25']!r})")
+    # the merged index is scored with its sources' BM25 parameters (stats
+    # below), so the block-max bounds must be computed with them too: a
+    # bound under other k1/b can fall below a posting's real contribution
+    cfg = replace(cfg, bm25=BM25Params(**stats[0]["bm25"]))
     # The cumulative-offset docID rebase below assumes engine-assigned dense
     # IDs. A segment built with a USER-supplied doc_id_col carries meaningful
     # external IDs: rebasing would silently rewrite them, and the same logical

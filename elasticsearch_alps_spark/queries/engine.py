@@ -11,8 +11,9 @@ a small declarative plan over the postings tables:
 
 Every clause weight is computed once, on the driver, as multiplier ·
 ``SearchEngine.idf(df)`` (glibc ``ln`` — the value the DuckDB oracle
-reproduces). The driver fold, the distributed plan and WAND all consume those
-same doubles, so the route a query takes never changes its scores.
+reproduces). The driver fold and the distributed plan both consume those
+same doubles, and the block-max pruned route (``use_wand``) scores through
+the distributed plan, so the route a query takes never changes its scores.
 
 Scoring is Lucene 8.11 BM25 (ES 7.17 default): no (k1+1) factor,
 idf = ln(1 + (N−df+0.5)/(df+0.5)), dl SmallFloat-quantized, *global* collection
@@ -32,7 +33,7 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 
 from elasticsearch_alps_spark.analysis.analyzers import (
     analyze, analyze_positions, fuzzy_auto_distance, is_single_word,
@@ -127,8 +128,8 @@ class SearchEngine:
         self._ts_lookups: Dict[str, int] = {}
         self._views: Dict[str, str] = {}
         self._views_lock = threading.Lock()
-        self._packed_cache: Dict[str, tuple] = {}
-        self._packed_lock = threading.Lock()
+        self._blockmax_cache: Dict[str, DataFrame] = {}
+        self._blockmax_lock = threading.Lock()
         # built once, from a one-row LOCAL relation + limit(0) rather than
         # createDataFrame([], ddl) (r8): the empty-list form is RDD-backed
         # and schedules defaultParallelism EMPTY tasks per collect —
@@ -145,6 +146,7 @@ class SearchEngine:
         self._totals.count = count
         self._totals.obs = obs
         self._totals.scorer = None
+        self._totals.pruning = None
 
     def _routed(self, scorer: str, hits: DataFrame) -> DataFrame:
         self._totals.scorer = scorer
@@ -156,6 +158,16 @@ class SearchEngine:
         "distributed" | "wand", or None when no scorer ran (stopword-only
         or df-0 queries, gated term/wildcard, wildcard, match_all)."""
         return getattr(self._totals, "scorer", None)
+
+    @property
+    def last_pruning(self) -> Optional[dict]:
+        """What the pruned route did for this thread's last query (None when
+        another route served it): ``block_rows`` read, ``intervals`` (doc
+        intervals with a candidate block) and how many were ``kept`` and
+        scored, ``rounds`` (one scoring Spark job each),
+        ``postings_scored`` (postings rows read over all rounds) and
+        ``theta`` (the final threshold)."""
+        return getattr(self._totals, "pruning", None)
 
     @property
     def _last_total_df(self):
@@ -405,7 +417,7 @@ class SearchEngine:
                           size: int) -> DataFrame:
         """Vectorized driver-side BM25 fold over the query's postings — the
         same closed form the oracle uses, over the same clause weights the
-        distributed plan and WAND take as literals."""
+        distributed plan takes as literals."""
         _, avgdl = self._fstat(field)
         k1, b = self.k1, self.b
         one_minus_b = 1.0 - b
@@ -438,7 +450,7 @@ class SearchEngine:
         # slot, so per-doc addition order is the row order restricted to that
         # doc. Missing jidx slots simply don't add (the distributed fold adds
         # an exact + 0.0 there), so scores are bit-identical across index
-        # layouts AND to the distributed/WAND folds. Above DET_SUM_MAX
+        # layouts AND to the distributed fold. Above DET_SUM_MAX
         # pairs, the same ascending-by-value fallback as _grouped_score.
         if n_elems > 1:
             if n_elems <= self.DET_SUM_MAX:
@@ -488,12 +500,34 @@ class SearchEngine:
     # its upper bound (min term df) is at most this many rows (~8 B/row →
     # ≤40 MB); above it the semi-join shuffles instead
     PHRASE_BROADCAST_MAX_CANDIDATES = 5_000_000
-    # use_wand="auto" picks WAND when the largest clause df reaches this:
-    # the WAND/distributed crossover measured by tools/wand_crossover.py
-    # (BENCH/BASELINE.md r3: df ≈ 6×10⁴ loses 0.77–0.83×, ≈ 10⁵ parity,
-    # ≈ 10⁶ wins 1.23–1.48×). Both scorers are result-identical, so it
-    # only moves speed.
-    WAND_AUTO_MIN_DF = 200_000
+    # use_wand="auto" takes the pruned route when the largest clause df
+    # reaches this (and then only for a one-round plan): the crossover
+    # tools/wand_crossover.py measured for the route on a 1M-doc index
+    # (4-core VM, local[4], BENCH/runs.jsonl): single terms at df 222,890
+    # lose 0.79×, at 492,047 win 1.15×, at 698,402 1.58×, at 979,827
+    # 1.99×. Both routes are result-identical, so it only moves speed.
+    WAND_AUTO_MIN_DF = 400_000
+    # doc-ID ranges one pruned-route round puts in its scan predicate;
+    # beyond it the smallest gaps between kept intervals are scored too.
+    # The OR of BETWEENs costs a 1M-doc two-term scan the same 1.3-1.4 s
+    # at 1 and 16 ranges, 2.8 s at 24 and 10 s at 64 (local[4])
+    PRUNE_MAX_RANGES = 16
+    # ... and the doc_id buckets (doc_id >> s) it may test instead, one IN
+    # list, when the kept intervals need more ranges than that. It cuts the
+    # rows scored, not the rows read: on a 1M-doc index (local[4]) "def
+    # import" scored 19k rows in 0.72 s with it and 1.04M in 1.00 s without
+    PRUNE_MAX_BUCKETS = 4096
+    # block rows one pruned-route query collects to the driver (about
+    # 8 MB of numpy); past it, adjacent blocks of a term merge
+    PRUNE_MAX_BLOCK_ROWS = 1 << 18
+    # estimated docs the first pruned-route round scores at least. Rows
+    # past the scan cost little next to the scan: on a 1M-doc index
+    # (local[4]) one round scoring 6.5k rows and one scoring 59k rows both
+    # took about 0.7 s, and every further round is one more scan
+    PRUNE_ROUND_DOCS = 50_000
+    # each later round scores this many times the estimated docs of the
+    # one before, so θ tightens in a few Spark jobs
+    PRUNE_GROWTH = 16
 
     @staticmethod
     def _canon_jidx(clause_rows) -> Dict[Tuple[int, str], int]:
@@ -520,7 +554,7 @@ class SearchEngine:
         aggregates a single element — order-free — and the left-associated
         projection sum over jidx 0..m−1 is deterministic. Missing clauses
         contribute an exact ``+ 0.0`` (IEEE: x + 0.0 ≡ x for x ≥ 0), so the
-        fold equals the driver/WAND fold of only-present contributions in
+        fold equals the driver fold of only-present contributions in
         jidx order, bit for bit. Unlike the r6 ascending-value
         collect_list fold this keeps streaming ``partial_sum`` map-side
         combines and whole-stage codegen (the r6 fold shipped every
@@ -566,20 +600,20 @@ class SearchEngine:
         return observed, obs
 
     def _score_query(self, field: str, clause_mults: List[Clause],
-                     required: int, size: int, wand: bool = False,
+                     required: int, size: int,
                      dfs: Optional[Dict[str, int]] = None) -> DataFrame:
         """The one route every clause query (match, term, fuzzy, bool) takes.
         ``clause_mults`` are (clause_id, term, multiplier); the weight of each
-        is multiplier · idf(df), computed here once. Order: resolve WAND
-        (``wand`` marks the match family; its ValueErrors fire first), then
-        the driver working set under driver_score_max_postings, then WAND or
-        the distributed scorer. ``dfs`` spares the df lookup when the caller
+        is multiplier · idf(df), computed here once. Order: resolve the
+        pruned route (its ValueErrors fire first), then the driver working
+        set under driver_score_max_postings, then the pruned route or the
+        distributed scorer. ``dfs`` spares the df lookup when the caller
         already holds them (fuzzy expansions carry their df) and makes the
         budget check exact."""
         if not clause_mults:
             return self._empty_hits()
         terms = list(dict.fromkeys(t for _, t, _ in clause_mults))
-        use_wand = wand and self._resolve_use_wand(field, terms)
+        use_wand = self._resolve_use_wand(field, terms)
         pdf = self._driver_working_set(field, terms, dfs=dfs)
         if pdf is not None:
             if not len(pdf):
@@ -596,22 +630,36 @@ class SearchEngine:
             return self._empty_hits()
         clauses = self._clause_weights(field, clause_mults, dfs)
         if use_wand:
-            return self._routed("wand",
-                                self._wand(field, clauses, size, required))
+            hits = self._wand(field, clauses, size, required, dfs)
+            if hits is not None:
+                return self._routed("wand", hits)
         return self._routed("distributed", self._score_clauses(
             field, clauses, required, size))
 
     def _clause_weights(self, field: str, clause_mults: List[Clause],
                         dfs) -> List[Clause]:
         """(clause_id, term, multiplier · idf(df)) — the only place a clause
-        weight is computed, so every scorer folds the same doubles."""
-        return [(cid, t, mult * self.idf(field, int(dfs.get(t, 0))))
-                for cid, t, mult in clause_mults]
+        weight is computed, so every scorer folds the same doubles. A
+        non-finite weight is refused here: the distributed and pruned
+        routes carry weights as ``{w!r}D`` SQL literals, which ``infD`` and
+        ``nanD`` are not, and the driver fold would return it silently."""
+        out = [(cid, t, mult * self.idf(field, int(dfs.get(t, 0))))
+               for cid, t, mult in clause_mults]
+        bad = [(t, w) for _, t, w in out if not math.isfinite(w)]
+        if bad:
+            raise ValueError(f"non-finite clause weight(s) {bad!r}: clause "
+                             "multipliers (boosts) must be finite")
+        return out
 
-    def _score_clauses(self, field: str, clauses: List[Clause],
-                       required: int, size: int) -> DataFrame:
-        """Distributed scorer: per-doc score = Σ weight·tf_norm over matched
-        clause terms; keep docs matching ≥ ``required`` distinct clauses.
+    def _clause_matches(self, field: str, clauses: List[Clause],
+                        required: int,
+                        doc_filter: Optional[str] = None,
+                        rows_obs: Optional[Observation] = None) -> DataFrame:
+        """Every matching doc's (doc_id, score): per-doc score = Σ
+        weight·tf_norm over matched clause terms; keep docs matching ≥
+        ``required`` distinct clauses. ``doc_filter`` (a SQL predicate on
+        doc_id) restricts the postings scan; ``rows_obs`` counts the
+        postings rows that pass it.
 
         The clause frame is SQL literals over one pruned postings scan — no
         join, no createDataFrame. With one clause per term (the whole match
@@ -622,8 +670,6 @@ class SearchEngine:
         which Catalyst folds into one Generate over the scan. The CASE form
         stays for the common case: on a 6M-row, 3-term probe (local[4]) the
         inline form ran 1.42–1.62 s against 1.36–1.43 s, scores identical."""
-        if not clauses:
-            return self._empty_hits()
         jmap = self._canon_jidx(clauses)
         by_term: Dict[str, list] = {}
         for cid, t, w in clauses:
@@ -635,6 +681,13 @@ class SearchEngine:
                                       for t, v in values) + " END"
 
         post = self._postings[field].filter(F.col("term").isin(list(by_term)))
+        if doc_filter:
+            post = post.filter(F.expr(doc_filter))
+        if rows_obs is not None:
+            # project first: the CollectMetrics node stops column pruning,
+            # and the scan would read the positions blobs
+            post = post.select("term", "doc_id", "freq", "dl").observe(
+                rows_obs, F.count(F.lit(1)).alias("n"))
         if len(by_term) == len(clauses):  # one (jidx, w, clause_id) per term
             frame = [F.expr(case((t, rows[0][k]) for t, rows in by_term.items()))
                      .alias(name) for k, name in enumerate(
@@ -650,9 +703,21 @@ class SearchEngine:
         agg = self._grouped_score(j, len(clauses), required > 1)
         if required > 1:
             agg = agg.filter(F.col("nmatch") >= required)
-        agg, obs = self._observe_total(agg)
-        return (agg.select("doc_id", "score")
-                   .orderBy(F.desc("score"), F.asc("doc_id")).limit(size))
+        return agg.select("doc_id", "score")
+
+    @staticmethod
+    def _top(matches: DataFrame, size: int) -> DataFrame:
+        return matches.orderBy(F.desc("score"), F.asc("doc_id")).limit(size)
+
+    def _score_clauses(self, field: str, clauses: List[Clause],
+                       required: int, size: int) -> DataFrame:
+        """Distributed scorer: the top ``size`` of :meth:`_clause_matches`,
+        with the full match count observed on the way."""
+        if not clauses:
+            return self._empty_hits()
+        agg, _ = self._observe_total(
+            self._clause_matches(field, clauses, required))
+        return self._top(agg, size)
 
     # --------------------------------------------------- the six query types
 
@@ -680,50 +745,49 @@ class SearchEngine:
             required = max(1, int(math.floor(minimum_should_match / 100.0 * len(mult))))
         else:
             required = 1
-        # match-query clauses are one-per-distinct-term, so the WAND
-        # conjunctive/msm extension applies to AND and msm too (r2)
         return self._score_query(
             field, [(i, t, float(k)) for i, (t, k) in enumerate(mult.items())],
-            required, size, wand=True)
+            required, size)
 
     def _resolve_use_wand(self, field: str, terms: List[str]) -> bool:
-        """``use_wand="auto"`` (r4, VERDICT r3 next #2): pick WAND per query
-        when the LARGEST clause df reaches the constant WAND_AUTO_MIN_DF
-        (the measured crossover: pruning pays exactly where posting lists
-        get long) — else the distributed scorer.
+        """Whether the pruned route may serve this query. ``use_wand="auto"``
+        picks it when the LARGEST clause df reaches the constant
+        WAND_AUTO_MIN_DF (pruning pays where posting lists get long), else
+        the distributed scorer; :meth:`_wand` then keeps it only for a
+        one-round plan.
         The decision is O(1) from the hot-term cache except in one regime —
         every query term outside the top-K dict while the K-th df itself
         clears the threshold — where a pruned term_stats lookup resolves it
         exactly (ADVICE r4: assuming the ceiling there misrouted all
         rare-term queries to WAND on corpora whose K-th term is that hot).
-        WAND also needs the packed blocks on disk and a norms field."""
+        The route needs a norms field and the field's block-max table,
+        which the build writes for ``main`` only."""
         mode = self.qcfg.use_wand
         if not mode:
             return False
+        if mode != "auto" and not self._norms_enabled(field):
+            # the block bounds use the norms/dl BM25 formula, which is
+            # WRONG for a norms-free field (an ExtraField like url)
+            raise ValueError(
+                f"use_wand=True is invalid for field {field!r}: norms "
+                "are disabled (docs-only scoring), and the block-max "
+                "bounds assume the norms/dl BM25 formula. Use "
+                "use_wand=False or 'auto' (auto never prunes here).")
         src = self._field_src.get(field, field)
-        packed = self.paths.packed(src)
-        has_packed = "://" in packed or os.path.exists(packed)
-        if mode != "auto":
-            # ADVICE r6 #2: an explicit use_wand=True must not sail past the
-            # auto-mode guards — WAND needs the packed blocks on disk, and
-            # its max-score bounds use the norms/dl BM25 formula, which is
-            # WRONG for a norms-free field (ExtraField builds both ways:
-            # build_packed=False, norms=False).
-            if not self._norms_enabled(field):
-                raise ValueError(
-                    f"use_wand=True is invalid for field {field!r}: norms "
-                    "are disabled (docs-only scoring), and WAND's max-score "
-                    "bounds assume the norms/dl BM25 formula. Use "
-                    "use_wand=False or 'auto' (auto never picks WAND here).")
-            if not has_packed:
-                raise ValueError(
-                    f"use_wand=True but field {field!r} has no packed "
-                    f"blocks at {packed} (index built with "
-                    "build_packed=False?). Rebuild with build_packed=True "
-                    "or use use_wand=False / 'auto'.")
-            return True
-        if not has_packed or not self._norms_enabled(field):
+        if src != "main" or not self._norms_enabled(field):
             return False
+        table = self.paths.blockmax(src)
+        if "://" not in table and not os.path.exists(table):
+            if mode != "auto":
+                raise ValueError(
+                    f"use_wand=True but field {field!r} has no block-max "
+                    f"table at {table} (index built with build_packed=False, "
+                    "or before the block-max format replaced packed/). "
+                    "Rebuild the index with build_packed=True, or use "
+                    "use_wand=False / 'auto'.")
+            return False
+        if mode != "auto":
+            return True
         thresh = self.WAND_AUTO_MIN_DF
         hot, ceiling = self._hot_dfs(field)
         if any(hot.get(t, 0) >= thresh for t in terms):
@@ -739,56 +803,157 @@ class SearchEngine:
         dfs = self._df_lookup(field, missing)
         return any(dfs.get(t, 0) >= thresh for t in missing)
 
-    def _wand(self, field: str, clauses: List[Clause], size: int,
-              required: int = 1) -> DataFrame:
-        """Block-max WAND over the packed blocks (M6) — result-identical to
-        the distributed scorer (pruning is lossless; asserted in tests)."""
-        from elasticsearch_alps_spark import fsio
-        from elasticsearch_alps_spark.queries.wand import wand_topk
-        _, avgdl = self._fstat(field)
+    def _block_rows(self, field: str, terms: List[str], dfs: Dict[str, int]
+                    ) -> Dict[str, Tuple[np.ndarray, np.ndarray, np.ndarray]]:
+        """The query terms' blocks (first_doc, last_doc, max_tf_norm), each
+        sorted by first_doc — one term-pruned scan of the block-max table,
+        whose read (pinned when ``cache=True``) is opened once per engine.
+        When the terms hold more than PRUNE_MAX_BLOCK_ROWS blocks, runs of
+        adjacent blocks of a term merge on the executors (first of the
+        first, last of the last, max of the bounds: still a bound for every
+        posting of the run), so the driver's plan stays that size however
+        long the posting lists grow."""
         src = self._field_src.get(field, field)
-        cached = self._packed_cache
-        if src not in cached:
-            with self._packed_lock:
-                if src not in cached:
-                    df = self.spark.read.parquet(self.paths.packed(src))
-                    if self._cache:
-                        df = df.cache()
-                    meta = fsio.read_json(
-                        os.path.join(self.paths.field_dir(src),
-                                     "packed_meta.json"), self.spark)
-                    cached[src] = (df, meta["n_buckets"])
-        packed_df, n_buckets = cached[src]
-        # WAND prunes, so the scoring job can't observe the full match count.
-        # Keep an UNOBSERVED positions-free recount plan as the lazy fallback
-        # (r2 VERDICT wrong #4 / ADVICE): _response only pays for it when a
-        # response row is actually assembled — ad-hoc top-k calls never run it.
-        # WAND clauses are one-per-distinct-term (see wand_topk), so
-        # nmatch == countDistinct(term). Guard the assumption (ADVICE r3): a
-        # future caller passing duplicate-term or multi-clause-same-term
-        # expansions (e.g. fuzzy) would silently miscount against `required`.
-        terms = list({t for _, t, _ in clauses})
-        if len(terms) != len(clauses):
-            raise ValueError(
-                "_wand requires one clause per distinct term "
-                f"(got {len(clauses)} clauses over {len(terms)} terms); "
-                "the total_hits recount counts distinct terms per doc")
-        recount = (self._postings[field]
-                   .filter(F.col("term").isin(terms))
-                   .groupBy("doc_id")
-                   .agg(F.countDistinct("term").alias("nmatch")))
-        if required > 1:
-            recount = recount.filter(F.col("nmatch") >= required)
-        self._set_total(df=recount.select("doc_id"))
-        # canonical clause-order fold (r7, see _grouped_score): WAND folds
-        # each doc's contributions in the same (clause_id, term) jidx order
-        # as the DataFrame scorers, so pruned results stay bit-identical
+        tables = self._blockmax_cache
+        if src not in tables:
+            with self._blockmax_lock:
+                if src not in tables:
+                    df = self.spark.read.parquet(self.paths.blockmax(src))
+                    tables[src] = df.cache() if self._cache else df
+        rows = tables[src].filter(F.col("term").isin(terms))
+        per_block = self.stats["fields"][src].get("block_size", 1)
+        n_blocks = sum(-(-dfs.get(t, 0) // per_block) for t in terms)
+        run = -(-n_blocks // self.PRUNE_MAX_BLOCK_ROWS)
+        if run > 1:
+            rank = F.row_number().over(
+                Window.partitionBy("term").orderBy("first_doc"))
+            rows = (rows.withColumn("run", F.floor((rank - 1) / run))
+                    .groupBy("term", "run")
+                    .agg(F.min("first_doc").alias("first_doc"),
+                         F.max("last_doc").alias("last_doc"),
+                         F.max("max_tf_norm").alias("max_tf_norm")))
+        pdf = (rows.select("term", "first_doc", "last_doc", "max_tf_norm")
+               .toPandas().sort_values(["term", "first_doc"], kind="stable"))
+        out = {}
+        for t, g in pdf.groupby("term", sort=False):
+            out[t] = (g["first_doc"].to_numpy(dtype=np.int64),
+                      g["last_doc"].to_numpy(dtype=np.int64),
+                      g["max_tf_norm"].to_numpy(dtype=np.float64))
+        return out
+
+    @staticmethod
+    def _theta_floor(blocks, clauses: List[Clause], size: int,
+                     required: int) -> float:
+        """A lower bound on the ``size``-th best score, from the block table
+        alone. Every block holds a posting that reaches its max_tf_norm, and
+        a doc's score is at least any one of its contributions when no
+        weight is negative, so ``size`` blocks of one clause's term bound
+        ``size`` distinct docs from below. Only for required ≤ 1: a doc that
+        must match further clauses may not count."""
+        if required > 1 or any(w < 0 for _, _, w in clauses):
+            return 0.0
+        floor = 0.0
+        for _, t, w in clauses:
+            m = blocks.get(t, (None, None, np.empty(0)))[2]
+            if len(m) >= size:
+                floor = max(floor, float(np.partition(w * m, -size)[-size]))
+        # the fold and the table compute tf_norm alike; the margin keeps
+        # the floor a bound if they ever round apart
+        return floor * (1.0 - 1e-9)
+
+    def _wand(self, field: str, clauses: List[Clause], size: int,
+              required: int, dfs: Dict[str, int]) -> Optional[DataFrame]:
+        """Block-max interval pruning, planned on the driver and scored by
+        :meth:`_clause_matches` — the distributed scorer's fold, so the
+        scores are bit-identical to it by construction.
+
+        1. read the query terms' block rows (one pruned scan);
+        2. cut the doc space at every block boundary; each interval's bound
+           is Σ w · max_tf_norm of the covering blocks, and an interval that
+           fewer than ``required`` clauses cover is dropped
+           (indexing/blockmax.py);
+        3. θ starts at the block floor (:meth:`_theta_floor`), a lower bound
+           on the ``size``-th best score that costs no scan;
+        4. each round scores the highest-bound intervals still ≥ θ exactly
+           (≥: a tie can still win on doc ID) and raises θ to the
+           ``size``-th score found. A doc left out scores below θ, under
+           ``size`` docs already found, so the top ``size`` of what was
+           scored is the exact top ``size``.
+
+        The first round takes every interval that can reach the floor when
+        the floor prunes well (an OR query on hot terms: one round), else
+        the highest-bound PRUNE_ROUND_DOCS estimated docs; each later round
+        PRUNE_GROWTH times more. Every round is a postings scan, so a plan
+        of several rounds loses to the one-scan unpruned plan (1M docs,
+        local[4]: "return self" 5 rounds, 2.6 s against 1.2 s); under
+        ``use_wand="auto"`` such a plan returns None and the caller serves
+        the distributed scorer.
+
+        total_hits comes from the unpruned plan, built and counted only
+        when a response asks for it."""
+        from elasticsearch_alps_spark.indexing.blockmax import (
+            doc_predicate, interval_bounds,
+        )
         jmap = self._canon_jidx(clauses)
-        term_order = ({t: jmap[(cid, t)] for cid, t, _ in clauses}
-                      if len(clauses) <= self.DET_SUM_MAX else None)
-        return wand_topk(self.spark, packed_df, n_buckets, clauses, size,
-                         self.k1, self.b, avgdl, required,
-                         term_order=term_order)
+        fold = sorted(clauses, key=lambda c: jmap[(c[0], c[1])])
+        terms = list(dict.fromkeys(t for _, t, _ in clauses))
+        blocks = self._block_rows(field, terms, dfs)
+        edges, bound, ncover, est = interval_bounds(blocks, dfs, fold,
+                                                    required)
+        # bounds sum in fold order, so w·tf_norm ≤ w·max_tf_norm holds
+        # through the rounding; the margin covers the ascending-value fold
+        # used above DET_SUM_MAX pairs
+        bound = bound * (1.0 + 1e-9)
+        cand = np.flatnonzero(ncover >= max(1, required))
+        order = cand[np.argsort(-bound[cand], kind="stable")]
+        # no query-term posting lies in an interval no block covers, so a
+        # range may span those gaps for free
+        free = ncover == 0
+        theta0 = self._theta_floor(blocks, clauses, size, required)
+        # the first round scores every interval that can reach the floor
+        # when they are few next to all the candidates, and at least
+        # PRUNE_ROUND_DOCS estimated docs
+        reach = float(np.sum(est[order][bound[order] >= theta0]))
+        want = max(float(self.PRUNE_ROUND_DOCS),
+                   reach if reach * self.PRUNE_GROWTH
+                   <= float(np.sum(est[cand])) else 0.0)
+        if reach > want and self.qcfg.use_wand == "auto":
+            return None  # more than one round: more than one scan
+        scored: Dict[int, float] = {}
+        top: List[Tuple[int, float]] = []
+        theta, done, rounds, n_rows = theta0, 0, 0, 0
+        while done < len(order):
+            # the intervals left are in descending bound order, so the ones
+            # that can still hold a top-`size` doc are a prefix of them
+            rest = order[done:]
+            live = rest[:int(np.count_nonzero(bound[rest] >= theta))]
+            if not len(live):
+                break
+            cum = np.cumsum(est[live])
+            batch = (live if cum[-1] <= want
+                     else live[:int(np.searchsorted(cum, want)) + 1])
+            obs = Observation()
+            rows = self._top(self._clause_matches(
+                field, clauses, required,
+                doc_predicate(edges, batch, free, self.PRUNE_MAX_RANGES,
+                              self.PRUNE_MAX_BUCKETS),
+                obs), size).collect()
+            n_rows += int(obs.get["n"])
+            rounds += 1
+            done += len(batch)
+            want *= self.PRUNE_GROWTH
+            scored.update((r["doc_id"], r["score"]) for r in rows)
+            top = sorted(scored.items(), key=lambda e: (-e[1], e[0]))[:size]
+            theta = max(theta0, top[-1][1] if len(top) >= size else 0.0)
+        hits = self._local_hits_df([d for d, _ in top], [s for _, s in top])
+        # the unpruned plan, built only if a response asks for the count
+        self._set_total(df=lambda: self._clause_matches(field, clauses,
+                                                        required))
+        self._totals.pruning = {
+            "block_rows": int(sum(len(b[0]) for b in blocks.values())),
+            "intervals": int(len(cand)), "kept": done, "rounds": rounds,
+            "postings_scored": n_rows, "theta": float(theta)}
+        return hits
 
     def _phrase_driver(self, field: str, pdf: pd.DataFrame, terms, offsets,
                        idf_sum: float, slop: int, size: int) -> DataFrame:
@@ -1281,7 +1446,9 @@ class SearchEngine:
         elif total > 0 and self._last_total_df is not None:
             # the result was limit()ed — the reference reports the full match
             # count, capped at 10,000 (ES 7 track_total_hits default, G3)
-            total = self._last_total_df.count()
+            # (the pruned route leaves a function that builds that plan)
+            plan = self._last_total_df
+            total = (plan() if callable(plan) else plan).count()
         top = rows[:100]
         # join back to the doc store for _source (J4) — broadcast the k-row side
         snippets = ""
@@ -1392,7 +1559,7 @@ class SearchEngine:
     def close(self) -> None:
         """Release session-global resources this engine registered: its
         postings temp views and any cached/pinned DataFrames (``cache=True``
-        postings/term_stats, the WAND packed-scan cache). A long-running
+        postings/term_stats, the block-max table read). A long-running
         serving session that cycles engines should close retired ones —
         temp views and pinned cache blocks otherwise accumulate for the
         application lifetime. NB Spark's cache manager is PLAN-keyed: another
@@ -1406,9 +1573,9 @@ class SearchEngine:
             for df in list(self._postings.values()) + \
                     list(self._term_stats.values()):
                 df.unpersist()
-            for df, _ in self._packed_cache.values():
+            for df in self._blockmax_cache.values():
                 df.unpersist()
-        self._packed_cache.clear()
+        self._blockmax_cache.clear()
 
     def register_views(self, prefix: str = "alps") -> Dict[str, str]:
         """Expose the index as SQL views (``{prefix}_docs``,

@@ -57,8 +57,10 @@ def ship_package(spark: SparkSession) -> None:
 
     def _probe(batches):
         # the modules every executor-side stage needs: analyzer UDFs
-        # (tokenize), postings codecs (pack/WAND walk)
+        # (tokenize), the positions codec they emit, and the block-max
+        # table builder (the build's block-table write)
         import elasticsearch_alps_spark.analysis.udfs  # noqa: F401
+        import elasticsearch_alps_spark.indexing.blockmax  # noqa: F401
         import elasticsearch_alps_spark.indexing.postings  # noqa: F401
         for b in batches:
             yield b

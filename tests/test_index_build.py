@@ -272,14 +272,29 @@ def test_extra_url_field_build_and_query(spark, corpus_df, tmp_path):
     assert eng_a.last_scorer != "wand"
 
 
-def test_explicit_wand_without_packed_blocks_is_a_clear_error(
+def test_explicit_wand_without_block_table_is_a_clear_error(
         spark, corpus_df, tmp_path):
-    """ADVICE r6 #2 (other half): use_wand=True against an index built with
-    build_packed=False fails with an actionable message."""
+    """ADVICE r6 #2 (other half): use_wand=True against an index without a
+    block-max table fails with a message that names the rebuild — both for
+    a build_packed=False index and for the layout before the block-max
+    format (a ``packed/`` directory, no ``blockmax/``). "auto" falls back
+    to the distributed scorer on both."""
+    import os
     from elasticsearch_alps_spark.config import IndexConfig, QueryConfig
     from elasticsearch_alps_spark.queries.engine import SearchEngine
-    paths = build_index(spark, corpus_df, str(tmp_path / "idx_nopack"),
-                        IndexConfig(build_packed=False), shards=2)
-    eng = SearchEngine(spark, paths.root, QueryConfig(use_wand=True))
-    with pytest.raises(ValueError, match="packed"):
-        eng.match_query("def").collect()
+    nopack = build_index(spark, corpus_df, str(tmp_path / "idx_nopack"),
+                         IndexConfig(build_packed=False), shards=2)
+    assert not os.path.exists(nopack.blockmax("main"))
+    old = build_index(spark, corpus_df, str(tmp_path / "idx_old"),
+                      IndexConfig(), shards=2)
+    os.rename(old.blockmax("main"),
+              os.path.join(old.field_dir("main"), "packed"))
+    for paths in (nopack, old):
+        eng = SearchEngine(spark, paths.root, QueryConfig(use_wand=True))
+        with pytest.raises(ValueError, match="block-max.*Rebuild"):
+            eng.match_query("def").collect()
+        auto = SearchEngine(spark, paths.root, QueryConfig(
+            use_wand="auto", driver_score_max_postings=0))
+        auto.WAND_AUTO_MIN_DF = 1
+        assert auto.match_query("def").collect()
+        assert auto.last_scorer == "distributed"

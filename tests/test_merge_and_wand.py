@@ -1,9 +1,10 @@
-"""M5 merge (merge == rebuild property) and M6 WAND (pruning losslessness)."""
+"""M5 merge (merge == rebuild property) and M6 block-max pruning (the
+``use_wand`` route: pruning losslessness)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from elasticsearch_alps_spark.config import IndexConfig, QueryConfig
+from elasticsearch_alps_spark.config import BM25Params, IndexConfig, QueryConfig
 from elasticsearch_alps_spark.fixtures import generate_documents
 from elasticsearch_alps_spark.indexing.builder import build_index
 from elasticsearch_alps_spark.merging.merger import merge_indexes
@@ -168,9 +169,9 @@ def _ranked(rows):
 
 @pytest.mark.parametrize("q", WAND_QUERIES)
 def test_wand_identical_to_exhaustive(spark, built_index, q):
-    """Block-max WAND pruning must be lossless (SURVEY.md §7.1 M6). Budget
-    0 on both engines: the distributed scorer against wand_topk itself, not
-    the driver fold that serves every under-budget query."""
+    """Block-max pruning must be lossless (SURVEY.md §7.1 M6). Budget 0 on
+    both engines: the distributed scorer against the pruned route itself,
+    not the driver fold that serves every under-budget query."""
     exhaustive = SearchEngine(spark, built_index.root,
                               QueryConfig(use_wand=False,
                                           driver_score_max_postings=0))
@@ -203,7 +204,7 @@ def _hexed(df):
 def route_engines(spark, built_index):
     """One engine per route a clause query can take: driver over the
     postings cache, driver over a per-query fetch, the distributed scorer,
-    and distributed WAND (budget 0 forces the last two)."""
+    and the block-max pruned route (budget 0 forces the last two)."""
     root = built_index.root
     return {
         "driver-cache": (SearchEngine(spark, root, QueryConfig(), cache=True),
@@ -218,18 +219,19 @@ def route_engines(spark, built_index):
 
 
 ROUTE_MATRIX = [
-    # (case, query call, WAND applies — the match family only)
+    # (case, query call, the pruned route applies — every clause query
+    # on the main field: match, fuzzy, bool)
     ("match_or", lambda e: e.match_query("parse json config"), True),
     ("match_or_hot", lambda e: e.match_query("def import"), True),
     ("match_and", lambda e: e.match_query("def main", "and"), True),
     ("match_msm", lambda e: e.match_query("import numpy as np",
                                           minimum_should_match=60), True),
     ("term_exact", lambda e: e.term_query_exact("def"), False),
-    ("fuzzy_single", lambda e: e.fuzzy_query("improt"), False),
-    ("fuzzy_multi", lambda e: e.fuzzy_query("parse jsn confg"), False),
-    ("bool_and", lambda e: e.bool_must_query("import json"), False),
+    ("fuzzy_single", lambda e: e.fuzzy_query("improt"), True),
+    ("fuzzy_multi", lambda e: e.fuzzy_query("parse jsn confg"), True),
+    ("bool_and", lambda e: e.bool_must_query("import json"), True),
     # a word duplicated into two clauses: one term, two clause rows
-    ("bool_dup_term", lambda e: e.bool_must_query("def"), False),
+    ("bool_dup_term", lambda e: e.bool_must_query("def"), True),
     ("phrase", lambda e: e.match_phrase_query("def main"), False),
     # "as" is a stopword: a position gap inside the phrase
     ("phrase_gap", lambda e: e.match_phrase_query("import numpy as np", 0),
@@ -280,8 +282,8 @@ def test_bool_duplicate_terms_fan_out_without_join(spark, built_index):
 
 @pytest.mark.parametrize("op,msm", [("or", None), ("and", None), ("or", 60)])
 def test_wand_total_hits_matches_exhaustive(spark, built_index, op, msm):
-    """r3 (VERDICT r2 wrong #4 / ADVICE): the WAND path reports the exact
-    capped match count via a lazy positions-free recount plan, not
+    """r3 (VERDICT r2 wrong #4 / ADVICE): the pruned route reports the
+    exact capped match count from the lazy unpruned plan, not
     min(len(rows), size)."""
     exhaustive = SearchEngine(spark, built_index.root,
                               QueryConfig(use_wand=False,
@@ -303,8 +305,9 @@ def test_wand_total_hits_matches_exhaustive(spark, built_index, op, msm):
 
 @pytest.mark.parametrize("op,msm", [("and", None), ("or", 60), ("or", 100)])
 def test_wand_conjunctive_identical_to_exhaustive(spark, built_index, op, msm):
-    """r2 (VERDICT r1 missing #4): the WAND conjunctive/msm extension must be
-    lossless for AND and minimum_should_match matches too."""
+    """r2 (VERDICT r1 missing #4): pruning must be lossless for AND and
+    minimum_should_match matches too (intervals fewer than ``required``
+    clauses cover are dropped)."""
     exhaustive = SearchEngine(spark, built_index.root,
                               QueryConfig(use_wand=False,
                                           driver_score_max_postings=0))
@@ -323,8 +326,8 @@ def test_wand_conjunctive_identical_to_exhaustive(spark, built_index, op, msm):
 class TestWandAuto:
     """use_wand="auto" (r4, VERDICT r3 next #2): per-query scorer choice on
     the max clause df against SearchEngine.WAND_AUTO_MIN_DF, the measured
-    crossover (BENCH/BASELINE.md r3 — pruning wins only once posting lists
-    get long). Tests move the threshold per instance."""
+    crossover (tools/wand_crossover.py — pruning wins only once posting
+    lists get long). Tests move the threshold per instance."""
 
     def test_auto_matches_better_scorer_per_query(self, spark, built_index):
         # threshold 5 on this corpus: "def" (hot, df ≫ 5) must take the WAND
@@ -368,13 +371,13 @@ class TestWandAuto:
 
     def test_auto_default_constant_keeps_small_corpus_distributed(
             self, spark, built_index):
-        # the default crossover is the constant 200k; every df of this
+        # the default crossover is the constant 400k; every df of this
         # small corpus is far below it, so auto at budget 0 must take the
         # distributed scorer even for its hottest term
         eng = SearchEngine(spark, built_index.root,
                            QueryConfig(use_wand="auto",
                                        driver_score_max_postings=0))
-        assert eng.WAND_AUTO_MIN_DF == SearchEngine.WAND_AUTO_MIN_DF == 200_000
+        assert eng.WAND_AUTO_MIN_DF == SearchEngine.WAND_AUTO_MIN_DF == 400_000
         hot, _ = eng._hot_dfs("main")
         assert max(hot.values()) < eng.WAND_AUTO_MIN_DF
         eng.match_query("def").collect()
@@ -443,3 +446,167 @@ def test_fallback_fold_above_det_sum_max_stays_cross_path_identical(
     got_d = _ranked(driver.match_query(q).collect())
     assert driver.last_scorer == "driver"
     assert want and got_w == want and got_d == want
+
+
+@pytest.fixture(scope="module")
+def small_block_index(spark, corpus_df, tmp_path_factory):
+    """The test corpus in 16-posting blocks: its hot terms span enough
+    blocks for the pruned route to plan several rounds."""
+    return build_index(spark, corpus_df,
+                       str(tmp_path_factory.mktemp("blk16") / "idx"),
+                       IndexConfig(block_size=16), shards=2)
+
+
+def test_pruned_route_skips_postings(spark, small_block_index):
+    """Pruning happens, and the answers stay the exhaustive ones.
+
+    - The block floor alone prunes a top-1 single-term query: one round,
+      fewer intervals and postings rows than the term holds.
+    - With first rounds of 2 estimated docs (PRUNE_ROUND_DOCS is sized for
+      a million-doc index; at 300 docs a default first round takes every
+      interval), the exact rounds raise θ: top-1 "def import" scores fewer
+      rows than the unpruned plan reads, and queries take several rounds."""
+    root = small_block_index.root
+    wand = SearchEngine(spark, root, QueryConfig(
+        use_wand=True, driver_score_max_postings=0))
+    exhaustive = SearchEngine(spark, root, QueryConfig(
+        driver_score_max_postings=0))
+    dfs = wand._df_lookup("main", ["def", "import"])
+    got = _hexed(wand.match_query("def", size=1))
+    assert wand.last_scorer == "wand"
+    pruning = wand.last_pruning
+    assert pruning["block_rows"] > 0 and pruning["rounds"] == 1
+    assert pruning["kept"] < pruning["intervals"]
+    assert 0 < pruning["postings_scored"] < dfs["def"]
+    assert got == _hexed(exhaustive.match_query("def", size=1))
+    assert exhaustive.last_pruning is None
+
+    wand.PRUNE_ROUND_DOCS = 2
+    q = "def import"
+    got = _hexed(wand.match_query(q, size=1))
+    pruning = wand.last_pruning
+    assert pruning["kept"] < pruning["intervals"]
+    assert 0 < pruning["postings_scored"] < dfs["def"] + dfs["import"]
+    assert got == _hexed(exhaustive.match_query(q, size=1))
+    rounds = set()
+    for call in (lambda e, k: e.match_query(q, size=k),
+                 lambda e, k: e.match_query("def main", "and", size=k),
+                 lambda e, k: e.fuzzy_query("improt", size=k)):
+        for k in (2, 5, 20):
+            got = _hexed(call(wand, k))
+            rounds.add(wand.last_pruning["rounds"])
+            assert got == _hexed(call(exhaustive, k))
+    assert max(rounds) > 1
+
+
+def test_non_finite_clause_weight_is_refused_on_every_route(route_engines):
+    """A non-finite weight has no SQL literal (``infD``/``nanD`` do not
+    parse) and would make the driver fold return inf silently: the one
+    place weights are computed refuses it, whatever the route."""
+    for route, (eng, _) in route_engines.items():
+        for w in (float("inf"), float("nan")):
+            with pytest.raises(ValueError, match="non-finite"):
+                eng._score_query("main", [(0, "def", w)], 1, 10)
+
+
+def test_merged_index_serves_pruned_route(spark, split_indexes):
+    """A merge writes its fields through the build's field writer, block-max
+    table included: use_wand=True on the merged index is hex-equal to the
+    distributed route."""
+    merged, _ = split_indexes
+    wand = SearchEngine(spark, merged.root, QueryConfig(
+        use_wand=True, driver_score_max_postings=0))
+    dist = SearchEngine(spark, merged.root, QueryConfig(
+        driver_score_max_postings=0))
+    for call in (lambda e: e.match_query("def", size=3),
+                 lambda e: e.match_query("parse json config"),
+                 lambda e: e.match_query("def main", "and"),
+                 lambda e: e.fuzzy_query("improt"),
+                 lambda e: e.bool_must_query("import json")):
+        got = _hexed(call(wand))
+        assert wand.last_scorer == "wand"
+        want = _hexed(call(dist))
+        assert want and got == want
+
+
+def test_auto_takes_pruned_route_only_for_one_round_plans(spark,
+                                                          small_block_index):
+    """Every pruning round is a postings scan, so "auto" keeps the pruned
+    route only when its plan is one round and serves the distributed
+    scorer otherwise; both answers are the exhaustive one."""
+    root = small_block_index.root
+    auto = SearchEngine(spark, root, QueryConfig(
+        use_wand="auto", driver_score_max_postings=0))
+    auto.WAND_AUTO_MIN_DF = 1
+    exhaustive = SearchEngine(spark, root, QueryConfig(
+        driver_score_max_postings=0))
+    got = _hexed(auto.match_query("def import", size=1))
+    assert auto.last_scorer == "wand"
+    assert auto.last_pruning["rounds"] == 1
+    assert got == _hexed(exhaustive.match_query("def import", size=1))
+    auto.PRUNE_ROUND_DOCS = 2  # now the AND plan needs several rounds
+    got = _hexed(auto.match_query("def main", "and", size=5))
+    assert auto.last_scorer == "distributed"
+    assert auto.last_pruning is None
+    assert got == _hexed(exhaustive.match_query("def main", "and", size=5))
+
+
+def test_coarsened_block_read_stays_exhaustive_equal(spark,
+                                                     small_block_index):
+    """Past PRUNE_MAX_BLOCK_ROWS, runs of adjacent blocks merge before they
+    reach the driver; the merged bounds still hold, so the answers stay
+    the exhaustive ones while the plan shrinks."""
+    root = small_block_index.root
+    wand = SearchEngine(spark, root, QueryConfig(
+        use_wand=True, driver_score_max_postings=0))
+    exhaustive = SearchEngine(spark, root, QueryConfig(
+        driver_score_max_postings=0))
+    wand.match_query("def import", size=3).collect()
+    full = wand.last_pruning["block_rows"]
+    wand.PRUNE_MAX_BLOCK_ROWS = 4
+    wand.PRUNE_ROUND_DOCS = 2
+    for call in (lambda e: e.match_query("def import", size=3),
+                 lambda e: e.match_query("def main", "and", size=5),
+                 lambda e: e.fuzzy_query("improt", size=4),
+                 lambda e: e.bool_must_query("import json")):
+        got = _hexed(call(wand))
+        assert wand.last_scorer == "wand"
+        assert got == _hexed(call(exhaustive))
+    wand.match_query("def import", size=3).collect()
+    assert wand.last_pruning["block_rows"] < full
+
+
+def test_merge_bounds_use_the_sources_bm25(spark, tmp_path):
+    """The merged index is scored with its sources' k1/b, so its block-max
+    bounds must use them too, whatever config the merge is given. Sources
+    built with k1=0.3, b=0.2 (every tf_norm above its default-parameter
+    value), merged under the default BM25 parameters in 4-posting blocks,
+    serve use_wand=True hex-equal to the distributed route."""
+    rows = sorted(generate_documents(200, seed=7),
+                  key=lambda r: (r[0], r[1], r[2]))
+    half = len(rows) // 2
+    schema = "repo string, path string, commit string, lang string, content string"
+    cfg = IndexConfig(bm25=BM25Params(k1=0.3, b=0.2), block_size=4)
+    pa = build_index(spark, spark.createDataFrame(rows[:half], schema),
+                     str(tmp_path / "a"), cfg, shards=2)
+    pb = build_index(spark, spark.createDataFrame(rows[half:], schema),
+                     str(tmp_path / "b"), cfg, shards=2)
+    merged = merge_indexes(spark, [pa.root, pb.root], str(tmp_path / "m"),
+                           IndexConfig(block_size=4), shards=2)
+    assert merged.read_stats()["bm25"] == {"k1": 0.3, "b": 0.2}
+    wand = SearchEngine(spark, merged.root, QueryConfig(
+        use_wand=True, driver_score_max_postings=0))
+    wand.PRUNE_ROUND_DOCS = 2
+    dist = SearchEngine(spark, merged.root, QueryConfig(
+        driver_score_max_postings=0))
+    for call in (lambda e: e.match_query("def", size=1),
+                 lambda e: e.match_query("def import", size=3),
+                 lambda e: e.match_query("parse json config", size=2),
+                 lambda e: e.fuzzy_query("improt", size=2)):
+        got = _hexed(call(wand))
+        assert wand.last_scorer == "wand"
+        assert got == _hexed(call(dist))
+    other = build_index(spark, spark.createDataFrame(rows[:half], schema),
+                        str(tmp_path / "c"), IndexConfig(), shards=2)
+    with pytest.raises(ValueError, match="bm25 differs"):
+        merge_indexes(spark, [pa.root, other.root], str(tmp_path / "x"))

@@ -4,11 +4,14 @@ committed harness behind the r7 ``exh10m_fold_recovery`` runs.jsonl row
 (VERDICT r7 next #6: the number was produced by an uncommitted tmp/ script;
 the recording policy is now "no row without a committed harness").
 
-Times ``match_query`` with the driver path disabled and WAND off — i.e. the
+Times ``match_query`` with the driver path disabled and use_wand off — the
 distributed scorer, the path whose fold rework r7 measured (24.4 s
-collect_list fold → 7.3 s clause-order fold at 10M docs) — plus the same
-queries under use_wand=True, also at budget 0 so they time ``wand_topk``
-rather than the driver fold, for the crossover context.
+collect_list fold → 7.3 s clause-order fold at 10M docs) — and the same
+queries under use_wand=True, also at budget 0, so they time the block-max
+pruned route (``SearchEngine._wand``) rather than the driver fold. Per
+query and engine it reports the median wall time, the Spark jobs of the
+last repetition and, for the pruned route, ``last_pruning``: block rows
+read, doc intervals kept out of the total, and postings rows scored.
 
 Usage:
     python -m tools.exh_forced /path/to/index [--cpus 32] [--queries def,import]
@@ -48,7 +51,8 @@ def main() -> None:
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.ui.enabled", "false")
              .config("spark.driver.memory", "16g").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     ship_package(spark)
 
     exh = SearchEngine(spark, args.index,
@@ -62,12 +66,18 @@ def main() -> None:
         row = {}
         for name, e in (("exhaustive", exh), ("wand", wand)):
             ts = []
-            for _ in range(args.reps):
+            for i in range(args.reps):
+                group = f"exh_forced-{name}-{q}-{i}"
+                sc.setJobGroup(group, group)
                 t0 = time.time()
                 e.match_query(q).collect()
                 ts.append(time.time() - t0)
             row[name] = round(statistics.median(ts), 3)
             row[f"{name}_samples"] = [round(t, 3) for t in ts]
+            row[f"{name}_jobs"] = len(sc.statusTracker()
+                                      .getJobIdsForGroup(group))
+            if getattr(e, "last_pruning", None):
+                row[f"{name}_pruning"] = e.last_pruning
         out["queries"][q] = row
     print(json.dumps(out))
     spark.stop()

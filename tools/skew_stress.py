@@ -3,11 +3,13 @@
 next #5): a corpus where ONE term appears in 100% of the docs — the worst
 df skew a term-keyed layout can see.
 
-The claim under test is the builder/merger's doc_id-range salting
-(builder.py packed-block build, merger.py term-keyed shuffle): the
-100%-df term's postings are range-split across buckets, so no single task
-should exceed ~2x the median task duration (or peak memory) in any heavy
-stage of the packed build or the merge, and merge ≡ rebuild stays exact.
+The claim under test is the field writer's (term, doc_id) range
+partitioning, which the build and the merge share (builder.write_field):
+the 100%-df term's postings are range-split across partitions, so no single
+task should exceed ~2x the median task duration (or peak memory) in any
+heavy stage of the build or the merge, and merge ≡ rebuild stays exact.
+(The block-max table write has no exchange: it runs once per postings
+split.)
 
 Evidence is read from Spark's own task metrics (the /api/v1 status REST of
 the live UI): per-stage executorRunTime / peakExecutionMemory quantiles

@@ -1,114 +1,118 @@
 #!/usr/bin/env python
-"""WAND-vs-exhaustive crossover evidence (VERDICT r2 next #3).
+"""Pruned-vs-exhaustive crossover evidence: where the block-max pruned
+route (``SearchEngine._wand``) starts to beat the distributed scorer.
 
-Block-max WAND's point is LONG postings: pruning wins grow with posting-list
-length, while at tiny corpora its per-bucket Python decode overhead loses to
-the exhaustive whole-stage-codegen scorer. This tool measures both scorers on
-hot-term queries at one or more corpus sizes and reports where (whether) WAND
-crosses over, appending rows to BENCH/runs.jsonl for the curated table in
-BENCH/BASELINE.md.
+The pruned route pays a fixed cost (a block-table scan, then one postings
+scan per scoring round); the distributed scorer pays a scan plus an
+aggregation that grows with the summed posting-list length. This tool
+times both on single-term queries over a ladder of document frequencies,
+plus a few multi-term queries, on an EXISTING index, and appends one row
+to BENCH/runs.jsonl. ``SearchEngine.WAND_AUTO_MIN_DF`` is set from it.
 
-Methodology notes:
-- Both engines serve the DISTRIBUTED plan (driver_score_max_postings=0) —
-  the comparison is scorer vs scorer, not serving tier vs scorer.
-- Both run uncached (cache=False) with a warm-up query first, mirroring the
-  r2 bench methodology for WAND.
-- Median of ALPS_XOVER_REPS (default 5) timed runs per (scorer, query).
+Methodology:
+- Both engines serve the DISTRIBUTED plan (driver_score_max_postings=0),
+  uncached: the comparison is scorer against scorer, not serving tier
+  against scorer.
+- A third engine, ``use_wand="auto"`` with the df threshold at 1, shows
+  what auto does once a query clears the threshold: it keeps the pruned
+  route only for one-round plans.
+- Each rep times the engines in turn, order alternating; the median of
+  ``--reps`` is reported, with the pruned route's ``last_pruning``.
+- The ladder term for a target df is the term whose df is nearest to it.
 
-Env: ALPS_XOVER_DOCS (comma list, default "60000,1000000"),
-SPARK_GRAFT_CPUS (default 32), ALPS_XOVER_REPS.
+Usage:
+    python -m tools.wand_crossover /path/to/index [--cpus 4] [--reps 5]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
-import shutil
 import statistics
 import sys
-import tempfile
 import time
 from datetime import date
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-HOT_QUERIES = ["def", "import", "def import data", "parse json config"]
+DF_LADDER = [25_000, 50_000, 100_000, 200_000, 300_000, 500_000,
+             700_000, 1_000_000]
+MULTI_QUERIES = ["def import", "def main", "parse json config",
+                 "return self"]
 
 
-def bench_size(n_docs: int, cpus: int, reps: int) -> dict:
-    from pyspark.sql import SparkSession
-    from elasticsearch_alps_spark.config import IndexConfig, QueryConfig
-    from elasticsearch_alps_spark.fixtures import documents_df_distributed
-    from elasticsearch_alps_spark.indexing.builder import build_index
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("index")
+    ap.add_argument("--cpus", type=int,
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "4")))
+    ap.add_argument("--reps", type=int, default=5)
+    args = ap.parse_args()
+
+    from pyspark.sql import SparkSession, functions as F
+    from elasticsearch_alps_spark.config import QueryConfig
     from elasticsearch_alps_spark.queries.engine import SearchEngine
     from elasticsearch_alps_spark.session import ship_package
 
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
+    spark = (SparkSession.builder.master(f"local[{args.cpus}]")
              .appName("alps-wand-crossover")
-             .config("spark.sql.shuffle.partitions", str(cpus))
+             .config("spark.sql.shuffle.partitions", str(args.cpus))
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.ui.enabled", "false")
              .config("spark.driver.memory",
-                     os.environ.get("ALPS_BENCH_DRIVER_MEM", "24g"))
+                     os.environ.get("ALPS_BENCH_DRIVER_MEM", "4g"))
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     ship_package(spark)
-    out = tempfile.mkdtemp(prefix="alps_xover_")
-    try:
-        src = os.path.join(out, "src")
-        documents_df_distributed(spark, n_docs, seed=42).write.parquet(src)
-        docs = spark.read.parquet(src)
-        t0 = time.time()
-        paths = build_index(spark, docs, out, IndexConfig(), shards=cpus)
-        t_build = time.time() - t0
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        exh = SearchEngine(spark, paths.root,
-                           QueryConfig(driver_score_max_postings=0))
-        wand = SearchEngine(spark, paths.root, QueryConfig(use_wand=True))
-        exh.match_query("def").collect()   # warm JVM / parquet footers
-        wand.match_query("def").collect()  # warm packed_meta / plan caches
+    base = QueryConfig(driver_score_max_postings=0)
+    engines = {
+        "exhaustive": SearchEngine(spark, args.index, base),
+        "wand": SearchEngine(spark, args.index, QueryConfig(
+            driver_score_max_postings=0, use_wand=True)),
+        "auto": SearchEngine(spark, args.index, QueryConfig(
+            driver_score_max_postings=0, use_wand="auto")),
+    }
+    engines["auto"].WAND_AUTO_MIN_DF = 1
+    ts = engines["exhaustive"]._term_stats["main"]
+    ladder = []
+    for target in DF_LADDER:
+        r = (ts.orderBy(F.abs(F.col("df") - target), "term")
+             .select("term", "df").first())
+        if r is not None and r["term"] not in ladder:
+            ladder.append(r["term"])
+    for e in engines.values():  # warm JVM, parquet footers, block table
+        e.match_query("def").collect()
 
-        per_query = {}
-        for q in HOT_QUERIES:
-            ts_e, ts_w = [], []
-            for _ in range(reps):
+    rows = {}
+    for q in ladder + MULTI_QUERIES:
+        times = {name: [] for name in engines}
+        for i in range(args.reps):
+            order = list(engines.items())
+            for name, e in (order if i % 2 == 0 else order[::-1]):
                 t0 = time.time()
-                exh.match_query(q).collect()
-                ts_e.append(time.time() - t0)
-                t0 = time.time()
-                wand.match_query(q).collect()
-                ts_w.append(time.time() - t0)
-            per_query[q] = {
-                "exhaustive_p50_s": round(statistics.median(ts_e), 4),
-                "wand_p50_s": round(statistics.median(ts_w), 4),
-                "wand_speedup": round(statistics.median(ts_e)
-                                      / statistics.median(ts_w), 2),
-            }
-        # df of the hottest single terms for context
-        dfs = {r["term"]: r["df"] for r in
-               exh._term_stats["main"]
-               .filter(exh._term_stats["main"].term.isin(["def", "import"]))
-               .collect()}
-        return {"n_docs": n_docs, "build_s": round(t_build, 1),
-                "hot_term_df": dfs, "queries": per_query}
-    finally:
-        spark.stop()
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def main() -> None:
-    sizes = [int(s) for s in
-             os.environ.get("ALPS_XOVER_DOCS", "60000,1000000").split(",")]
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    reps = int(os.environ.get("ALPS_XOVER_REPS", "5"))
+                e.match_query(q).collect()
+                times[name].append(time.time() - t0)
+        dfs = engines["exhaustive"]._df_lookup("main", q.split())
+        p50 = {n: statistics.median(v) for n, v in times.items()}
+        rows[q] = {
+            "max_df": max(dfs.values(), default=0),
+            **{f"{n}_p50_s": round(v, 3) for n, v in p50.items()},
+            "wand_speedup": round(p50["exhaustive"] / p50["wand"], 2),
+            "auto_route": engines["auto"].last_scorer,
+            "wand_pruning": engines["wand"].last_pruning,
+        }
+        print(q, json.dumps(rows[q]), flush=True)
+    n_docs = engines["exhaustive"].stats["fields"]["main"]["n_docs"]
     report = {"date": str(date.today()), "kind": "wand_crossover",
-              "cpus": cpus, "reps": reps,
-              "sizes": [bench_size(n, cpus, reps) for n in sizes]}
-    print(json.dumps(report, indent=2))
+              "argv": " ".join(["python -m tools.wand_crossover"] + [
+                  "IDX" if a == args.index else a for a in sys.argv[1:]]),
+              "n_docs": n_docs, "cpus": args.cpus, "reps": args.reps,
+              "queries": rows}
+    spark.stop()
     log = os.path.join(REPO, "BENCH", "runs.jsonl")
-    os.makedirs(os.path.dirname(log), exist_ok=True)
     with open(log, "a") as f:
         f.write(json.dumps(report) + "\n")
 
