@@ -34,6 +34,7 @@ from elasticsearch_alps_spark.config import (
     ExtraField, IndexConfig, QueryConfig, SIMPLE_ANALYZER, URL_ANALYZER,
 )
 from elasticsearch_alps_spark.indexing.builder import build_index, IndexPaths
+from elasticsearch_alps_spark.indexing.postings import decode_positions
 from elasticsearch_alps_spark.queries.engine import SearchEngine
 from elasticsearch_alps_spark.session import ship_package
 
@@ -90,7 +91,7 @@ def _topk(hits: DataFrame, k: int) -> DataFrame:
 
 # ------------------------------------------------------- oracle SQL fragments
 
-# Must stay in lockstep with analysis/udfs.py SIMPLE_SPLIT_REGEX and the
+# Must stay in lockstep with analysis/analyzers.py _SIMPLE_TOKEN_RE and the
 # engine's BM25 expression (queries/engine.py _tf_norm_col): k1=1.2 b=0.75,
 # no (k1+1), idf = ln(1+(N-df+0.5)/(df+0.5)), dl exact (quantize_norms=False).
 _PRELUDE = """
@@ -764,8 +765,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def ft_postings_spark(s, sf):
         p = _index_paths(s, sf)
+        # positions are a varint blob (indexing/postings.py): decode first
+        positions = F.udf(decode_positions, "array<long>")("positions")
         return (s.read.parquet(p.postings("main"))
                 .filter(F.col("term") == "spark")
+                .withColumn("positions", positions)
                 .select(F.col("doc_id").cast("long").alias("doc_id"),
                         F.col("freq").cast("long").alias("freq"),
                         F.element_at("positions", 1).cast("long").alias("first_pos"),

@@ -1,19 +1,17 @@
 """Spark-side analysis: one flat Arrow stream over the shared pure-Python
-chain, plus a pure-Catalyst (JVM, whole-stage-codegen) path for the
-SQL-expressible ``simple`` profile.
+chain.
 
-Every Python-analyzed field of a build (main, exact, each ExtraField) comes
-out of ONE ``mapInArrow`` pass (:func:`doc_postings_flat`): tokenization
-crosses the JVM↔Python boundary once per Arrow batch, and each document's
-text is analyzed once per field — no per-row Python UDFs, no nested struct
-columns.
+Every field of a build (main, exact, each ExtraField), whatever its
+analyzer, comes out of ONE ``mapInArrow`` pass (:func:`doc_postings_flat`):
+tokenization crosses the JVM↔Python boundary once per Arrow batch, and each
+document's text is analyzed once per field — no per-row Python UDFs, no
+nested struct columns. The query side analyzes with the same functions, so
+index and query tokens agree by construction.
 """
 
 from __future__ import annotations
 
 from typing import List, Sequence
-
-from pyspark.sql import Column, functions as F
 
 from elasticsearch_alps_spark.analysis.analyzers import analyze_positions_multi
 from elasticsearch_alps_spark.config import AnalyzerConfig
@@ -23,8 +21,8 @@ def _doc_posts(stream):
     """[(term, pos)] → (doc_len, [(term, freq, varint-packed positions)]).
     Aggregating term→positions here, while the tokens are already in
     Python, removes the groupBy(term, doc_id) shuffle from the index build;
-    binary positions keep shuffle rows ~3× smaller than int arrays and feed
-    the packed-block builder without re-encoding."""
+    binary positions keep shuffle rows ~3× smaller than int arrays and are
+    the one positions format every postings table stores."""
     from elasticsearch_alps_spark.indexing.postings import encode_positions
     d = {}
     for t, p in stream:
@@ -86,33 +84,3 @@ def doc_postings_flat(groups: Sequence[List[AnalyzerConfig]]):
             ], schema=arrow_schema)
 
     return _flat
-
-
-def simple_expressible(cfg: AnalyzerConfig) -> bool:
-    """True if the chain can run as pure Catalyst expressions (and therefore
-    also as DuckDB oracle SQL): simple regex tokenizer, lowercase only."""
-    return (cfg.tokenizer == "simple" and cfg.lowercase and not cfg.asciifolding
-            and not cfg.english_stop and not cfg.english_stemmer
-            and not cfg.code_split)
-
-
-# Must stay in lockstep with analyzers._SIMPLE_TOKEN_RE and the DuckDB oracle
-# SQL in __spark_entry__.py.
-SIMPLE_SPLIT_REGEX = "[^a-z0-9_]+"
-
-
-def simple_tokens_col(text_col: Column) -> Column:
-    """JVM-side tokens for the simple profile: lower → split → drop empties.
-    Whole-stage-codegen'd; no Python in the hot path."""
-    return F.filter(
-        F.split(F.lower(text_col), SIMPLE_SPLIT_REGEX),
-        lambda x: x != F.lit(""),
-    )
-
-
-def simple_token_stream_col(text_col: Column) -> Column:
-    """array<struct<t,p>> token stream for the simple profile, all in the
-    JVM: terms zipped with their index as position (no stopword gaps)."""
-    return F.transform(
-        simple_tokens_col(text_col),
-        lambda x, i: F.struct(x.alias("t"), i.cast("int").alias("p")))

@@ -4,12 +4,11 @@ Spark-first re-expression of the reference's indexing path
 (``/root/reference/scripts/index/index.py:335-536`` + what Lucene does inside
 ES under ``index_config_1.json``): select/filter/truncate → one flat
 analysis pass emitting per-(doc, field, term) postings rows for every
-Python-analyzed field (the SQL-expressible simple profile tokenizes in the
-JVM instead) → per field, :func:`write_field`: range-sorted postings +
-term_stats + (main only) the block-max table, all as DataFrame jobs
-(thread/bulk-queue tuning in the reference becomes Spark partitioning). A
-merge (``merging/merger.py``) writes its fields through the same
-:func:`write_field`.
+field, whatever its analyzer → per field, :func:`write_field`:
+range-sorted postings + term_stats + (main only) the block-max table, all
+as DataFrame jobs (thread/bulk-queue tuning in the reference becomes Spark
+partitioning). A merge (``merging/merger.py``) writes its fields through
+the same :func:`write_field`.
 
 On-disk layout (one "index" = one directory):
 
@@ -17,8 +16,11 @@ On-disk layout (one "index" = one directory):
       docs/                     doc store (_source analog): doc_id + source cols
                                 + content (truncated) + content_sha256 (original)
       fields/<field>/postings/  exploded postings: term, doc_id, freq, positions, dl
-                                (range-partitioned + sorted by term → parquet
-                                min/max stats give term-pruning at query time)
+                                (positions: one varint blob per posting, see
+                                indexing/postings.py, empty for a docs-only
+                                field; range-partitioned + sorted by term →
+                                parquet min/max stats give term-pruning at
+                                query time)
       fields/<field>/term_stats/  term, df, cf, term_len
       fields/main/blockmax/     term, first_doc, last_doc, max_tf_norm: one row
                                 per run of ≤ block_size postings of a term
@@ -45,8 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from elasticsearch_alps_spark import fsio
 from elasticsearch_alps_spark.analysis.udfs import (
-    FLAT_POSTINGS_SCHEMA, doc_postings_flat, simple_expressible,
-    simple_token_stream_col,
+    FLAT_POSTINGS_SCHEMA, doc_postings_flat,
 )
 from elasticsearch_alps_spark.config import AnalyzerConfig, IndexConfig
 from elasticsearch_alps_spark.indexing.ids import assign_dense_doc_ids
@@ -170,47 +171,36 @@ def _stage_done(paths: IndexPaths, stage: str, config_key: str) -> bool:
 
 
 def _build_field(spark: SparkSession, n_docs: int, src: DataFrame,
-                 src_kind: str, paths: IndexPaths, field: str,
-                 analyzer: AnalyzerConfig, cfg: IndexConfig, shards: int,
-                 config_key: str, index_options: str = "positions",
+                 paths: IndexPaths, field: str, analyzer: AnalyzerConfig,
+                 cfg: IndexConfig, shards: int, config_key: str,
+                 index_options: str = "positions",
                  norms_enabled: bool = True) -> dict:
     """Postings rows for one analyzed field, handed to :func:`write_field`.
 
-    ``src_kind``:
-    - "flat": (doc_id, doc_len, term, freq, ps) — one row per (doc, term),
-      aggregated inside the Python analysis pass (``doc_postings_flat``) →
-      the only shuffle is the term-range exchange for the sorted layout.
-    - "tok": (doc_id, tok: array<struct<t,p>>) — JVM-side token stream (the
-      SQL-expressible simple profile); per-(term,doc) aggregation happens via
-      groupBy (one extra shuffle, but zero Python in the path).
+    ``src`` holds the field's rows of the flat analysis pass
+    (``doc_postings_flat``): (doc_id, doc_len, term, freq, ps), one row per
+    (doc, term), aggregated inside the Python pass → the only shuffle is the
+    term-range exchange for the sorted layout.
 
     ``index_options="docs"`` (r6, the url field): only doc membership is
-    stored — freq ≡ 1, positions empty, dl ≡ 1 — a (term, doc_id)-pair
-    table, the Lucene storage shape for boolean-match-only fields.
+    stored — freq ≡ 1, positions an empty blob, dl ≡ 1 — a
+    (term, doc_id)-pair table, the Lucene storage shape for
+    boolean-match-only fields.
     ``norms_enabled=False`` is recorded in the field stats so the engine
     scores through the norms-free BM25 branch.
     """
-    dl = (quantize_length_col(F.col("doc_len")) if cfg.quantize_norms
-          else F.col("doc_len").cast("long"))
-    if src_kind == "flat":
+    if index_options == "docs":
+        postings = src.select(
+            "term", "doc_id",
+            F.lit(1).cast("long").alias("freq"),
+            F.lit(b"").alias("positions"),
+            F.lit(1).cast("long").alias("dl"))
+    else:
+        dl = (quantize_length_col(F.col("doc_len")) if cfg.quantize_norms
+              else F.col("doc_len").cast("long"))
         postings = src.select("doc_id", dl.alias("dl"), "term",
                               F.col("freq").cast("long").alias("freq"),
                               F.col("ps").alias("positions"))
-    else:
-        postings = (src.select("doc_id", F.size("tok").alias("doc_len"), "tok")
-                       .select("doc_id", dl.alias("dl"), F.explode("tok").alias("e"))
-                       .select("doc_id", "dl", F.col("e.t").alias("term"),
-                               F.col("e.p").alias("pos"))
-                       .groupBy("term", "doc_id")
-                       .agg(F.count("*").alias("freq"),
-                            F.sort_array(F.collect_list("pos")).alias("positions"),
-                            F.first("dl").alias("dl")))
-    if index_options == "docs":
-        postings = postings.select(
-            "term", "doc_id",
-            F.lit(1).cast("long").alias("freq"),
-            F.expr("CAST(array() AS array<int>)").alias("positions"),
-            F.lit(1).cast("long").alias("dl"))
     meta = {"analyzer": analyzer.name()}
     if index_options != "positions":
         meta["index_options"] = index_options
@@ -361,7 +351,10 @@ def build_index(spark: SparkSession, docs_df: DataFrame, out_dir: str,
                           for ef in cfg.extra_fields],
          "quantize": cfg.quantize_norms, "truncate": cfg.truncate_chars,
          "block_size": cfg.block_size, "text_col": text_col,
-         "id_cols": list(id_cols), "doc_id_col": doc_id_col},
+         "id_cols": list(id_cols), "doc_id_col": doc_id_col,
+         # every postings table stores varint-blob positions; an index
+         # written with int-array positions never resumes
+         "positions": "varint"},
         sort_keys=True)
 
     t0 = time.time()
@@ -468,16 +461,11 @@ def _build_fields(spark: SparkSession, cfg: IndexConfig, paths: IndexPaths,
     def pending(field: str) -> bool:
         return not (resume and _stage_done(paths, f"field_{field}", config_key))
 
-    # Every Python-analyzed field comes out of ONE flat analysis pass, grouped
-    # by the text it reads: main+exact share a group (shared char filter +
-    # tokenizer), each ExtraField is its own group over its source column.
-    # The SQL-expressible simple profile keeps the JVM token path instead.
-    groups = []  # (text column, [(field, analyzer)])
-    if dual:
-        groups.append((F.col(text_col), [("main", cfg.analyzer),
-                                         ("exact", cfg.exact_analyzer)]))
-    elif not simple_expressible(cfg.analyzer):
-        groups.append((F.col(text_col), [("main", cfg.analyzer)]))
+    # Every field comes out of ONE flat analysis pass, grouped by the text it
+    # reads: main+exact share a group (shared char filter + tokenizer), each
+    # ExtraField is its own group over its source column.
+    groups = [(F.col(text_col), [("main", cfg.analyzer)]
+               + ([("exact", cfg.exact_analyzer)] if dual else []))]
     for ef in cfg.extra_fields:
         groups.append((F.coalesce(F.col(ef.source_col).cast("string"), F.lit("")),
                        [(ef.name, ef.analyzer)]))
@@ -500,14 +488,8 @@ def _build_fields(spark: SparkSession, cfg: IndexConfig, paths: IndexPaths,
     def build(field: str, analyzer: AnalyzerConfig, **kw) -> dict:
         if not pending(field):
             return fsio.read_json(_lineage_path(paths, f"field_{field}"))["stats"]
-        if field in flat_src:
-            src, kind = flat_src[field], "flat"
-        else:  # JVM-only token path (SQL-expressible simple profile)
-            src = docs.select("doc_id", simple_token_stream_col(
-                F.col(text_col)).alias("tok"))
-            kind = "tok"
-        return _build_field(spark, n_docs, src, kind, paths, field, analyzer,
-                            cfg, n_shards, config_key, **kw)
+        return _build_field(spark, n_docs, flat_src[field], paths, field,
+                            analyzer, cfg, n_shards, config_key, **kw)
 
     field_stats = {}
     try:

@@ -1,18 +1,19 @@
 """Varint codecs for the postings' positions column.
 
-A posting stores its positions as one ``bytes`` value: varint(count), then
-varint position deltas (:func:`encode_positions`). The analyzer UDF emits
-that buffer directly, so positions never travel as Arrow int arrays through
-shuffles (≈3× smaller rows through sort/exchange/parquet), and the phrase
-scorers decode it (:func:`decode_positions`, or one
-:func:`varint_decode_np` over many rows' buffers at once). The pure-Python
-coders are the reference implementations the numpy ones are
-property-tested against.
+Every postings table of every field stores its positions in this one
+format: a posting's positions are one ``bytes`` value, varint(count) then
+varint position deltas (:func:`encode_positions`); a docs-only field stores
+an empty value. The analyzer pass emits that buffer directly, so positions
+never travel as Arrow int arrays through shuffles (≈3× smaller rows through
+sort/exchange/parquet), and the phrase scorers decode it
+(:func:`decode_positions`, or one :func:`varint_decode_np` over many rows'
+buffers at once). The pure-Python coders are the reference implementations
+the numpy decoder is property-tested against.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, List, Tuple
+from typing import Iterable, List
 
 import numpy as np
 
@@ -90,37 +91,3 @@ def varint_decode_np(buf: bytes) -> np.ndarray:
     out = np.zeros(len(term_idx), dtype=np.int64)
     np.add.at(out, gid, vals)
     return out
-
-
-def varint_encode_np_offsets(values) -> Tuple[bytes, np.ndarray]:
-    """Vectorized varint encode returning ``(buffer, byte_end_per_value)`` —
-    ``ends[i]`` is the exclusive byte offset of value ``i``'s encoding, so a
-    caller can slice the encoding of any value RANGE out of the one buffer.
-    Processes one 7-bit byte POSITION of every value per numpy pass (≤ 10
-    passes for 64-bit inputs); property-tested byte-identical to
-    ``varint_encode``."""
-    v = np.asarray(values, dtype=np.uint64)
-    if not len(v):
-        return b"", np.empty(0, dtype=np.int64)
-    nbytes = np.ones(len(v), dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while tmp.any():
-        nbytes += tmp > 0
-        tmp >>= np.uint64(7)
-    ends = np.cumsum(nbytes)
-    starts = ends - nbytes
-    out = np.empty(int(ends[-1]), dtype=np.uint8)
-    vv = v.copy()
-    for j in range(int(nbytes.max())):
-        mask = nbytes > j
-        idx = starts[mask] + j
-        b = (vv[mask] & np.uint64(0x7F)).astype(np.uint8)
-        cont = (nbytes[mask] > j + 1).astype(np.uint8)
-        out[idx] = b | (cont << 7)
-        vv >>= np.uint64(7)
-    return out.tobytes(), ends
-
-
-def varint_encode_np(values) -> bytes:
-    """Vectorized varint encode; see ``varint_encode_np_offsets``."""
-    return varint_encode_np_offsets(values)[0]

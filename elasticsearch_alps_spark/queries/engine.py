@@ -40,6 +40,9 @@ from elasticsearch_alps_spark.analysis.analyzers import (
 )
 from elasticsearch_alps_spark.config import ANALYZERS, AnalyzerConfig, QueryConfig
 from elasticsearch_alps_spark.indexing.builder import IndexPaths
+from elasticsearch_alps_spark.indexing.postings import (
+    decode_positions, varint_decode_np,
+)
 from elasticsearch_alps_spark.oracle import phrase_freq
 from elasticsearch_alps_spark.queries.highlight import format_snippets
 
@@ -55,6 +58,14 @@ def _sql_str(s: str) -> str:
 
 def _sql_in(terms: Sequence[str]) -> str:
     return ", ".join(_sql_str(t) for t in terms)
+
+
+def _doc_phrase_freq(terms, offsets, slop: int, term_blobs) -> float:
+    """One document's phrase frequency from its (term, positions blob)
+    pairs: decode each blob, then :func:`phrase_freq`. The body of both
+    the driver phrase loop and the distributed ``pfreq`` UDF."""
+    pos = {t: decode_positions(bytes(p)) for t, p in term_blobs}
+    return phrase_freq(terms, pos, slop, offsets)
 
 
 def _analyzer_from_name(name: str) -> AnalyzerConfig:
@@ -93,6 +104,15 @@ class SearchEngine:
                 self._term_stats[field] = self._term_stats[src]
             else:
                 self._postings[field] = spark.read.parquet(self.paths.postings(src))
+                ptype = self._postings[field].schema["positions"].dataType
+                if ptype.simpleString() != "binary":
+                    # the phrase scorers decode varint blobs only
+                    raise ValueError(
+                        f"field {src!r} of index {index_dir} stores positions "
+                        f"as {ptype.simpleString()}, not varint binary (an "
+                        "index written before every field shared one "
+                        "positions format). Rebuild the index with "
+                        "build_index.")
                 self._term_stats[field] = spark.read.parquet(self.paths.term_stats(src))
                 if cache:
                     self._postings[field] = self._postings[field].cache()
@@ -961,7 +981,6 @@ class SearchEngine:
         WITH positions): keep the docs holding every phrase term, then
         phrase_freq + BM25 — the same closed form the oracle and the
         distributed pfreq UDF use, so results are identical."""
-        from elasticsearch_alps_spark.indexing.postings import decode_positions
         counts = pdf.groupby("doc_id")["term"].nunique()
         sub = pdf[pdf["doc_id"].isin(counts.index[counts == len(set(terms))])]
         _, avgdl = self._fstat(field)
@@ -982,14 +1001,10 @@ class SearchEngine:
             return self._local_hits_df(doc_ids[order], scores[order])
         scored = []
         for doc_id, g in sub.groupby("doc_id"):
-            pos = {}
-            dl = 0.0
-            for t, p, d in zip(g["term"], g["positions"], g["dl"]):
-                pos[t] = (decode_positions(bytes(p))
-                          if isinstance(p, (bytes, bytearray)) else list(p))
-                dl = float(d)
-            freq = phrase_freq(terms, pos, slop, offsets)
+            freq = _doc_phrase_freq(terms, offsets, slop,
+                                    zip(g["term"], g["positions"]))
             if freq > 0.0:
+                dl = float(g["dl"].iat[0])  # identical across a doc's rows
                 tf = freq / (freq + k1 * (1.0 - b + b * dl / avgdl))
                 scored.append((int(doc_id), idf_sum * tf))
         self._set_total(count=len(scored))
@@ -1005,38 +1020,23 @@ class SearchEngine:
         freq > 0. Equivalent to phrase_freq(slop=0) per doc: positions are
         unique per (term, doc), so each occurrence's adjusted key set is
         unique and np.intersect1d(assume_unique) is the anchor count."""
-        from elasticsearch_alps_spark.indexing.postings import varint_decode_np
         empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
         if not len(sub):
             return empty
         row_doc = sub["doc_id"].to_numpy(dtype=np.int64)
         row_dl = sub["dl"].to_numpy(dtype=np.float64)
         pos_col = sub["positions"].tolist()
-        if pos_col and isinstance(pos_col[0], (bytes, bytearray)):
-            # one varint decode for ALL rows' blobs; per-row streams are
-            # [count, deltas...] so row boundaries derive from the counts
-            flat = varint_decode_np(b"".join(bytes(p) for p in pos_col))
-            starts = []
-            i = 0
-            for _ in range(len(pos_col)):
-                starts.append(i)
-                i += 1 + int(flat[i])
-            starts = np.asarray(starts, dtype=np.int64)
-            row_len = flat[starts]
-            deltas = np.delete(flat, starts)
-        else:  # raw int-array positions (already absolute, delta of cumsum)
-            row_len = np.fromiter((len(p) for p in pos_col), np.int64,
-                                  len(pos_col))
-            absolute = (np.concatenate([np.asarray(p, dtype=np.int64)
-                                        for p in pos_col])
-                        if row_len.sum() else np.empty(0, dtype=np.int64))
-            seg0 = np.concatenate(([0], np.cumsum(row_len)[:-1]))
-            deltas = np.empty_like(absolute)
-            if len(absolute):
-                deltas[0] = absolute[0]
-                deltas[1:] = absolute[1:] - absolute[:-1]
-                nz = seg0[row_len > 0]
-                deltas[nz] = absolute[nz]
+        # one varint decode for ALL rows' blobs; per-row streams are
+        # [count, deltas...] so row boundaries derive from the counts
+        flat = varint_decode_np(b"".join(bytes(p) for p in pos_col))
+        starts = []
+        i = 0
+        for _ in range(len(pos_col)):
+            starts.append(i)
+            i += 1 + int(flat[i])
+        starts = np.asarray(starts, dtype=np.int64)
+        row_len = flat[starts]
+        deltas = np.delete(flat, starts)
         # segmented cumsum → absolute positions per row
         seg_start = np.concatenate(([0], np.cumsum(row_len)[:-1]))
         cs = np.cumsum(deltas)
@@ -1119,17 +1119,9 @@ class SearchEngine:
 
         @F.pandas_udf("double")
         def pfreq(plists: pd.Series) -> pd.Series:
-            from elasticsearch_alps_spark.indexing.postings import decode_positions
-
-            def one(lst):
-                pos = {}
-                for e in lst:
-                    p = e["positions"]
-                    pos[e["term"]] = (decode_positions(bytes(p))
-                                      if isinstance(p, (bytes, bytearray))
-                                      else list(p))
-                return phrase_freq(qterms, pos, qslop, qoffsets)
-            return plists.map(one)
+            return plists.map(lambda lst: _doc_phrase_freq(
+                qterms, qoffsets, qslop,
+                ((e["term"], e["positions"]) for e in lst)))
 
         scored = (cand.withColumn("freq", pfreq("plists"))
                       .filter(F.col("freq") > 0.0)

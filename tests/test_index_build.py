@@ -60,10 +60,7 @@ def test_postings_positions_and_dl(spark, built_index, oracle_index):
     for term in sample_terms:
         for doc_id, positions in oracle_index.main.postings[term].items():
             r = by_key[(term, doc_id)]
-            got = r["positions"]
-            if isinstance(got, (bytes, bytearray)):  # Lucene profile: varint
-                got = decode_positions(bytes(got))
-            assert list(got) == sorted(positions)
+            assert decode_positions(bytes(r["positions"])) == sorted(positions)
             assert r["freq"] == len(positions)
             assert r["dl"] == quantize_length(oracle_index.main.doc_len[doc_id])
 
@@ -146,6 +143,111 @@ def test_resume_skips_built_stages(spark, corpus_df, tmp_path):
     assert p2.read_stats()["fields"]["main"]["n_docs"] > 0
 
 
+def _simple_url_build(spark, corpus_df, out, **kw):
+    """The gate index's config shape: simple profile for main (exact an
+    alias) plus a docs-only, norms-free url ExtraField."""
+    from elasticsearch_alps_spark.config import (
+        ExtraField, SIMPLE_ANALYZER, URL_ANALYZER,
+    )
+    docs = corpus_df.withColumn(
+        "url", F.concat(F.lit("https://host.example.com/"), F.col("path")))
+    cfg = IndexConfig(analyzer=SIMPLE_ANALYZER, exact_analyzer=SIMPLE_ANALYZER,
+                      extra_fields=(ExtraField("url", "url", URL_ANALYZER),),
+                      quantize_norms=False, build_packed=False)
+    return build_index(spark, docs, out, cfg, shards=2, **kw)
+
+
+@pytest.fixture(scope="module")
+def simple_url_index(spark, corpus_df, tmp_path_factory):
+    return _simple_url_build(
+        spark, corpus_df, str(tmp_path_factory.mktemp("simple") / "idx"))
+
+
+def test_simple_profile_writes_varint_positions(spark, simple_url_index):
+    """The simple profile goes through the same analysis pass as every
+    other analyzer: every field's positions column is a varint blob, and
+    the decoded main postings equal ``analyze_positions`` over the corpus
+    (the tokenizer the query side uses)."""
+    from collections import defaultdict
+
+    from elasticsearch_alps_spark.analysis.analyzers import analyze_positions
+    from elasticsearch_alps_spark.config import SIMPLE_ANALYZER
+    from elasticsearch_alps_spark.indexing.postings import decode_positions
+
+    p = simple_url_index
+    for field in ("main", "url"):
+        ptype = spark.read.parquet(p.postings(field)).schema["positions"]
+        assert ptype.dataType.simpleString() == "binary", field
+    # the stored (P1-filtered, P4-truncated) text is what the build analyzed
+    expected = set()
+    for r in spark.read.parquet(p.docs).select("doc_id", "content").collect():
+        stream = analyze_positions(r["content"], SIMPLE_ANALYZER)
+        by_term = defaultdict(list)
+        for t, pos in stream:
+            by_term[t].append(pos)
+        for t, ps in by_term.items():
+            expected.add((t, r["doc_id"], len(ps), tuple(ps), len(stream)))
+    got = {(r["term"], r["doc_id"], r["freq"],
+            tuple(decode_positions(bytes(r["positions"]))), r["dl"])
+           for r in spark.read.parquet(p.postings("main")).collect()}
+    assert got == expected
+    # docs-only field: one empty blob per (term, doc) pair
+    url = spark.read.parquet(p.postings("url"))
+    assert url.filter(F.length("positions") != 0).count() == 0
+
+
+def test_engine_refuses_int_array_positions(spark, simple_url_index,
+                                            tmp_path):
+    """An index whose postings store positions as array<int> (the layout
+    older builds wrote for the simple profile and docs-only fields) is
+    refused with a rebuild message rather than misread."""
+    import shutil
+
+    from elasticsearch_alps_spark.queries.engine import SearchEngine
+
+    old = str(tmp_path / "old_layout")
+    shutil.copytree(simple_url_index.root, old)
+    paths = type(simple_url_index)(old)
+    post = spark.read.parquet(simple_url_index.postings("url"))
+    (post.withColumn("positions",
+                     F.expr("CAST(array() AS array<int>)"))
+         .write.mode("overwrite").parquet(paths.postings("url")))
+    with pytest.raises(ValueError, match="Rebuild the index"):
+        SearchEngine(spark, old)
+    # the untouched copy loads
+    SearchEngine(spark, simple_url_index.root)
+
+
+def test_resume_rebuilds_field_written_before_varint_entry(spark, corpus_df,
+                                                           tmp_path):
+    """A lineage marker whose config key lacks the positions-format entry
+    (written by a build that stored int-array positions) does not resume:
+    ``resume=True`` rebuilds that field."""
+    import json
+
+    out = str(tmp_path / "idx_resume_old")
+    p1 = _simple_url_build(spark, corpus_df, out)
+    marker = os.path.join(p1.lineage_dir, "field_url.json")
+    with open(marker) as f:
+        rec = json.load(f)
+    key = json.loads(rec["config_key"])
+    del key["positions"]
+    rec["config_key"] = json.dumps(key, sort_keys=True)
+    rec["elapsed_sec"] = -1.0  # a rebuild writes a fresh record
+    with open(marker, "w") as f:
+        json.dump(rec, f)
+    main_mtime = os.path.getmtime(os.path.join(p1.lineage_dir,
+                                               "field_main.json"))
+    _simple_url_build(spark, corpus_df, out, resume=True)
+    with open(marker) as f:
+        rec2 = json.load(f)
+    assert rec2["elapsed_sec"] >= 0
+    assert json.loads(rec2["config_key"])["positions"] == "varint"
+    # the field whose marker carries the entry resumes untouched
+    assert os.path.getmtime(os.path.join(p1.lineage_dir,
+                                         "field_main.json")) == main_mtime
+
+
 def test_single_analyzer_build_matches_dual_main(spark, built_index,
                                                 corpus_df, tmp_path):
     """A single-analyzer build (no exact field) takes the same flat
@@ -226,7 +328,7 @@ def test_extra_url_field_build_and_query(spark, corpus_df, tmp_path):
     assert stats["url"]["analyzer"] == "url_email+lowercase"
     # docs-only storage: every posting has freq 1, empty positions, dl 1
     post = spark.read.parquet(paths.postings("url"))
-    bad = post.filter((F.col("freq") != 1) | (F.size("positions") != 0)
+    bad = post.filter((F.col("freq") != 1) | (F.length("positions") != 0)
                       | (F.col("dl") != 1)).count()
     assert bad == 0
     # field-parametric match with norms-free scoring: score per matched
